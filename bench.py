@@ -191,9 +191,9 @@ def exactly_once_secs(spark, trials: int = 3) -> float:
 
 
 def stateful_secs(spark, n_rows: int = 12000) -> tuple[float, int]:
-    """X5+X6 chain on run_stateful_pipeline's DEFAULT path (since r5: v2
-    transformWithStateInPandas coarse detect + RocksDB store -> stream-
-    stream join -> repair -> exactly-once sink) on a slice of the pipeline
+    """X5+X6 chain on run_stateful_pipeline's DEFAULT path (shard-keyed
+    transformWithStateInPandas detect + RocksDB store -> stream-stream
+    join -> repair -> exactly-once sink) on a slice of the pipeline
     input. Documents the cost of per-doc state vs the fused foreachBatch
     path (SURVEY §4.3: the fused pipeline is primary for this reason)."""
     import shutil as _sh
@@ -229,72 +229,13 @@ def stateful_secs(spark, n_rows: int = 12000) -> tuple[float, int]:
     return secs, n
 
 
-def stateful_detect_secs(spark, n_rows: int = 12000,
-                         trials: int = 2) -> dict:
-    """X5 detect STAGE alone (stateful op -> noop sink), fine-keyed v1 vs
-    coarse-keyed X5c (state_coarse.py) on the same file drop. Isolates the
-    per-group dispatch cost the coarse key removes — the full chain above
-    is join/repair/sink-dominated, so the stage measurement is where the
-    variant's advantage is visible. doc_id is rewritten unique-per-row:
-    group count == row count, the 10^12-docs-per-day shape the coarse key
-    exists for (at 750 docs/batch the two are within 10%; the gap grows
-    with docs-per-batch). Best-of-N per flavor, interleaved."""
-    import shutil as _sh
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from pdf_watermark_removal_otsu_inpaint_spark.streaming.pipeline import (
-        file_stream)
-    from pdf_watermark_removal_otsu_inpaint_spark.streaming.state import (
-        detect_stream_stateful)
-    from pdf_watermark_removal_otsu_inpaint_spark.streaming.state_coarse import (
-        detect_stream_stateful_coarse)
-    src = tempfile.mkdtemp(prefix="bench_stdetect_src_")
-    (spark.read.parquet(f"{BENCH_INPUT}/list").limit(n_rows)
-     .withColumn("doc_id", F.concat_ws("-", "doc_id",
-                                       F.col("seq_no").cast("string")))
-     .coalesce(8).write.mode("overwrite").parquet(src))
-    best = {"v1": float("inf"), "coarse": float("inf")}
-    for _ in range(trials):
-        for tag, fn in (("v1", detect_stream_stateful),
-                        ("coarse", detect_stream_stateful_coarse)):
-            iso = spark.newSession()
-            iso.conf.set("spark.sql.streaming.statefulOperator."
-                         "checkCorrectness.enabled", "false")
-            st = fn(file_stream(iso, src, max_files_per_trigger=8))
-            ck = tempfile.mkdtemp(prefix="bench_stdetect_ck_")
-            t0 = time.perf_counter()
-            q = (st.writeStream.format("noop")
-                 .option("checkpointLocation", ck)
-                 .trigger(availableNow=True).start())
-            finished = q.awaitTermination(600)
-            secs = time.perf_counter() - t0
-            if not finished:
-                # a hung trial must not publish ~600s as a best-of and must
-                # not keep running into the next interleaved trial
-                q.stop()
-            else:
-                best[tag] = min(best[tag], secs)
-            _sh.rmtree(ck, ignore_errors=True)
-    _sh.rmtree(src, ignore_errors=True)
-    if any(v == float("inf") for v in best.values()):
-        raise RuntimeError("stateful_detect_secs: every trial of a flavor "
-                           f"timed out ({best}) — refusing to publish")
-    return {"stateful_detect_v1_sec": round(best["v1"], 3),
-            "stateful_detect_v1_seqs_per_sec": round(n_rows / best["v1"], 1),
-            "stateful_detect_coarse_sec": round(best["coarse"], 3),
-            "stateful_detect_coarse_seqs_per_sec":
-                round(n_rows / best["coarse"], 1)}
-
-
 def stateful_chain_compare_secs(spark, n_rows: int = 12000,
                                 trials: int = 2) -> dict:
     """FULL X5+X6 chain (stateful detect -> stream-stream join -> repair ->
-    exactly-once sink), fine-keyed v1 vs coarse-keyed X5c, at ONE DOC PER
-    ROW (doc_id rewritten unique) — the 10^12-docs-per-day cardinality where
-    per-doc group dispatch dominates the detect stage. All rows land in one
-    micro-batch (>=5k doc-groups/batch). Interleaved best-of-N; a hung
+    exactly-once sink) at ONE DOC PER ROW (doc_id rewritten unique) — the
+    10^12-docs-per-day cardinality. All rows land in one micro-batch.
+    Legs: the default chain, the same chain with state partitions sized to
+    the batch, and the join-free chain. Interleaved best-of-N; a hung
     trial is excluded, never published."""
     import shutil as _sh
     import tempfile
@@ -303,29 +244,12 @@ def stateful_chain_compare_secs(spark, n_rows: int = 12000,
 
     from pdf_watermark_removal_otsu_inpaint_spark.streaming.pipeline import (
         file_stream, run_stateful_pipeline)
-    from pdf_watermark_removal_otsu_inpaint_spark.streaming.state import (
-        detect_stream_stateful)
-    from pdf_watermark_removal_otsu_inpaint_spark.streaming.state_coarse import (
-        detect_stream_stateful_coarse)
     src = tempfile.mkdtemp(prefix="bench_chaincmp_src_")
     (spark.read.parquet(f"{BENCH_INPUT}/list").limit(n_rows)
      .withColumn("doc_id", F.concat_ws("-", "doc_id",
                                        F.col("seq_no").cast("string")))
      .coalesce(8).write.mode("overwrite").parquet(src))
     legs = (
-        ("fine", dict(detect_fn=detect_stream_stateful,
-                      state_store="default", state_api="legacy")),
-        # round-4 default: legacy coarse + packed masks, default provider
-        ("coarse", dict(detect_fn=lambda s, p: detect_stream_stateful_coarse(
-            s, p, packed=True), state_store="default", state_api="legacy")),
-        # provider isolated: SAME legacy coarse chain on RocksDB — the
-        # disk-backed store's local overhead, nothing else changed
-        ("coarse_rocks",
-         dict(detect_fn=lambda s, p: detect_stream_stateful_coarse(
-             s, p, packed=True), state_store="rocksdb",
-             state_api="legacy")),
-        # the round-5 DEFAULT: v2 transformWithStateInPandas coarse
-        # processor, whole chain (detect + X6 join buffers) on RocksDB
         ("v2rocks", dict()),
         # the default chain SIZED: state partitions matched to per-batch
         # volume via session_conf (~3k rows/partition; every state
@@ -338,10 +262,7 @@ def stateful_chain_compare_secs(spark, n_rows: int = 12000,
          dict(session_conf={"spark.sql.shuffle.partitions":
                             str(max(4, n_rows // 3000))})),
         # join-free alternative: tokens pass through the state op, no X6
-        # (kept on the legacy/default combination for round-over-round
-        # ledger comparability with BENCH_r04)
-        ("joinfree", dict(join_free=True, state_store="default",
-                          state_api="legacy")),
+        ("joinfree", dict(join_free=True)),
     )
     best = {tag: float("inf") for tag, _ in legs}
     rows_out = {}
@@ -1289,8 +1210,6 @@ def main():
                 st_rows / st_sec, 1)
         else:
             result["stateful_pipeline_timeout"] = True
-        result.update(section("stateful_detect",
-                              lambda: stateful_detect_secs(spark)))
         result.update(section("chain_compare",
                               lambda: stateful_chain_compare_secs(spark)))
         result.update(section("scale_stress", lambda: scale_stress(spark)))
@@ -1343,11 +1262,6 @@ def _emit_compact(result) -> None:
               "pipeline_tokens_per_sec",
               "exactly_once_seqs_per_sec",
               "stateful_pipeline_seqs_per_sec",
-              "stateful_detect_v1_seqs_per_sec",
-              "stateful_detect_coarse_seqs_per_sec",
-              "chain_docrow_fine_seqs_per_sec",
-              "chain_docrow_coarse_seqs_per_sec",
-              "chain_docrow_coarse_rocks_seqs_per_sec",
               "chain_docrow_v2rocks_seqs_per_sec",
               "chain_docrow_v2rocks_sized_seqs_per_sec",
               "chain_docrow_joinfree_seqs_per_sec",
@@ -1369,9 +1283,7 @@ def _emit_compact(result) -> None:
     # the ledger — strictly worse than the truncation this guards against
     line = json.dumps(compact)
     for drop in ("north_seqs_per_sec", "hist_explode_sec",
-                 "hist_bincount_sec", "stateful_detect_v1_seqs_per_sec",
-                 "stateful_detect_coarse_seqs_per_sec",
-                 "chain_docrow_fine_seqs_per_sec"):
+                 "hist_bincount_sec"):
         if len(line) < 1800:
             break
         compact.pop(drop, None)
@@ -1566,7 +1478,7 @@ def _write_bench_md(result, scale, north, ceiling):
         "including the sink's parquet writes.",
         "",
         "Stateful X5+X6 chain on run_stateful_pipeline's DEFAULT path "
-        "(v2 transformWithStateInPandas coarse detect + RocksDB store -> "
+        "(shard-keyed transformWithStateInPandas detect + RocksDB store -> "
         "stream-stream join -> repair -> exactly-once sink): "
         f"{result.get('stateful_pipeline_seqs_per_sec', 'n/a')} seqs/s on "
         f"{result.get('stateful_pipeline_rows', 'n/a')} rows. The gap vs "
@@ -1574,40 +1486,12 @@ def _write_bench_md(result, scale, north, ceiling):
         "buffering through join state — which is why "
         "SURVEY §4.3 makes the fused foreachBatch pipeline the primary "
         "design and reserves per-key state for genuinely stateful "
-        "cross-batch carry-over. The coarse-keyed X5c variant "
-        "(streaming/state_coarse.py: state keyed by (source, "
-        "hash(doc_id)%64), per-doc carry-over in an in-state dict, "
-        "whole-shard vectorized kernel; output-equality-tested vs v1) "
-        "attacks exactly that dispatch — detect STAGE alone at one doc per "
-        "row (the 10^12-docs shape): "
-        f"{result.get('stateful_detect_v1_seqs_per_sec', 'n/a')} seqs/s "
-        "fine-keyed vs "
-        f"{result.get('stateful_detect_coarse_seqs_per_sec', 'n/a')} seqs/s "
-        "coarse-keyed on the same drop; the full chain is join+sink-bound "
-        "and the gap grows with docs-per-batch (within 10% at 750 docs). "
-        "run_stateful_pipeline's round-5 DEFAULT is the X5c shard-dict "
-        "processor on the v2 transformWithStateInPandas API with the whole "
-        "chain on the RocksDB state store (v1 and the legacy "
-        "applyInPandasWithState coarse op stay as parity references).",
+        "cross-batch carry-over.",
         "",
         "Full chain at ONE DOC PER ROW "
         f"({result.get('chain_docrow_rows', 'n/a')} doc-groups in a single "
-        "micro-batch — the 10^12-docs cardinality): fine-keyed "
-        f"{result.get('chain_docrow_fine_seqs_per_sec', 'n/a')} seqs/s vs "
-        "coarse-keyed packed "
-        f"{result.get('chain_docrow_coarse_seqs_per_sec', 'n/a')} seqs/s "
-        "end-to-end (detect -> stream-stream join -> repair -> exactly-once "
-        "sink), interleaved best-of-N. RocksDB-vs-default, provider "
-        "isolated (same legacy coarse chain, only the state store "
-        "changes): "
-        f"{result.get('chain_docrow_coarse_rocks_seqs_per_sec', 'n/a')} "
-        "seqs/s on RocksDB — the expected modest local slowdown buys "
-        "bounded-memory state: the default in-memory provider holds detect "
-        "dicts AND both X6 join buffers on-heap, which cannot hold at "
-        "10^12 rows, while RocksDB spills to local disk and checkpoints "
-        "incrementally. The round-5 DEFAULT chain (v2 "
-        "transformWithStateInPandas coarse processor + whole chain on "
-        "RocksDB, watermark chained via eventTimeColumnName): "
+        "micro-batch — the 10^12-docs cardinality), interleaved best-of-N: "
+        "the default chain (watermark chained via eventTimeColumnName) "
         f"{result.get('chain_docrow_v2rocks_seqs_per_sec', 'n/a')} seqs/s. "
         "The SAME default chain with state partitions SIZED to per-batch "
         "volume (session_conf shuffle.partitions at ~3k rows/partition "

@@ -17,7 +17,7 @@ from ..operators.repair import make_apply_mask_udf
 from ..params import DEFAULT_PARAMS, EngineParams
 from ..sources.synth import tok_expr
 from .sink import ExactlyOnceParquetSink
-from .state_v2 import ROCKSDB_CONF
+from .state import ROCKSDB_CONF, detect_stream_stateful
 
 SEQ_SCHEMA = ("doc_id string, tokens array<int>, n_tok int, source string, "
               "event_ts timestamp, seq_no long")
@@ -134,7 +134,7 @@ def join_masks_with_sequences(seq: DataFrame, masks: DataFrame,
     so join state is watermark-bounded (SURVEY §2.4 J1).
 
     `mask_watermark=None` means the mask stream ALREADY carries a
-    watermark (a v2 stateful detect op that re-declared event time via
+    watermark (the stateful detect op re-declared event time via
     eventTimeColumnName) — calling withWatermark again downstream of a
     stateful operator is watermark redefinition, which Spark rejects."""
     mask_col = "mask_bin" if "mask_bin" in masks.columns else "mask"
@@ -241,117 +241,67 @@ def run_repair_pipeline(seq: DataFrame, out_dir: str, checkpoint_dir: str,
 def run_stateful_pipeline(seq, out_dir: str, checkpoint_dir: str,
                           params: EngineParams = DEFAULT_PARAMS,
                           trigger_once: bool = True,
-                          detect_fn=None,
                           join_free: bool = False,
-                          state_api: str = "v2",
-                          state_store: str = "rocksdb",
-                          mask_watermark: str | None = "10 minutes",
                           session_conf: dict[str, str] | None = None):
     """X5+X6 composition: stateful detect stream joined back to the raw
     stream, repaired, committed exactly-once.
 
-    Spark's multiple-stateful-operator check is conservative for
-    FlatMapGroupsInPandasWithState (it cannot see that our state op emits
-    every row with its ORIGINAL event_ts, never older than the late-filter
-    watermark). With the mask-side join watermark set equal to the sequence
-    watermark, no emitted row can be late for the join, so the chain is
-    correct — but the check must be disabled WITHOUT unguarding unrelated
-    queries. The query therefore runs on its own `spark.newSession()`
-    (shared SparkContext, isolated SQL conf): the conf scope is real, not
-    temporal, and the caller's session is never mutated.
+    The detect stage is state.DetectProcessor (transformWithStateInPandas,
+    keyed by (source, doc shard)) emitting BIT-PACKED masks (the X6 wire
+    format: ~8x fewer mask bytes through the join shuffle AND the join's
+    state store). It re-declares event time on its output
+    (eventTimeColumnName) so the watermark chains into the join. The WHOLE
+    chain — detect state and X6 join buffers — runs on the RocksDB state
+    store with changelog checkpointing (state.ROCKSDB_CONF): at 10^12 rows
+    the join holds both streams until the watermark closes them, which only
+    a disk-backed, incrementally checkpointed store can hold, and each
+    commit uploads the batch's changelog instead of a full snapshot.
+
+    The query runs on its own `spark.newSession()` (shared SparkContext,
+    isolated SQL conf), so the state-store conf and `session_conf` apply to
+    this query alone and the caller's session is never mutated. Spark's
+    multiple-stateful-operator correctness check stays on: because the
+    detect op re-declares event time, the chain passes it.
 
     `seq` is a stream-factory `Callable[[SparkSession], DataFrame]` so the
-    stream is BUILT on the isolated session (a DataFrame is rejected: its
-    plan is bound to the caller's session and cannot be migrated).
+    stream is BUILT on the isolated session (a DataFrame is rejected with a
+    TypeError: its plan is bound to the caller's session and cannot be
+    migrated).
 
-    DEFAULTS (round 5): the detect stage is the coarse-keyed X5c shard-dict
-    processor on the v2 state API (`state_api="v2"`,
-    state_v2.CoarseDetectProcessor via transformWithStateInPandas — the
-    forward-path API; applyInPandasWithState is legacy) emitting BIT-PACKED
-    masks (the X6 wire format: ~8x fewer mask bytes through the join
-    shuffle AND the join's state store), and the WHOLE chain — detect
-    state, X6 join buffers — runs on the RocksDB state store provider
-    (`state_store="rocksdb"`): at 10^12 rows the join holds both streams
-    until the watermark closes them, which only a disk-backed,
-    incrementally-checkpointed store can hold; the default in-memory
-    provider is the remaining scale-killer the RocksDB default removes.
-    RocksDB runs with CHANGELOG CHECKPOINTING on (state_v2.ROCKSDB_CONF):
-    each commit uploads the batch's changelog, snapshots happen in the
-    background — per-batch full-snapshot upload is the checkpoint
-    bottleneck at that key count, not the writes.
-    `state_api="legacy"` selects the applyInPandasWithState coarse op
-    (parity reference); `state_store="default"` keeps Spark's default
-    provider (legacy API only — v2 requires RocksDB).
-
-    CHECKPOINT COMPATIBILITY — read before upgrading a running job: the
-    stateful-operator checkpoint encodes grouping keys, state schema, AND
-    the store provider. Round 4 changed the default detect stage from
-    fine-keyed unpacked v1 (keys (source, doc_id), state wm_token/rows_seen)
-    to coarse-keyed packed X5c (keys (source, _shard), state blob binary);
-    round 5 changes the default API (applyInPandasWithState ->
-    transformWithStateInPandas) and provider (default -> RocksDB). Each of
-    these makes PRE-EXISTING checkpoints unreadable or, worse, silently
-    wrong. Resuming an old checkpoint under a new default is NOT supported:
-    use a FRESH checkpoint_dir (the exactly-once sink makes the replay
-    idempotent), or pin the old behavior explicitly
-    (state_api="legacy", state_store="default",
-    detect_fn=state.detect_stream_stateful for the round-3 default).
-
-    `detect_fn` overrides the stateful detect stage entirely (e.g.
-    state.detect_stream_stateful for the doc-keyed unpacked v1, kept as
-    the parity reference — output-equality-tested in
-    tests/test_streaming.py); it composes with `state_store` but ignores
-    `state_api`. If the override is itself a v2 op that re-declares event
-    time (eventTimeColumnName), ALSO pass `mask_watermark=None` — the
-    default re-applies withWatermark on the mask side for legacy detect
-    stages, which Spark rejects as redefinition past a v2 stateful op.
+    CHECKPOINT COMPATIBILITY: the detect state is typed arrays (doc
+    array<string>, tok array<int>, ts array<long>, tmr long). Checkpoints
+    written while it was a single binary blob (`blob binary`) cannot be
+    resumed: on Spark 4.1.2 the query fails before it runs a batch, with
+    StreamingQueryException [STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE],
+    rather than misreading the old state. Use a FRESH checkpoint_dir — the
+    exactly-once sink makes the replay idempotent.
 
     `join_free=True` swaps the X6 stream-stream join for a token
-    PASS-THROUGH: the coarse stateful detect op emits each row's tokens
-    alongside its packed mask, and the K2 repair runs directly on its
-    output — same committed rows (equality-tested), but neither stream is
-    buffered in join state (the interval join holds BOTH sides until the
-    watermark closes them, which at 10^12 rows is the chain's largest
-    state). The joined composition stays the default because the
-    north-star names the stream-stream join explicitly; join-free is the
-    measured alternative when detection and repair share one stream.
+    PASS-THROUGH: the detect op emits each row's tokens alongside its
+    packed mask, and the K2 repair runs directly on its output — same
+    committed rows (equality-tested), but neither stream is buffered in
+    join state (the interval join holds BOTH sides until the watermark
+    closes them, which at 10^12 rows is the chain's largest state). The
+    joined composition stays the default because the north-star names the
+    stream-stream join explicitly.
 
-    `session_conf` is applied to the isolated session LAST (after the
-    RocksDB provider conf), so callers can size the query without touching
-    global state. The one that matters operationally is
-    `spark.sql.shuffle.partitions`, which for a stateful query is the
-    STATE partition count — pinned into the checkpoint at first run and
-    not changeable on resume. Size it to expected per-micro-batch volume:
-    every state partition pays a fixed store open/commit cost PER
-    MICRO-BATCH (RocksDB flush + changelog upload; the X6 join alone keeps
-    4 stores per partition), so thousands of near-empty partitions turn
-    the commit path into the whole batch (measured locally: 12k-row
-    batches run ~1.5-2x faster at 4-16 partitions than at 32). At 10^12
-    rows the same arithmetic points the other way — raise it until a
-    partition's per-batch slice fits executor memory. Overriding the
-    provider class here would silently fight the `state_store` dial —
-    don't; use the dial.
-
-    NOTE (round-3 API break, recorded): `seq` used to accept a DataFrame;
-    it now REQUIRES a stream factory so the query can run on the isolated
-    session. External callers following the old docstring must wrap their
-    stream construction in a lambda."""
+    `session_conf` is applied to the isolated session after ROCKSDB_CONF,
+    so callers can size the query without touching global state; the
+    RocksDB provider and changelog keys themselves are reserved (ValueError).
+    The key that matters operationally is `spark.sql.shuffle.partitions`,
+    which for a stateful query is the STATE partition count — pinned into
+    the checkpoint at first run and not changeable on resume. Size it to
+    expected per-micro-batch volume: every state partition pays a fixed
+    store open/commit cost PER MICRO-BATCH (RocksDB flush + changelog
+    upload; the X6 join alone keeps 4 stores per partition), so thousands
+    of near-empty partitions turn the commit path into the whole batch
+    (measured locally: 12k-row batches run ~1.5-2x faster at 4-16
+    partitions than at 32). At 10^12 rows the same arithmetic points the
+    other way — raise it until a partition's per-batch slice fits executor
+    memory. Left unset, it is derived from the stream's parquet footers
+    (_auto_state_partitions)."""
     from pyspark.sql import SparkSession
 
-    if state_api not in ("v2", "legacy"):
-        raise ValueError(f"state_api must be 'v2' or 'legacy', got "
-                         f"{state_api!r}")
-    if state_store not in ("rocksdb", "default"):
-        raise ValueError(f"state_store must be 'rocksdb' or 'default', "
-                         f"got {state_store!r}")
-    if state_api == "v2" and state_store == "default" and detect_fn is None:
-        # only guard when the v2 default path would actually run: an
-        # explicit detect_fn override ignores state_api (docstring
-        # contract), so e.g. (detect_fn=<legacy op>, state_store='default')
-        # is the blessed pre-round-5 combination, not an error
-        raise ValueError("the v2 state API (transformWithStateInPandas) "
-                         "requires the RocksDB state store provider; use "
-                         "state_store='rocksdb' or state_api='legacy'")
     if callable(seq) and not isinstance(seq, DataFrame):
         factory = seq
         base = (SparkSession.getActiveSession()
@@ -362,24 +312,14 @@ def run_stateful_pipeline(seq, out_dir: str, checkpoint_dir: str,
             "(lambda spark: readStream...) so the query can run on an "
             "isolated session; pass e.g. "
             "lambda s: file_stream(s, path)")
-    iso = base.newSession()
-    key = "spark.sql.streaming.statefulOperator.checkCorrectness.enabled"
-    iso.conf.set(key, "false")
-    if state_store == "rocksdb":
-        # provider + changelog checkpointing (incremental per-batch commit;
-        # see state_v2.ROCKSDB_CONF for the 10^12-key rationale)
-        for k, v in ROCKSDB_CONF.items():
-            iso.conf.set(k, v)
-    # the state-store backend is chosen by the `state_store` dial ONLY:
-    # session_conf is applied after ROCKSDB_CONF, so a provider/changelog
-    # key smuggled through it would silently override the dial — enforce
-    # the contract instead of relying on the docstring
     _reserved = set(ROCKSDB_CONF) & set(session_conf or {})
     if _reserved:
         raise ValueError(
             "session_conf may not set state-store provider/changelog keys "
-            f"({sorted(_reserved)}); use the state_store dial instead")
-    for k, v in (session_conf or {}).items():
+            f"({sorted(_reserved)}); the stateful chain always runs on "
+            "RocksDB with changelog checkpointing")
+    iso = base.newSession()
+    for k, v in {**ROCKSDB_CONF, **(session_conf or {})}.items():
         iso.conf.set(k, v)
     stream = factory(iso)
     # Auto-size state partitions to per-batch volume when the caller didn't
@@ -394,42 +334,15 @@ def run_stateful_pipeline(seq, out_dir: str, checkpoint_dir: str,
             iso.conf.set(_spk, str(_auto))
 
     if join_free:
-        if detect_fn is not None:
-            raise ValueError("join_free uses its own pass-through detect "
-                             "stage; detect_fn cannot be overridden")
-        if state_api == "v2":
-            from .state_v2 import detect_stream_stateful_coarse_v2
-            enriched = detect_stream_stateful_coarse_v2(
-                stream, params, packed=True, with_tokens=True)
-        else:
-            from .state_coarse import detect_stream_stateful_coarse
-            enriched = detect_stream_stateful_coarse(stream, params,
-                                                     packed=True,
-                                                     with_tokens=True)
-        repaired = repair_joined(enriched, params)
+        repaired = repair_joined(
+            detect_stream_stateful(stream, params, packed=True,
+                                   with_tokens=True), params)
     else:
-        mask_wm = mask_watermark
-        if detect_fn is None:
-            if state_api == "v2":
-                from .state_v2 import detect_stream_stateful_coarse_v2
-
-                def detect_fn(s, p):
-                    # re-declare event time on the op's OUTPUT so the
-                    # watermark propagates into the X6 join (Spark 4
-                    # stateful-chaining; a downstream withWatermark would
-                    # be rejected as redefinition)
-                    return detect_stream_stateful_coarse_v2(
-                        s, p, packed=True, event_time_col="event_ts")
-                mask_wm = None
-            else:
-                from .state_coarse import detect_stream_stateful_coarse
-
-                def detect_fn(s, p):
-                    return detect_stream_stateful_coarse(s, p, packed=True)
-        masks = detect_fn(stream, params)
+        masks = detect_stream_stateful(stream, params, packed=True,
+                                       event_time_col="event_ts")
         joined = join_masks_with_sequences(stream, masks,
                                            seq_watermark="10 minutes",
-                                           mask_watermark=mask_wm)
+                                           mask_watermark=None)
         repaired = repair_joined(joined, params)
     sink = ExactlyOnceParquetSink(out_dir)
     writer = (repaired.writeStream.foreachBatch(sink)

@@ -220,3 +220,19 @@ def test_aqe_splits_hot_doc_partition(spark):
     finally:
         for k, v in prev.items():
             spark.conf.set(k, v)
+
+
+def test_stateful_code_keeps_no_pickled_state():
+    """Checkpointed state stays typed: nothing under streaming/ pickles,
+    and no operator in the package is built on applyInPandasWithState (the
+    one stateful operator uses transformWithStateInPandas)."""
+    import pathlib
+    import re
+
+    import pdf_watermark_removal_otsu_inpaint_spark as pkg
+    root = pathlib.Path(pkg.__file__).parent
+    for path in sorted(root.rglob("*.py")):
+        src = path.read_text()
+        if path.parent.name == "streaming":
+            assert not re.search(r"import pickle|\bpickle\.", src), path
+        assert "applyInPandasWithState" not in src, path

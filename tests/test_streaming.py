@@ -328,13 +328,9 @@ def test_stateful_pipeline_resumes_from_checkpoint(spark, tmp_path):
               df.where(F.col("seq_no") % 2 == 1)]
     write_batches(spark, halves, seq_dir)
 
-    ck_key = "spark.sql.streaming.statefulOperator.checkCorrectness.enabled"
     q = run_stateful_pipeline(lambda s: file_stream(s, seq_dir),
                               str(tmp_path / "out_a"), str(tmp_path / "ck_a"))
     q.awaitTermination(180)
-    # the conf disable is scoped to the query's own newSession(): the
-    # shared session's stateful-correctness guard is never mutated
-    assert spark.conf.get(ck_key, "true") == "true"
     base = {(r.doc_id, r.seq_no): r.tokens
             for r in ExactlyOnceParquetSink(str(tmp_path / "out_a"))
             .read_committed(spark).collect()}
@@ -343,24 +339,15 @@ def test_stateful_pipeline_resumes_from_checkpoint(spark, tmp_path):
     out_b = str(tmp_path / "out_b")
     ck_b = str(tmp_path / "ck_b")
     sink_b = ExactlyOnceParquetSink(out_b)
-    from pdf_watermark_removal_otsu_inpaint_spark.operators.repair import (
-        make_apply_mask_udf)
-    from pdf_watermark_removal_otsu_inpaint_spark.streaming.pipeline import (
-        join_masks_with_sequences, repair_joined)
-    from pdf_watermark_removal_otsu_inpaint_spark.streaming.state import (
-        detect_stream_stateful)
-
     iso = spark.newSession()
-    iso.conf.set(
-        "spark.sql.streaming.statefulOperator.checkCorrectness.enabled",
-        "false")
 
     def build_query(crash_on):
         seq = file_stream(iso, seq_dir, max_files_per_trigger=1)
-        masks = detect_stream_stateful(seq)
+        masks = detect_stream_stateful(seq, packed=True,
+                                       event_time_col="event_ts")
         joined = join_masks_with_sequences(seq, masks,
                                            seq_watermark="10 minutes",
-                                           mask_watermark="10 minutes")
+                                           mask_watermark=None)
         repaired = repair_joined(joined)
 
         def process(batch_df, batch_id):
@@ -402,161 +389,11 @@ def test_observe_metrics_surface_in_progress(spark, tmp_path):
     assert rows_in == 20
 
 
-def _tws_available(spark, tmp_path) -> bool:
-    """transformWithStateInPandas needs its driver-side python worker, which
-    requires google.protobuf at runtime >= Spark's StateMessage_pb2 gencode
-    (6.33 for Spark 4.1). session._ensure_protobuf_shim provides it in this
-    image; elsewhere a missing/old protobuf crashes the worker with XXKST
-    (STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE: ImportError
-    google.protobuf.descriptor) before user code runs — probe once and skip,
-    like the Iceberg jar gate."""
-    import glob
-    import pandas as _pd
-
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
-    class P(StatefulProcessor):
-        def init(self, handle):
-            self.s = handle.getValueState(
-                "c", StructType([StructField("c", IntegerType(), True)]))
-
-        def handleInputRows(self, key, rows, timerValues):
-            c = self.s.get()[0] if self.s.exists() else 0
-            for pdf in rows:
-                c += len(pdf)
-            self.s.update((c,))
-            yield _pd.DataFrame({"k": [key[0]], "c": [c]})
-
-        def close(self):
-            pass
-
-    d = str(tmp_path / "tws_probe")
-    os.makedirs(d, exist_ok=True)
-    df = spark.createDataFrame([("a", 1)], "k string, v int")
-    sub = d + "/_s"
-    df.coalesce(1).write.mode("overwrite").parquet(sub)
-    os.replace(glob.glob(sub + "/part-*.parquet")[0], d + "/b0.parquet")
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider")
-    try:
-        q = (spark.readStream.schema("k string, v int").parquet(d)
-             .groupBy("k")
-             .transformWithStateInPandas(P(), outputStructType="k string, c int",
-                                         outputMode="append", timeMode="none")
-             .writeStream.format("memory").queryName("tws_probe")
-             .outputMode("append").start())
-        q.processAllAvailable()
-        q.stop()
-        return True
-    except Exception:
-        # the driver-side python worker init is OCCASIONALLY flaky in this
-        # image even when protobuf is fine (observed: same probe passes on
-        # retry within the same session) — one retry before skipping, so a
-        # transient crash doesn't silently drop the v2 parity coverage
-        try:
-            q = (spark.readStream.schema("k string, v int").parquet(d)
-                 .groupBy("k")
-                 .transformWithStateInPandas(
-                     P(), outputStructType="k string, c int",
-                     outputMode="append", timeMode="none")
-                 .writeStream.format("memory").queryName("tws_probe2")
-                 .outputMode("append").start())
-            q.processAllAvailable()
-            q.stop()
-            return True
-        except Exception:
-            return False
-
-
-def test_stateful_detect_v2_matches_v1(spark, tmp_path):
-    """X5 on the Spark 4 state API v2 (transformWithStateInPandas +
-    RocksDB state store) == the applyInPandasWithState implementation."""
-    import datetime as dt
-
-    from pdf_watermark_removal_otsu_inpaint_spark.streaming.state_v2 import (
-        detect_stream_stateful_v2)
-    if not _tws_available(spark, tmp_path):
-        pytest.skip("transformWithStateInPandas driver worker crashes in "
-                    "this image (XXKST on a minimal example)")
-    d = str(tmp_path / "seq")
-    n = 2000
-    detectable = np.full(n, 255, dtype=np.int32)
-    detectable[100:460] = 200
-    ambiguous = np.full(n, 255, dtype=np.int32)
-    ambiguous[100:700] = 200
-    rows1 = [("docA", detectable.tolist(), n, "web",
-              dt.datetime(2026, 1, 1, 0, 0, 10), 0)]
-    rows2 = [("docA", ambiguous.tolist(), n, "web",
-              dt.datetime(2026, 1, 1, 0, 0, 20), 1)]
-    write_batches(spark, [spark.createDataFrame(rows1, SEQ_SCHEMA),
-                          spark.createDataFrame(rows2, SEQ_SCHEMA)], d)
-    stream = file_stream(spark, d, max_files_per_trigger=1)
-    q = (detect_stream_stateful_v2(stream)
-         .writeStream.outputMode("append")
-         .format("memory").queryName("stateful_v2").start())
-    q.processAllAvailable()
-    q.stop()
-    out = {r.seq_no: r for r in spark.sql("SELECT * FROM stateful_v2").collect()}
-    assert out[0].wm_token == 200 and not out[0].from_state
-    assert out[1].wm_token == 200 and out[1].from_state
-    exp_mask, _ = rk.detect_refine(ambiguous, 200)
-    assert out[1].mask == exp_mask.tolist()
-
-
-def test_stateful_v2_state_expires_after_watermark(spark, tmp_path):
-    """X5 v2 TTL: a doc silent past the 600 s horizon has its cached wm
-    token DROPPED (timer-cleared state), so its next row self-detects from
-    scratch instead of inheriting — bounded state at 10^12 docs."""
-    import datetime as dt
-
-    from pdf_watermark_removal_otsu_inpaint_spark.streaming.state_v2 import (
-        detect_stream_stateful_v2)
-    if not _tws_available(spark, tmp_path):
-        pytest.skip("transformWithStateInPandas driver worker crashes in "
-                    "this image (XXKST on a minimal example)")
-    d = str(tmp_path / "seq")
-    n = 2000
-    detectable = np.full(n, 255, dtype=np.int32)
-    detectable[100:460] = 200
-    ambiguous = np.full(n, 255, dtype=np.int32)  # not self-detectable
-    ambiguous[100:700] = 200
-    t0 = dt.datetime(2026, 1, 1, 0, 0, 10)
-    late = dt.datetime(2026, 1, 1, 2, 0, 0)  # ~2 h later: wm >> t0 + 600 s
-    batches = [
-        [("docA", detectable.tolist(), n, "web", t0, 0)],
-        # another key advances the watermark far past docA's TTL timer
-        [("docB", detectable.tolist(), n, "web", late, 0)],
-        # one more batch so docA's expired timer fires before it returns
-        [("docC", detectable.tolist(), n, "web",
-          late + dt.timedelta(seconds=10), 0)],
-        [("docA", ambiguous.tolist(), n, "web",
-          late + dt.timedelta(seconds=20), 1)],
-    ]
-    write_batches(spark, [spark.createDataFrame(b, SEQ_SCHEMA)
-                          for b in batches], d)
-    stream = file_stream(spark, d, max_files_per_trigger=1)
-    q = (detect_stream_stateful_v2(stream)
-         .writeStream.outputMode("append")
-         .format("memory").queryName("stateful_v2_ttl").start())
-    q.processAllAvailable()
-    q.stop()
-    out = {(r.doc_id, r.seq_no): r
-           for r in spark.sql("SELECT * FROM stateful_v2_ttl").collect()}
-    assert out[("docA", 0)].wm_token == 200
-    # after expiry: fresh self-detection, NOT inherited state; the ambiguous
-    # pattern is not self-detectable, so wm_token must be null
-    row = out[("docA", 1)]
-    assert not row.from_state and row.wm_token is None
-
-
 def test_default_chain_resumes_across_restart_rocksdb(spark, tmp_path):
-    """Round-5 default chain (v2 coarse detect + X6 join, RocksDB store
-    with CHANGELOG CHECKPOINTING): the query runs to completion on the
-    first file drop, stops, a second drop arrives, and a new query on the
-    SAME checkpoint processes exactly the new rows — with the detect
+    """Default chain (shard-keyed detect + X6 join, RocksDB store with
+    CHANGELOG CHECKPOINTING): the query runs to completion on the first
+    file drop, stops, a second drop arrives, and a new query on the SAME
+    checkpoint processes exactly the new rows — with the typed detect
     state RECOVERED from the RocksDB changelog across the restart.
 
     The fixture discriminates recovery from re-detection: the run-2 row is
@@ -583,7 +420,7 @@ def test_default_chain_resumes_across_restart_rocksdb(spark, tmp_path):
     q1 = run_stateful_pipeline(
         lambda s: file_stream(s, d, max_files_per_trigger=1), out, ck)
     q1.awaitTermination(180)
-    # every stateful operator in the chain (v2 detect AND the X6 join)
+    # every stateful operator in the chain (detect AND the X6 join)
     # reports RocksDB custom metrics in its progress — the provider is
     # engaged per-operator, not just configured on the session
     ops = [op for p in q1.recentProgress
@@ -791,106 +628,13 @@ def _wm_fill(n, token, lo, hi):
     return a
 
 
-def test_stateful_coarse_matches_v1(spark, tmp_path):
-    """X5c: the source-keyed coarse-state detect stream produces the SAME
-    output as the (source, doc_id)-keyed v1 — multi-source, multi-doc,
-    within-batch prefix rule, and cross-batch carry-over all exercised."""
-    import datetime as dt
-
-    from pdf_watermark_removal_otsu_inpaint_spark.streaming.state_coarse import (
-        detect_stream_stateful_coarse)
-    n = 2000
-    det_a = _wm_fill(n, 200, 100, 460)     # 18% -> self-detects 200
-    det_b = _wm_fill(n, 205, 100, 440)     # self-detects 205
-    amb_a = _wm_fill(n, 200, 100, 700)     # 30% -> per-row detect fails
-    amb_b = _wm_fill(n, 205, 100, 700)
-    t0 = dt.datetime(2026, 1, 1, 0, 0, 10)
-
-    def r(doc, toks, src, secs, seq):
-        return (doc, toks.tolist(), n, src,
-                t0 + dt.timedelta(seconds=secs), seq)
-
-    batches = [
-        # batch 0: two sources, docA on both (coarse dicts must not collide)
-        [r("docA", det_a, "web", 0, 0), r("docB", det_b, "web", 1, 0),
-         r("docA", det_b, "pdf", 2, 0)],
-        # batch 1: carried tokens + a doc whose detection happens mid-batch
-        [r("docA", amb_a, "web", 10, 1), r("docB", amb_b, "web", 11, 1),
-         r("docA", amb_b, "pdf", 12, 1),
-         r("docC", det_a, "web", 13, 0), r("docC", amb_a, "web", 14, 1),
-         r("docC", amb_a, "web", 15, 2)],
-    ]
-    dirs = []
-    for tag in ("v1", "xc"):
-        d = str(tmp_path / f"seq_{tag}")
-        write_batches(spark, [spark.createDataFrame(b, SEQ_SCHEMA)
-                              for b in batches], d)
-        dirs.append(d)
-
-    outs = []
-    for tag, d, fn in (("v1", dirs[0], detect_stream_stateful),
-                       ("xc", dirs[1], detect_stream_stateful_coarse)):
-        q = (fn(file_stream(spark, d, max_files_per_trigger=1))
-             .writeStream.outputMode("append")
-             .format("memory").queryName(f"st_{tag}").start())
-        q.processAllAvailable()
-        q.stop()
-        outs.append({(r.source, r.doc_id, r.seq_no):
-                     (r.wm_token, r.from_state, round(r.coverage, 9), r.mask)
-                     for r in spark.sql(f"SELECT * FROM st_{tag}").collect()})
-    v1, xc = outs
-    assert len(v1) == sum(len(b) for b in batches)
-    assert v1 == xc
-    # sanity on the semantics themselves, not just mutual agreement
-    assert v1[("web", "docA", 1)][0] == 200 and v1[("web", "docA", 1)][1]
-    assert v1[("pdf", "docA", 1)][0] == 205 and v1[("pdf", "docA", 1)][1]
-    assert v1[("web", "docC", 0)][0] == 200 and not v1[("web", "docC", 0)][1]
-    assert v1[("web", "docC", 2)][0] == 200 and v1[("web", "docC", 2)][1]
-
-
 def test_stateful_pipeline_dial_guards(spark, tmp_path):
-    """The state_api/state_store dials reject unsupported combinations
-    loudly (v2 requires RocksDB; typos must not silently pick a default),
-    and legacy+default — the pre-round-5 behavior — still runs and matches
-    the v2+RocksDB default's committed rows."""
-    import pytest as _pt
-
+    """run_stateful_pipeline rejects a DataFrame: the stream must be built
+    on the query's isolated session, so it takes a stream factory."""
     from pdf_watermark_removal_otsu_inpaint_spark.streaming.pipeline import (
         run_stateful_pipeline)
-    factory = lambda s: file_stream(s, str(tmp_path / "nowhere"))  # noqa: E731
-    with _pt.raises(ValueError, match="requires the RocksDB"):
-        run_stateful_pipeline(factory, "o", "c", state_api="v2",
-                              state_store="default")
-    with _pt.raises(ValueError, match="state_api"):
-        run_stateful_pipeline(factory, "o", "c", state_api="v3")
-    with _pt.raises(ValueError, match="state_store"):
-        run_stateful_pipeline(factory, "o", "c", state_store="hdfs")
-    # a detect_fn override IGNORES state_api (docstring contract), so the
-    # v2+default guard must NOT fire for the blessed pre-round-5
-    # combination (detect_fn=<legacy op>, state_store='default') — the
-    # nowhere-path factory fails later, with a non-dial error
-    with _pt.raises(Exception) as ei:
-        run_stateful_pipeline(factory, "o", "c",
-                              detect_fn=lambda s, p: s,
-                              state_store="default")
-    assert "RocksDB" not in str(ei.value)
-
-    seq_dir = str(tmp_path / "seq")
-    df = sequences_df(spark, 24, seed=16)
-    write_batches(spark, [df], seq_dir)
-    outs = {}
-    for tag, kw in (("v2rocks", {}),   # the default
-                    ("legacy", dict(state_api="legacy",
-                                    state_store="default"))):
-        q = run_stateful_pipeline(
-            lambda s: file_stream(s, seq_dir),
-            str(tmp_path / f"out_{tag}"), str(tmp_path / f"ck_{tag}"), **kw)
-        q.awaitTermination(180)
-        outs[tag] = {(r.doc_id, r.seq_no): (r.tokens, r.wm_token)
-                     for r in ExactlyOnceParquetSink(
-                         str(tmp_path / f"out_{tag}"))
-                     .read_committed(spark).collect()}
-    assert outs["v2rocks"] == outs["legacy"] and len(outs["v2rocks"]) == 24
+    with pytest.raises(TypeError, match="stream factory"):
+        run_stateful_pipeline(spark.range(1), "o", "c")
 
 
 def test_session_conf_sizes_state_partitions(spark, tmp_path):
@@ -929,20 +673,17 @@ def test_session_conf_sizes_state_partitions(spark, tmp_path):
 
 
 def test_session_conf_rejects_state_store_keys(spark, tmp_path):
-    """The state-store backend is chosen by the `state_store` dial only:
+    """The chain always runs on RocksDB with changelog checkpointing:
     session_conf is applied after ROCKSDB_CONF, so a provider or changelog
-    key passed through it would silently override the dial. The contract
-    is machine-enforced — such keys raise instead of being applied."""
-    import pytest
-
+    key passed through it would silently replace that store. Such keys
+    raise instead of being applied."""
     from pdf_watermark_removal_otsu_inpaint_spark.streaming.pipeline import (
         run_stateful_pipeline)
-    from pdf_watermark_removal_otsu_inpaint_spark.streaming.state_v2 import (
+    from pdf_watermark_removal_otsu_inpaint_spark.streaming.state import (
         ROCKSDB_CONF)
     seq_dir = str(tmp_path / "seq")
-    write_batches(spark, [sequences_df(spark, 4, seed=16)], seq_dir)
     for key in ROCKSDB_CONF:
-        with pytest.raises(ValueError, match="state_store dial"):
+        with pytest.raises(ValueError, match="always runs on RocksDB"):
             run_stateful_pipeline(
                 lambda s: file_stream(s, seq_dir),
                 str(tmp_path / "out"), str(tmp_path / "ck"),
@@ -980,17 +721,10 @@ def test_join_free_chain_has_single_stateful_operator(spark, tmp_path):
     is that neither stream buffers in join state."""
     from pdf_watermark_removal_otsu_inpaint_spark.streaming.pipeline import (
         repair_joined)
-    from pdf_watermark_removal_otsu_inpaint_spark.streaming.state_coarse import (
-        detect_stream_stateful_coarse)
     d = str(tmp_path / "seq")
     write_batches(spark, [sequences_df(spark, 4, seed=5)], d)
-    iso = spark.newSession()
-    iso.conf.set(
-        "spark.sql.streaming.statefulOperator.checkCorrectness.enabled",
-        "false")
-    stream = file_stream(iso, d)
-    enriched = detect_stream_stateful_coarse(stream, packed=True,
-                                             with_tokens=True)
+    stream = file_stream(spark.newSession(), d)
+    enriched = detect_stream_stateful(stream, packed=True, with_tokens=True)
     out = repair_joined(enriched)
     q = (out.writeStream.format("noop")
          .option("checkpointLocation", str(tmp_path / "ck"))
@@ -1005,13 +739,10 @@ def test_join_free_chain_has_single_stateful_operator(spark, tmp_path):
 
 
 def test_stateful_detect_packed_masks_match_unpacked(spark, tmp_path):
-    """X5/X5c packed output (mask_bin, the X6 wire format): unpacking the
-    bit-packed masks bit-for-bit reproduces the array<boolean> output, for
-    BOTH keyings, across carry-over batches."""
+    """X5 packed output (mask_bin, the X6 wire format): unpacking the
+    bit-packed masks bit-for-bit reproduces the array<boolean> output,
+    across carry-over batches."""
     import datetime as dt
-
-    from pdf_watermark_removal_otsu_inpaint_spark.streaming.state_coarse import (
-        detect_stream_stateful_coarse)
     n = 2000
     det = _wm_fill(n, 200, 100, 460)
     amb = _wm_fill(n, 200, 100, 700)
@@ -1023,23 +754,20 @@ def test_stateful_detect_packed_masks_match_unpacked(spark, tmp_path):
           t0 + dt.timedelta(seconds=10), 1)],
     ]
     outs = {}
-    for tag, fn in (
-            ("v1u", lambda s: detect_stream_stateful(s)),
-            ("v1p", lambda s: detect_stream_stateful(s, packed=True)),
-            ("xcu", lambda s: detect_stream_stateful_coarse(s)),
-            ("xcp", lambda s: detect_stream_stateful_coarse(s, packed=True))):
+    for tag, packed in (("u", False), ("p", True)):
         d = str(tmp_path / f"seq_{tag}")
         write_batches(spark, [spark.createDataFrame(b, SEQ_SCHEMA)
                               for b in batches], d)
-        q = (fn(file_stream(spark, d, max_files_per_trigger=1))
+        q = (detect_stream_stateful(file_stream(spark, d,
+                                                max_files_per_trigger=1),
+                                    packed=packed)
              .writeStream.outputMode("append")
              .format("memory").queryName(f"pk_{tag}").start())
         q.processAllAvailable()
         q.stop()
-        rows = spark.sql(f"SELECT * FROM pk_{tag}").collect()
         got = {}
-        for r in rows:
-            if hasattr(r, "mask_bin"):
+        for r in spark.sql(f"SELECT * FROM pk_{tag}").collect():
+            if packed:
                 m = np.unpackbits(np.frombuffer(bytes(r.mask_bin),
                                                 dtype=np.uint8),
                                   count=n).astype(bool).tolist()
@@ -1047,84 +775,17 @@ def test_stateful_detect_packed_masks_match_unpacked(spark, tmp_path):
                 m = list(r.mask)
             got[(r.doc_id, r.seq_no)] = (m, r.wm_token, r.from_state)
         outs[tag] = got
-    assert outs["v1u"] == outs["v1p"] == outs["xcu"] == outs["xcp"]
-    assert len(outs["v1u"]) == 3
-    assert any(any(m) for m, _, _ in outs["v1u"].values())  # non-trivial
-
-
-def test_stateful_coarse_v2_matches_coarse_v1(spark, tmp_path):
-    """X5c on the v2 state API (CoarseDetectProcessor: shard-dict in a
-    binary ValueState + per-shard timer) == the legacy
-    applyInPandasWithState coarse op, on the same multi-source multi-doc
-    carry-over scenario as the v1-vs-coarse parity test."""
-    import datetime as dt
-
-    from pdf_watermark_removal_otsu_inpaint_spark.streaming.state_coarse import (
-        detect_stream_stateful_coarse)
-    from pdf_watermark_removal_otsu_inpaint_spark.streaming.state_v2 import (
-        detect_stream_stateful_coarse_v2)
-    if not _tws_available(spark, tmp_path):
-        pytest.skip("transformWithStateInPandas driver worker crashes in "
-                    "this image (XXKST on a minimal example)")
-    n = 2000
-    det_a = _wm_fill(n, 200, 100, 460)
-    det_b = _wm_fill(n, 205, 100, 440)
-    amb_a = _wm_fill(n, 200, 100, 700)
-    amb_b = _wm_fill(n, 205, 100, 700)
-    t0 = dt.datetime(2026, 1, 1, 0, 0, 10)
-
-    def r(doc, toks, src, secs, seq):
-        return (doc, toks.tolist(), n, src,
-                t0 + dt.timedelta(seconds=secs), seq)
-
-    batches = [
-        [r("docA", det_a, "web", 0, 0), r("docB", det_b, "web", 1, 0),
-         r("docA", det_b, "pdf", 2, 0)],
-        [r("docA", amb_a, "web", 10, 1), r("docB", amb_b, "web", 11, 1),
-         r("docA", amb_b, "pdf", 12, 1),
-         r("docC", det_a, "web", 13, 0), r("docC", amb_a, "web", 14, 1),
-         r("docC", amb_a, "web", 15, 2)],
-    ]
-    outs = []
-    for tag, fn in (
-            ("xc1", detect_stream_stateful_coarse),
-            ("xc2", detect_stream_stateful_coarse_v2),
-            # packed wire format on the v2 API too (shared assembler)
-            ("xc2p", lambda s: detect_stream_stateful_coarse_v2(
-                s, packed=True))):
-        d = str(tmp_path / f"seq_{tag}")
-        write_batches(spark, [spark.createDataFrame(b, SEQ_SCHEMA)
-                              for b in batches], d)
-        q = (fn(file_stream(spark, d, max_files_per_trigger=1))
-             .writeStream.outputMode("append")
-             .format("memory").queryName(f"st_{tag}").start())
-        q.processAllAvailable()
-        q.stop()
-        got = {}
-        for r in spark.sql(f"SELECT * FROM st_{tag}").collect():
-            if hasattr(r, "mask_bin"):
-                m = np.unpackbits(np.frombuffer(bytes(r.mask_bin),
-                                                dtype=np.uint8),
-                                  count=n).astype(bool).tolist()
-            else:
-                m = list(r.mask)
-            got[(r.source, r.doc_id, r.seq_no)] = (
-                r.wm_token, r.from_state, round(r.coverage, 9), m)
-        outs.append(got)
-    xc1, xc2, xc2p = outs
-    assert len(xc1) == sum(len(b) for b in batches)
-    assert xc1 == xc2 == xc2p
-    assert xc2[("web", "docA", 1)][0] == 200 and xc2[("web", "docA", 1)][1]
+    assert outs["u"] == outs["p"]
+    assert len(outs["u"]) == 3
+    assert outs["u"][("docA", 1)][1:] == (200, True)   # carried over
+    assert any(any(m) for m, _, _ in outs["u"].values())  # non-trivial
 
 
 def test_stateful_coarse_state_expires_after_watermark(spark, tmp_path):
-    """X5c TTL: a doc silent past the 600 s horizon is pruned from the
-    source dict, so its next row self-detects from scratch (bounded state
-    per source at 10^12 docs)."""
+    """X5 TTL: a doc silent past the 600 s horizon is dropped from its
+    shard's cache (or its shard's timer clears the shard), so its next row
+    self-detects from scratch (bounded state at 10^12 docs)."""
     import datetime as dt
-
-    from pdf_watermark_removal_otsu_inpaint_spark.streaming.state_coarse import (
-        detect_stream_stateful_coarse)
     n = 2000
     detectable = _wm_fill(n, 200, 100, 460)
     ambiguous = _wm_fill(n, 200, 100, 700)  # not self-detectable
@@ -1134,8 +795,7 @@ def test_stateful_coarse_state_expires_after_watermark(spark, tmp_path):
         [("docA", detectable.tolist(), n, "web", t0, 0)],
         # advance the watermark far past docA's horizon
         [("docB", detectable.tolist(), n, "web", late, 0)],
-        # spacer so docA's expiry materializes while docA is absent (the
-        # same timing v1's timer needs: a key with data never times out)
+        # spacer so docA's expiry materializes while docA is absent
         [("docC", detectable.tolist(), n, "web",
           late + dt.timedelta(seconds=10), 0)],
         [("docA", ambiguous.tolist(), n, "web",
@@ -1144,7 +804,7 @@ def test_stateful_coarse_state_expires_after_watermark(spark, tmp_path):
     d = str(tmp_path / "seq")
     write_batches(spark, [spark.createDataFrame(b, SEQ_SCHEMA)
                           for b in batches], d)
-    q = (detect_stream_stateful_coarse(
+    q = (detect_stream_stateful(
             file_stream(spark, d, max_files_per_trigger=1))
          .writeStream.outputMode("append")
          .format("memory").queryName("st_ttl_xc").start())
@@ -1158,36 +818,3 @@ def test_stateful_coarse_state_expires_after_watermark(spark, tmp_path):
     assert not out[("docA", 1)].from_state
 
 
-def test_stateful_v1_state_expires_after_watermark(spark, tmp_path):
-    """X5 v1 TTL: the event-time timeout must actually DROP the state — a
-    timed-out invocation that re-updates would re-arm the timer forever.
-    A doc silent past the 600 s horizon re-detects from scratch."""
-    import datetime as dt
-    n = 2000
-    detectable = _wm_fill(n, 200, 100, 460)
-    ambiguous = _wm_fill(n, 200, 100, 700)  # not self-detectable
-    t0 = dt.datetime(2026, 1, 1, 0, 0, 10)
-    late = dt.datetime(2026, 1, 1, 2, 0, 0)
-    batches = [
-        [("docA", detectable.tolist(), n, "web", t0, 0)],
-        # advance the watermark far past docA's horizon
-        [("docB", detectable.tolist(), n, "web", late, 0)],
-        # one more batch so docA's expired timer fires
-        [("docC", detectable.tolist(), n, "web",
-          late + dt.timedelta(seconds=10), 0)],
-        [("docA", ambiguous.tolist(), n, "web",
-          late + dt.timedelta(seconds=20), 1)],
-    ]
-    d = str(tmp_path / "seq")
-    write_batches(spark, [spark.createDataFrame(b, SEQ_SCHEMA)
-                          for b in batches], d)
-    q = (detect_stream_stateful(file_stream(spark, d, max_files_per_trigger=1))
-         .writeStream.outputMode("append")
-         .format("memory").queryName("st_ttl_v1").start())
-    q.processAllAvailable()
-    q.stop()
-    out = {(r.doc_id, r.seq_no): r
-           for r in spark.sql("SELECT * FROM st_ttl_v1").collect()}
-    assert out[("docA", 0)].wm_token == 200
-    assert out[("docA", 1)].wm_token is None
-    assert not out[("docA", 1)].from_state
