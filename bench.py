@@ -178,10 +178,7 @@ def exactly_once_secs(spark, trials: int = 3) -> float:
              .trigger(availableNow=True).start())
         q.awaitTermination()
         secs = time.perf_counter() - t0
-        n = sum(json.load(open(f"{sink.out_dir}/_commits/{b}.json"))["rows"]
-                for b in [f.split(".")[0] for f in
-                          sorted(os.listdir(f"{sink.out_dir}/_commits"))
-                          if f.endswith(".json")])
+        n = sink.committed_rows()
         assert n == PIPELINE_ROWS, \
             f"exactly-once sink rows {n} != {PIPELINE_ROWS}"
         _sh.rmtree(out_dir, ignore_errors=True)
@@ -794,10 +791,7 @@ def e1x_child(cpus: int) -> None:
              .trigger(availableNow=True).start())
         q.awaitTermination()
         secs = time.perf_counter() - t0
-        n = sum(json.load(open(f"{sink.out_dir}/_commits/{b}.json"))["rows"]
-                for b in [f.split(".")[0] for f in
-                          sorted(os.listdir(f"{sink.out_dir}/_commits"))
-                          if f.endswith(".json")])
+        n = sink.committed_rows()
         assert n == LADDER_ROWS, f"e1x ladder rows {n} != {LADDER_ROWS}"
         _sh.rmtree(out_dir, ignore_errors=True)
         _sh.rmtree(ck, ignore_errors=True)

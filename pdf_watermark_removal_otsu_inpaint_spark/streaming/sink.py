@@ -1,18 +1,28 @@
 """Exactly-once idempotent sink (X7) + per-partition lineage/metrics (X8).
 
 `foreachBatch` is at-least-once on retry; exactly-once is recovered by making
-each micro-batch commit idempotent (SURVEY §4.3):
+each micro-batch commit idempotent (SURVEY §4.3). Per micro-batch N:
 
-- data for batch N goes to `<out>/data/batch_id=N/` with mode=overwrite, so a
-  retried batch N rewrites the same directory instead of duplicating;
-- a commit marker `<out>/_commits/N.json` is written atomically (tmp+rename)
-  AFTER data+metrics land; a replayed batch whose marker exists is a no-op;
-- readers (`read_committed`) only see batch dirs with markers, so a crash
-  between data write and marker leaves no visible partial output;
-- per-partition lineage rows (batch_id, partition_id, rows_out, masked
-  tokens, coverage sum) land in `<out>/metrics/batch_id=N/` in the same
-  commit scope — the resume audit trail (reference ProcessingStats,
-  stats.py:13-245, made transactional).
+1. write: the batch plan runs once, in a plain overwrite of
+   `<out>/data/batch_id=N/` (a retried batch N rewrites the same directory
+   instead of duplicating); there is no shuffle before the write;
+2. key check: one key-only job over the WRITTEN files asks whether any
+   sink key (doc_id, seq_no) repeats within the batch;
+3. only if one does: the written rows are deduplicated into
+   `<out>/_staging/batch_id=N/` and swapped into the data directory;
+4. lineage: per-partition rows (batch_id, partition_id, rows_out, masked
+   tokens, coverage sum) are aggregated from a column-pruned scan of the
+   written files and collected on the driver — the resume audit trail
+   (reference ProcessingStats, stats.py:13-245, made transactional);
+5. metrics: the driver writes those rows with pyarrow as the single file
+   `<out>/metrics/batch_id=N/part-00000.parquet` (no Spark job);
+6. commit: a marker `<out>/_commits/N.json` is written atomically
+   (tmp+rename) after everything above; a replayed batch whose marker
+   exists is a no-op.
+
+Readers (`read_committed`, `read_metrics`) only see batches with markers, so
+a crash at any step before 6 leaves no visible partial output, and the
+replay rewrites every file of the batch.
 
 The production target is an Iceberg/Delta MERGE on (doc_id, seq_no) — those
 jars are not in this image (import-gated), but the commit-marker protocol
@@ -23,10 +33,14 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import tempfile
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 
 class ExactlyOnceParquetSink:
@@ -47,26 +61,29 @@ class ExactlyOnceParquetSink:
             return
         data_path = f"{self.out_dir}/data/batch_id={batch_id}"
         metrics_path = f"{self.out_dir}/metrics/batch_id={batch_id}"
-
-        # in-batch dedup on the sink key (a replayed source row within the
-        # same batch must not double-write), then ONE pass: the batch plan
-        # executes exactly once, for the data write. Lineage is derived
-        # from the WRITTEN files — a column-pruned scan of the tiny metric
-        # columns (parquet reads only coverage/n_tok, never the token
-        # arrays), so the audit trail describes the bytes that actually
-        # landed and the big batch is never cached or recomputed (the
-        # previous cache() of token-array batches was the sink's dominant
-        # cost: materializing ~100 MB of array blocks per micro-batch).
-        deduped = batch_df.dropDuplicates(self.key_cols)
-        deduped.write.mode("overwrite").parquet(data_path)
-
         spark = batch_df.sparkSession
+        schema = batch_df.schema
+
+        batch_df.write.mode("overwrite").parquet(data_path)
         # explicit schema: skips a schema-inference job per micro-batch AND
         # survives an EMPTY micro-batch (foreachBatch fires on no-data
         # batches for watermark progress; a committer that writes only
-        # _SUCCESS would make schema inference fail after the data write
-        # but before the commit marker)
-        written = spark.read.schema(deduped.schema).parquet(data_path)
+        # _SUCCESS would make schema inference fail before the marker)
+        written = spark.read.schema(schema).parquet(data_path)
+        repeats = (written.groupBy(*self.key_cols).count()
+                   .where(F.col("count") > 1).limit(1).count())
+        if repeats:
+            # a source row replayed within the batch must not double-write
+            staging = f"{self.out_dir}/_staging/batch_id={batch_id}"
+            written.dropDuplicates(self.key_cols).write.mode("overwrite") \
+                .parquet(staging)
+            shutil.rmtree(data_path)
+            os.replace(staging, data_path)
+            shutil.rmtree(f"{self.out_dir}/_staging")
+            written = spark.read.schema(schema).parquet(data_path)
+
+        # lineage from the WRITTEN files: parquet reads only the tiny metric
+        # columns, never the token arrays
         agg_cols = [F.count("*").alias("rows_out")]
         if "coverage" in written.columns:
             agg_cols.append(F.round(F.sum("coverage"), 9).alias("coverage_sum"))
@@ -76,13 +93,16 @@ class ExactlyOnceParquetSink:
         lineage = (written.groupBy(F.spark_partition_id().alias("partition_id"))
                    .agg(*agg_cols)
                    .withColumn("batch_id", F.lit(batch_id)))
-        # collect the tiny per-partition lineage once: the marker's row
-        # count is the SUM of rows_out, and the metrics parquet is written
-        # from the collected rows (one row per written partition, no shuffle)
         lineage_rows = lineage.collect()
         n_rows = int(sum(r["rows_out"] for r in lineage_rows))
-        (spark.createDataFrame(lineage_rows, schema=lineage.schema)
-         .coalesce(1).write.mode("overwrite").parquet(metrics_path))
+        # at most a few rows: written on the driver, which already writes
+        # the marker into out_dir
+        shutil.rmtree(metrics_path, ignore_errors=True)
+        os.makedirs(metrics_path)
+        pq.write_table(
+            pa.Table.from_pylist([r.asDict() for r in lineage_rows],
+                                 schema=to_arrow_schema(lineage.schema)),
+            f"{metrics_path}/part-00000.parquet")
 
         # atomic commit marker: tmp file + rename (rename is atomic on POSIX)
         fd, tmp = tempfile.mkstemp(dir=f"{self.out_dir}/_commits",
@@ -94,6 +114,14 @@ class ExactlyOnceParquetSink:
     def committed_batches(self) -> list[int]:
         d = f"{self.out_dir}/_commits"
         return sorted(int(f[:-5]) for f in os.listdir(d) if f.endswith(".json"))
+
+    def committed_rows(self) -> int:
+        """Rows the commit markers name: the sink's exactly-once count."""
+        total = 0
+        for b in self.committed_batches():
+            with open(self._commit_path(b)) as f:
+                total += int(json.load(f)["rows"])
+        return total
 
     def read_committed(self, spark: SparkSession) -> DataFrame:
         """Only committed batch dirs are visible (exactly-once read view)."""

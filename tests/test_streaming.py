@@ -7,8 +7,10 @@ import os
 import time
 
 import numpy as np
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.readwriter import DataFrameWriter
 
 from pdf_watermark_removal_otsu_inpaint_spark import reference_kernels as rk
 from pdf_watermark_removal_otsu_inpaint_spark.operators import histogram as oh
@@ -16,7 +18,7 @@ from pdf_watermark_removal_otsu_inpaint_spark.operators.repair import (
     detect_masks, repair_sequences)
 from pdf_watermark_removal_otsu_inpaint_spark.params import DEFAULT_PARAMS
 from pdf_watermark_removal_otsu_inpaint_spark.sources.sequences import (
-    sequences_df)
+    SEQUENCES_DDL, generate_rows, sequences_df)
 from pdf_watermark_removal_otsu_inpaint_spark.sources.synth import (
     synth_sequences)
 from pdf_watermark_removal_otsu_inpaint_spark.streaming.metrics import (
@@ -199,7 +201,35 @@ def test_stateful_detect_carries_wm_token(spark, tmp_path):
     assert out[1].mask == exp_mask.tolist()
 
 
-def test_exactly_once_crash_between_data_and_commit(spark, tmp_path):
+def inject_crash(monkeypatch, owner, name, hit, after):
+    """Make `owner.name` raise once, on the first call whose positional
+    arguments satisfy `hit`: after doing its work when `after`, before it
+    otherwise. This is a process death at that step of the sink."""
+    orig = getattr(owner, name)
+    armed = [True]
+
+    def crashing(*args, **kw):
+        fire = armed[0] and hit(*args)
+        if fire and not after:
+            armed[0] = False
+            raise RuntimeError(f"injected crash before {name}")
+        out = orig(*args, **kw)
+        if fire:
+            armed[0] = False
+            raise RuntimeError(f"injected crash after {name}")
+        return out
+
+    monkeypatch.setattr(owner, name, crashing)
+
+
+def committed_view(spark, sink):
+    """(committed rows as {(doc_id, seq_no): tokens}, committed row count)."""
+    rows = sink.read_committed(spark).collect()
+    return {(r.doc_id, r.seq_no): r.tokens for r in rows}, len(rows)
+
+
+def test_exactly_once_crash_between_data_and_commit(spark, tmp_path,
+                                                    monkeypatch):
     """X7: a sink crash after data write but before the commit marker is
     replayed idempotently on restart; committed view equals an uninterrupted
     run; lineage metrics (X8) exist per batch."""
@@ -213,45 +243,33 @@ def test_exactly_once_crash_between_data_and_commit(spark, tmp_path):
     ck1 = str(tmp_path / "ck1")
     q = run_repair_pipeline(file_stream(spark, seq_dir), out1, ck1)
     q.awaitTermination(120)
-    sink1 = ExactlyOnceParquetSink(out1)
-    uninterrupted = {(r.doc_id, r.seq_no): r.tokens
-                     for r in sink1.read_committed(spark).collect()}
+    uninterrupted, _ = committed_view(spark, ExactlyOnceParquetSink(out1))
 
     out2 = str(tmp_path / "out_crashy")
     ck2 = str(tmp_path / "ck2")
     sink2 = ExactlyOnceParquetSink(out2)
-    crashed = {"done": False}
 
-    def crashy(batch_df, batch_id):
-        from pdf_watermark_removal_otsu_inpaint_spark.operators.repair import (
-            repair_sequences as rs)
-        repaired = rs(batch_df, DEFAULT_PARAMS)
-        if batch_id == 0 and not crashed["done"]:
-            # simulate: data lands, process dies before the commit marker
-            repaired.write.mode("overwrite").parquet(
-                f"{out2}/data/batch_id={batch_id}")
-            crashed["done"] = True
-            raise RuntimeError("injected crash before commit")
-        sink2(repaired, batch_id)
+    def start():
+        return (file_stream(spark, seq_dir, max_files_per_trigger=1)
+                .writeStream.foreachBatch(
+                    lambda b, i: sink2(repair_sequences(b, DEFAULT_PARAMS), i))
+                .option("checkpointLocation", ck2)
+                .trigger(availableNow=True).start())
 
-    stream = file_stream(spark, seq_dir, max_files_per_trigger=1)
-    q2 = (stream.writeStream.foreachBatch(crashy)
-          .option("checkpointLocation", ck2)
-          .trigger(availableNow=True).start())
-    with pytest.raises(Exception):
-        q2.awaitTermination(120)
+    with monkeypatch.context() as m:
+        # batch 0's data lands, then the process dies inside the sink
+        inject_crash(m, DataFrameWriter, "parquet",
+                     lambda w, path, *a: path.endswith("/data/batch_id=0"),
+                     after=True)
+        q2 = start()
+        with pytest.raises(Exception):
+            q2.awaitTermination(120)
+    assert os.listdir(f"{out2}/data") == ["batch_id=0"]
     assert sink2.committed_batches() == []  # crash left nothing visible
 
-    q3 = (file_stream(spark, seq_dir, max_files_per_trigger=1)
-          .writeStream.foreachBatch(
-              lambda b, i: sink2(repair_sequences(b, DEFAULT_PARAMS), i))
-          .option("checkpointLocation", ck2)
-          .trigger(availableNow=True).start())
-    q3.awaitTermination(120)
-
-    resumed = {(r.doc_id, r.seq_no): r.tokens
-               for r in sink2.read_committed(spark).collect()}
-    assert resumed == uninterrupted  # no dup, no loss, same content
+    start().awaitTermination(120)
+    resumed, n = committed_view(spark, sink2)
+    assert resumed == uninterrupted and n == len(resumed)  # no dup, no loss
     # replaying an already-committed batch is a no-op
     before = sorted(os.listdir(f"{out2}/_commits"))
     sink2(repair_sequences(_seq_cols(df).limit(1), DEFAULT_PARAMS), 0)
@@ -260,6 +278,171 @@ def test_exactly_once_crash_between_data_and_commit(spark, tmp_path):
     m = sink2.read_metrics(spark)
     assert set(r.batch_id for r in m.collect()) == set(sink2.committed_batches())
     assert m.agg(F.sum("rows_out")).collect()[0][0] == len(resumed)
+
+
+def _repeating_batch(spark, n_rows, n_repeats, seed):
+    """Static repaired batch of `n_rows` distinct (doc_id, seq_no) keys
+    plus identical copies of the first `n_repeats` rows: a source replayed
+    within one micro-batch. Returns (batch DataFrame, input rows)."""
+    rows = generate_rows(n_rows, seed, min_tok=64, max_tok=512)
+    df = spark.createDataFrame(rows + rows[:n_repeats], SEQUENCES_DDL)
+    return repair_sequences(_seq_cols(df), DEFAULT_PARAMS), rows
+
+
+def test_exactly_once_sink_dedups_repeated_keys(spark, tmp_path):
+    """X7 in-batch dedup: a batch that repeats 50 of its keys commits each
+    key once, with the kernel's tokens, and leaves no staging files."""
+    batch, rows = _repeating_batch(spark, 200, 50, seed=23)
+    out = str(tmp_path / "out")
+    sink = ExactlyOnceParquetSink(out)
+    sink(batch, 7)
+
+    got, n = committed_view(spark, sink)
+    assert n == len(got) == len(rows) == 200
+    metrics = sink.read_metrics(spark).collect()
+    assert sum(r.rows_out for r in metrics) == sink.committed_rows() == 200
+    for r in rows:
+        want = rk.remove_watermark_multi_pass(
+            np.asarray(r["tokens"], np.int32), passes=DEFAULT_PARAMS.passes)[0]
+        assert got[(r["doc_id"], r["seq_no"])] == want.tolist()
+    assert sorted(os.listdir(out)) == ["_commits", "data", "metrics"]
+    assert os.listdir(f"{out}/data") == ["batch_id=7"]
+
+    # replaying the same batch_id, even on a fresh sink object, is a no-op
+    files = sorted(os.listdir(f"{out}/data/batch_id=7"))
+    ExactlyOnceParquetSink(out)(batch, 7)
+    assert sorted(os.listdir(f"{out}/data/batch_id=7")) == files
+    assert committed_view(spark, sink) == (got, n)
+
+
+def test_exactly_once_sink_runs_batch_plan_once(spark, tmp_path, monkeypatch):
+    """A batch with no repeated key: the batch plan executes exactly once,
+    and the sink neither deduplicates nor runs a Spark job for the
+    metrics file."""
+    batch, rows = _repeating_batch(spark, 40, 0, seed=24)
+    executed = spark.sparkContext.accumulator(0)
+
+    def count_rows(it):
+        for b in it:
+            executed.add(b.num_rows)
+            yield b
+
+    counted = batch.mapInArrow(count_rows, batch.schema)
+    inject_crash(monkeypatch, type(batch), "dropDuplicates",
+                 lambda *a: True, after=False)
+    inject_crash(monkeypatch, type(spark), "createDataFrame",
+                 lambda *a: True, after=False)
+    writes = []
+    write = DataFrameWriter.parquet
+
+    def recording_write(w, path, *a, **kw):
+        writes.append(path)
+        return write(w, path, *a, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", recording_write)
+    out = str(tmp_path / "out")
+    sink = ExactlyOnceParquetSink(out)
+    sink(counted, 0)
+
+    assert executed.value == len(rows) == sink.committed_rows()
+    assert writes == [f"{out}/data/batch_id=0"]
+    assert os.listdir(f"{out}/metrics/batch_id=0")
+
+
+# the sink's steps a crash can follow: (owner, callable, hit, after)
+SINK_FAULTS = {
+    "after_data_write": (DataFrameWriter, "parquet",
+                         lambda w, path, *a: "/data/" in path, True),
+    "after_staging_write": (DataFrameWriter, "parquet",
+                            lambda w, path, *a: "/_staging/" in path, True),
+    "before_staging_swap": (os, "replace",
+                            lambda src, dst: "/_staging/" in str(src), False),
+    "after_metrics_write": (pq, "write_table", lambda *a: True, True),
+    "before_marker_rename": (os, "replace",
+                             lambda src, dst: "/_commits/" in str(dst), False),
+}
+
+
+@pytest.fixture(scope="module")
+def sink_fault_batches(spark, tmp_path_factory):
+    """Two static batches (the second repeats keys, so the staging rewrite
+    runs) and the committed view of an uninterrupted sink over them."""
+    b0, _ = _repeating_batch(spark, 30, 0, seed=31)
+    b1, _ = _repeating_batch(spark, 30, 10, seed=32)
+    sink = ExactlyOnceParquetSink(str(tmp_path_factory.mktemp("clean")))
+    sink(b0, 0)
+    first = committed_view(spark, sink)
+    sink(b1, 1)
+    return b0, b1, first, committed_view(spark, sink)
+
+
+@pytest.mark.parametrize("fault", sorted(SINK_FAULTS))
+def test_exactly_once_sink_fault_matrix(spark, tmp_path, monkeypatch,
+                                        sink_fault_batches, fault):
+    """X7/X8: a crash at each step of the sink, replayed on a fresh sink
+    object, commits what an uninterrupted sink commits; until then the
+    crashed batch is invisible to both readers."""
+    b0, b1, first, uninterrupted = sink_fault_batches
+    out = str(tmp_path / "out")
+    ExactlyOnceParquetSink(out)(b0, 0)
+    with monkeypatch.context() as m:
+        inject_crash(m, *SINK_FAULTS[fault])
+        with pytest.raises(RuntimeError, match="injected crash"):
+            ExactlyOnceParquetSink(out)(b1, 1)
+
+    crashed = ExactlyOnceParquetSink(out)
+    assert crashed.committed_batches() == [0]
+    assert committed_view(spark, crashed) == first
+    assert {r.batch_id for r in crashed.read_metrics(spark).collect()} == {0}
+
+    sink = ExactlyOnceParquetSink(out)
+    sink(b1, 1)
+    got, n = committed_view(spark, sink)
+    assert (got, n) == uninterrupted
+    metrics = sink.read_metrics(spark).collect()
+    assert {r.batch_id for r in metrics} == {0, 1}
+    assert sum(r.rows_out for r in metrics) == sink.committed_rows() == n
+
+
+# read_metrics schema of the files the sink writes, with and without the
+# n_tok column that masked_tokens needs
+_METRICS_FIELDS = [("partition_id", "int"), ("rows_out", "bigint"),
+                   ("coverage_sum", "double"), ("masked_tokens", "bigint"),
+                   ("batch_id", "int")]
+
+
+def test_exactly_once_metrics_schema(spark, tmp_path):
+    """X8: the metrics schema (names, types, nullability) for the list and
+    the Arrow-packed kernel, and an empty micro-batch commits 0 rows with
+    a readable zero-row metrics file."""
+    from pdf_watermark_removal_otsu_inpaint_spark.operators.repair import (
+        make_pack_udf)
+    from pdf_watermark_removal_otsu_inpaint_spark.operators.repair_vectorized import (  # noqa: E501
+        repair_sequences_arrow_packed)
+    df = _seq_cols(sequences_df(spark, 20, seed=3))
+    packed = (df.withColumn("tokens_bin", make_pack_udf()(F.col("tokens")))
+              .drop("tokens"))
+    cases = {"list": (repair_sequences(df, DEFAULT_PARAMS), _METRICS_FIELDS),
+             "packed": (repair_sequences_arrow_packed(packed, DEFAULT_PARAMS),
+                        [f for f in _METRICS_FIELDS
+                         if f[0] != "masked_tokens"])}
+    for name, (batch, fields) in cases.items():
+        want = [(c, t, True) for c, t in fields]
+        empty = ExactlyOnceParquetSink(str(tmp_path / f"{name}_empty"))
+        empty(batch.limit(0), 4)
+        assert empty.committed_rows() == 0
+        m = empty.read_metrics(spark)
+        assert m.count() == 0
+        assert [(f.name, f.dataType.simpleString(), f.nullable)
+                for f in m.schema.fields] == want, name
+
+        sink = ExactlyOnceParquetSink(str(tmp_path / name))
+        sink(batch, 3)
+        sink(batch.limit(0), 4)
+        m = sink.read_metrics(spark)
+        assert [(f.name, f.dataType.simpleString(), f.nullable)
+                for f in m.schema.fields] == want, name
+        assert m.agg(F.sum("rows_out")).collect()[0][0] == 20
 
 
 def test_salted_stats_match_unsalted(spark):
