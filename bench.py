@@ -99,17 +99,13 @@ def materialize_input(spark, n_rows: int) -> None:
 def pipeline_secs(spark, layout: str, trials: int = 3) -> float:
     """Best-of-N wall time: this VM has noisy-neighbor variance (identical
     runs have been observed 2.5x apart), so single-shot numbers mislead."""
-    from pdf_watermark_removal_otsu_inpaint_spark.operators.repair import (
-        repair_sequences, repair_sequences_packed)
     from pdf_watermark_removal_otsu_inpaint_spark.operators.repair_vectorized import (
-        repair_sequences_arrow, repair_sequences_arrow_packed)
+        repair_sequences, repair_sequences_arrow_packed)
     from pdf_watermark_removal_otsu_inpaint_spark.params import DEFAULT_PARAMS
     df = spark.read.parquet(
         f"{BENCH_INPUT}/{'packed' if 'packed' in layout else 'list'}")
     params = DEFAULT_PARAMS.with_(passes=2)
     out = {"list": lambda: repair_sequences(df, params),
-           "packed": lambda: repair_sequences_packed(df, params),
-           "arrow": lambda: repair_sequences_arrow(df, params),
            "arrow_packed": lambda: repair_sequences_arrow_packed(df, params),
            }[layout]()
     _noop(out.limit(4000))  # warm python workers + JIT
@@ -1090,10 +1086,9 @@ def scale_child(cpus: int) -> None:
     # Host interference comes in multi-second windows (observed 11k-23k
     # seqs/s across consecutive identical trials in one process), so take
     # best-of-8 — enough span to catch a quiet window on both legs.
-    secs = pipeline_secs(spark, "packed", trials=8)
     secs_arrow = pipeline_secs(spark, "arrow_packed", trials=8)
     spark.stop()
-    print(json.dumps({"cpus": cpus, "sec": secs, "sec_arrow": secs_arrow}))
+    print(json.dumps({"cpus": cpus, "sec_arrow": secs_arrow}))
 
 
 def run_scaling() -> dict:
@@ -1111,14 +1106,10 @@ def run_scaling() -> dict:
                            timeout=1200)
         line = [ln for ln in r.stdout.splitlines() if ln.startswith("{")][-1]
         rec = json.loads(line)
-        out[cpus] = {"sec": round(rec["sec"], 3),
-                     "seqs_per_sec": round(PIPELINE_ROWS / rec["sec"], 1),
-                     "sec_arrow": round(rec["sec_arrow"], 3),
+        out[cpus] = {"sec_arrow": round(rec["sec_arrow"], 3),
                      "seqs_per_sec_arrow":
                          round(PIPELINE_ROWS / rec["sec_arrow"], 1),
                      "pinned": have_taskset}
-    out["efficiency_8_to_32"] = round(
-        (out[8]["sec"] / out[32]["sec"]) / (32 / 8), 3)
     out["efficiency_8_to_32_arrow"] = round(
         (out[8]["sec_arrow"] / out[32]["sec_arrow"]) / (32 / 8), 3)
     return out
@@ -1181,14 +1172,14 @@ def main():
     result["pipeline_n_tok"] = N_TOK
 
     def run_pipelines():
-        for layout in ("list", "arrow", "packed", "arrow_packed"):
+        for layout in ("list", "arrow_packed"):
             secs = pipeline_secs(spark, layout)
             result[f"pipeline_{layout}_sec"] = round(secs, 3)
             result[f"pipeline_{layout}_seqs_per_sec"] = round(
                 PIPELINE_ROWS / secs, 1)
     section("pipeline", run_pipelines)
     result["pipeline_tokens_per_sec"] = round(
-        PIPELINE_ROWS * N_TOK / result["pipeline_packed_sec"])
+        PIPELINE_ROWS * N_TOK / result["pipeline_arrow_packed_sec"])
     result.update(section("histogram",
                           lambda: histogram_compare_secs(spark)))
     e1x = section("exactly_once", lambda: exactly_once_secs(spark))
@@ -1251,7 +1242,6 @@ def _emit_compact(result) -> None:
               "scaling_efficiency_north_paired",
               "scaling_efficiency_north_e1x",
               "scaling_efficiency_north_e1x_paired",
-              "pipeline_packed_seqs_per_sec",
               "pipeline_arrow_packed_seqs_per_sec",
               "pipeline_tokens_per_sec",
               "exactly_once_seqs_per_sec",
@@ -1269,8 +1259,8 @@ def _emit_compact(result) -> None:
         compact["north_seqs_per_sec"] = [n[2]["seqs_per_sec"],
                                          n[8]["seqs_per_sec"]]
     if "scaling" in result:
-        compact["efficiency_8_to_32"] = result["scaling"][
-            "efficiency_8_to_32"]
+        compact["efficiency_8_to_32_arrow"] = result["scaling"][
+            "efficiency_8_to_32_arrow"]
     compact["full_ledger"] = "BENCH_FULL.json"
     # size-bound the line by TRIMMING optional keys, never by aborting: an
     # oversize assert after a completed run would cost the driver line AND
@@ -1391,16 +1381,13 @@ def _write_bench_md(result, scale, north, ceiling):
     ]
     for cpus in (8, 32):
         s = scale[cpus]
-        lines.append(f"| local[{cpus}] pinned to {cpus} cores (pandas UDF) | "
-                     f"{s['sec']} | {s['seqs_per_sec']} | "
-                     f"{round(s['seqs_per_sec'] * result['pipeline_n_tok'])} |")
         lines.append(f"| local[{cpus}] pinned to {cpus} cores (mapInArrow) | "
                      f"{s['sec_arrow']} | {s['seqs_per_sec_arrow']} | "
                      f"{round(s['seqs_per_sec_arrow'] * result['pipeline_n_tok'])} |")
     lines += [
         "",
-        f"8 -> 32 efficiency: {scale['efficiency_8_to_32']} (pandas), "
-        f"{scale['efficiency_8_to_32_arrow']} (mapInArrow). This pair is "
+        f"8 -> 32 efficiency: {scale['efficiency_8_to_32_arrow']} "
+        "(mapInArrow). This pair is "
         "DRAM-limited on this single box — see the ceiling probe.",
         "",
         "## Host-ceiling probe (Spark-free, reproducible)",
@@ -1424,7 +1411,7 @@ def _write_bench_md(result, scale, north, ceiling):
         "(1.0 = perfect). Any memory-touching job on this "
         "box inherits the same knee, which is why the north-rule pair is "
         "measured on the unsaturated side. The Spark plan itself is "
-        "shuffle-free and barrier-free (one ArrowEvalPython/mapInArrow over "
+        "shuffle-free and barrier-free (one mapInArrow over "
         "a parquet scan; plan shape pinned in tests/test_plan_hygiene.py), "
         "so cluster scale-out (per-node DRAM) tracks the 2->8 number, not "
         "the 8->32 one.",
@@ -1432,9 +1419,7 @@ def _write_bench_md(result, scale, north, ceiling):
         "## Throughput (local[32], all 32 cores)",
         "",
         "Layout comparison on local[32] (same rows): "
-        f"array<int32> pandas {result['pipeline_list_seqs_per_sec']} vs "
-        f"array<int32> mapInArrow {result.get('pipeline_arrow_seqs_per_sec', 'n/a')} vs "
-        f"packed pandas {result['pipeline_packed_seqs_per_sec']} vs "
+        f"array<int32> mapInArrow {result['pipeline_list_seqs_per_sec']} vs "
         f"packed mapInArrow {result['pipeline_arrow_packed_seqs_per_sec']} "
         "seqs/s — the packed layout decodes one value per row at the "
         "parquet scan and ships one Arrow buffer per row (np.frombuffer "

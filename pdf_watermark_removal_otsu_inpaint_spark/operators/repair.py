@@ -1,14 +1,16 @@
-"""Detect + repair operators as Arrow-batched pandas UDFs (K1+K2 fused).
+"""Detect-side and profiled repair operators as Arrow-batched pandas UDFs.
 
-One Arrow crossing per row batch: the full per-row pipeline (detect ->
-protect -> morphology -> run filter -> inpaint -> blend, multi-pass) runs
-inside a single vectorized UDF, per SURVEY.md §7 risk list ("fuse
-detect+repair into one UDF to cross the Arrow boundary once per row").
+The detect UDFs (`make_detect_udf`, `make_auto_detect_udf`), the per-row
+parameter repair of `repair_with_profiles` and the `make_pack_udf` layout
+adapter live here. The two repair kernels themselves, fused detect+repair
+(K1+K2) and repair with a given mask (K2), cross into Python only through
+the mapInArrow operators of repair_vectorized (`repair_sequences`,
+`repair_sequences_arrow_packed`, `apply_masks`); `repair_with_marker_spans`
+composes a detect UDF with `apply_masks`.
 
-The UDF bodies delegate to reference_kernels — the engine and the pytest
-oracle are the same NumPy code, so token-array equality is structural; the
-*Spark* behavior under test is batching, schema, null/state handling, and
-plan shape.
+The UDF bodies delegate to the whole-batch kernels, which are pinned row
+by row against reference_kernels; the *Spark* behavior under test is
+batching, schema, null/state handling, and plan shape.
 """
 
 from __future__ import annotations
@@ -20,6 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from ..params import DEFAULT_PARAMS, EngineParams
+from .repair_vectorized import apply_masks
 
 DETECT_STRUCT = "struct<mask:array<boolean>,wm_token:int,coverage:double>"
 REPAIR_STRUCT = ("struct<tokens:array<int>,coverage:double,wm_token:int,"
@@ -76,57 +79,6 @@ def make_detect_udf(params: EngineParams = DEFAULT_PARAMS):
     return detect
 
 
-def make_repair_udf(params: EngineParams = DEFAULT_PARAMS):
-    """Fused multi-pass detect+repair kernel -> repaired struct
-    (remove_watermark_multi_pass, watermark_remover.py:234-302).
-    Whole-batch vectorized through repair_batch."""
-    p = params
-
-    @pandas_udf(REPAIR_STRUCT)
-    def repair(tokens: pd.Series, wm: pd.Series) -> pd.DataFrame:
-        from .repair_vectorized import flatten_arrays, repair_batch
-        flat, offsets = flatten_arrays(tokens)
-        B = offsets.size - 1
-        if B == 0:
-            return pd.DataFrame({"tokens": [], "coverage": [],
-                                 "wm_token": [], "pass_count": []})
-        out, cov, wm_out, npass = repair_batch(
-            np.asarray(flat, dtype=np.int32), offsets, p,
-            wm_in=_wm_series_to_batch(wm))
-        return pd.DataFrame({
-            "tokens": [out[offsets[i]:offsets[i + 1]] for i in range(B)],
-            "coverage": cov,
-            "wm_token": [None if w < 0 else int(w) for w in wm_out],
-            "pass_count": npass})
-
-    return repair
-
-
-def make_apply_mask_udf(params: EngineParams = DEFAULT_PARAMS):
-    """Repair with a *given* mask (inpaint+blend only, K2): the post-join
-    operator of the stream-stream pipeline (X6 -> repair), where the mask
-    arrives from the `detect_masks` stream instead of being recomputed.
-    Reference: remove_watermark body after mask is known
-    (watermark_remover.py:214-226)."""
-    p = params
-
-    @pandas_udf("array<int>")
-    def apply_mask(tokens: pd.Series, mask: pd.Series) -> pd.Series:
-        # whole-batch vectorized (no per-row Python kernel calls): flatten
-        # the batch once, run the flat-buffer K2 kernel, slice back
-        from .repair_vectorized import apply_mask_batch, flatten_arrays
-        flat, offsets = flatten_arrays(tokens)
-        if offsets.size <= 1:
-            return pd.Series([], dtype=object)
-        mflat, _ = flatten_arrays(mask)
-        out = apply_mask_batch(flat.astype(np.int32, copy=False),
-                               mflat.astype(bool, copy=False), offsets, p)
-        return pd.Series([out[offsets[i]:offsets[i + 1]]
-                          for i in range(offsets.size - 1)])
-
-    return apply_mask
-
-
 # ---------------------------------------------------------------------------
 # High-level DataFrame operators (one code path for batch and streaming).
 # ---------------------------------------------------------------------------
@@ -144,21 +96,6 @@ def detect_masks(df: DataFrame, params: EngineParams = DEFAULT_PARAMS,
                       F.col("_d.coverage").alias("coverage")))
 
 
-def repair_sequences(df: DataFrame, params: EngineParams = DEFAULT_PARAMS,
-                     wm_token: Column | None = None) -> DataFrame:
-    """sequences -> repaired (same key columns + repaired tokens/coverage/
-    wm_token/pass_count). Fused single-UDF path for batch and foreachBatch."""
-    wm = wm_token if wm_token is not None else F.lit(None).cast("int")
-    r = make_repair_udf(params)(F.col("tokens"), wm)
-    keep = [c for c in ("doc_id", "seq_no", "event_ts", "source", "n_tok")
-            if c in df.columns]
-    return (df.withColumn("_r", r)
-              .select(*keep, F.col("_r.tokens").alias("tokens"),
-                      F.col("_r.coverage").alias("coverage"),
-                      F.col("_r.wm_token").alias("wm_token"),
-                      F.col("_r.pass_count").alias("pass_count")))
-
-
 # ---------------------------------------------------------------------------
 # Packed-binary path (the 10^12-scale physical layout).
 #
@@ -168,12 +105,8 @@ def repair_sequences(df: DataFrame, params: EngineParams = DEFAULT_PARAMS,
 # row (no per-element assembly), Arrow ships one buffer, and the Python
 # worker reads it zero-copy via np.frombuffer. Measured on this box, the
 # packed path roughly doubles pipeline throughput and fixes 8->32-core
-# scaling (see BENCH.md); pack/unpack adapters keep both views equivalent.
+# scaling (see BENCH.md); make_pack_udf converts the list view to it.
 # ---------------------------------------------------------------------------
-REPAIR_BIN_STRUCT = ("struct<tokens_bin:binary,coverage:double,wm_token:int,"
-                     "pass_count:int>")
-
-
 def make_pack_udf():
     """array<int32> -> little-endian int32 binary blob."""
 
@@ -183,137 +116,6 @@ def make_pack_udf():
                           for t in tokens.to_numpy()])
 
     return pack
-
-
-def unpack_tokens(col: Column) -> "Column":
-    """binary blob -> array<int32>, JVM-side would need a codegen expr; the
-    engine keeps the packed form end-to-end and only unpacks for display or
-    parity checks (Arrow UDF)."""
-    @pandas_udf("array<int>")
-    def unpack(b: pd.Series) -> pd.Series:
-        return pd.Series([np.frombuffer(x, dtype="<i4") for x in b.to_numpy()])
-    return unpack(col)
-
-
-def make_repair_bin_udf(params: EngineParams = DEFAULT_PARAMS):
-    """Fused multi-pass detect+repair over packed binary token payloads.
-    Whole-batch: one join of the byte blobs -> one flat int32 buffer."""
-    p = params
-
-    @pandas_udf(REPAIR_BIN_STRUCT)
-    def repair_bin(tb: pd.Series, wm: pd.Series) -> pd.DataFrame:
-        from .repair_vectorized import repair_batch
-        blobs = tb.to_numpy()
-        B = len(blobs)
-        if B == 0:
-            return pd.DataFrame({"tokens_bin": [], "coverage": [],
-                                 "wm_token": [], "pass_count": []})
-        lengths = np.fromiter((len(b) // 4 for b in blobs), dtype=np.int64,
-                              count=B)
-        offsets = np.zeros(B + 1, dtype=np.int64)
-        np.cumsum(lengths, out=offsets[1:])
-        flat = np.frombuffer(b"".join(blobs), dtype="<i4")
-        out, cov, wm_out, npass = repair_batch(
-            flat, offsets, p, wm_in=_wm_series_to_batch(wm))
-        ob = out.astype("<i4", copy=False).tobytes()
-        return pd.DataFrame({
-            "tokens_bin": [ob[offsets[i] * 4:offsets[i + 1] * 4]
-                           for i in range(B)],
-            "coverage": cov,
-            "wm_token": [None if w < 0 else int(w) for w in wm_out],
-            "pass_count": npass})
-
-    return repair_bin
-
-
-def repair_sequences_packed(df: DataFrame,
-                            params: EngineParams = DEFAULT_PARAMS,
-                            wm_token: Column | None = None) -> DataFrame:
-    """Packed flavor of repair_sequences: expects a `tokens_bin` column."""
-    wm = wm_token if wm_token is not None else F.lit(None).cast("int")
-    r = make_repair_bin_udf(params)(F.col("tokens_bin"), wm)
-    keep = [c for c in ("doc_id", "seq_no", "event_ts", "source", "n_tok")
-            if c in df.columns]
-    return (df.withColumn("_r", r)
-              .select(*keep, F.col("_r.tokens_bin").alias("tokens_bin"),
-                      F.col("_r.coverage").alias("coverage"),
-                      F.col("_r.wm_token").alias("wm_token"),
-                      F.col("_r.pass_count").alias("pass_count")))
-
-
-# ---------------------------------------------------------------------------
-# Bit-packed mask (the X6 shuffle layout): array<boolean> costs ~1 byte per
-# token (plus offsets) across the stream-stream join shuffle; np.packbits to
-# a `binary` column divides the mask's shuffle bytes by 8 — the 100 TB wire
-# format for detect_masks -> join -> repair.
-# ---------------------------------------------------------------------------
-DETECT_BIN_STRUCT = ("struct<mask_bin:binary,n_tok:int,wm_token:int,"
-                     "coverage:double>")
-
-
-def make_detect_bin_udf(params: EngineParams = DEFAULT_PARAMS):
-    """detect_batch -> bit-packed masks (mask_bin = packbits, n_tok carries
-    the unpadded length)."""
-    p = params
-
-    @pandas_udf(DETECT_BIN_STRUCT)
-    def detect_bin(tokens: pd.Series, wm: pd.Series) -> pd.DataFrame:
-        from .repair_vectorized import detect_batch, flatten_arrays
-        flat, offsets = flatten_arrays(tokens)
-        B = offsets.size - 1
-        if B == 0:
-            return pd.DataFrame({"mask_bin": [], "n_tok": [],
-                                 "wm_token": [], "coverage": []})
-        mask_flat, wm_out, cov = detect_batch(
-            np.asarray(flat, dtype=np.int32), offsets, p,
-            wm_in=_wm_series_to_batch(wm))
-        return pd.DataFrame({
-            "mask_bin": [np.packbits(mask_flat[offsets[i]:offsets[i + 1]])
-                         .tobytes() for i in range(B)],
-            "n_tok": (offsets[1:] - offsets[:-1]).astype(np.int32),
-            "wm_token": [None if w < 0 else int(w) for w in wm_out],
-            "coverage": cov})
-
-    return detect_bin
-
-
-def make_apply_mask_bin_udf(params: EngineParams = DEFAULT_PARAMS):
-    """K2 with a bit-packed mask column (the post-join repair of the packed
-    X6 pipeline): unpackbits per row -> whole-batch apply_mask_batch."""
-    p = params
-
-    @pandas_udf("array<int>")
-    def apply_mask_bin(tokens: pd.Series, mask_bin: pd.Series) -> pd.Series:
-        from .repair_vectorized import apply_mask_batch, flatten_arrays
-        flat, offsets = flatten_arrays(tokens)
-        B = offsets.size - 1
-        if B == 0:
-            return pd.Series([], dtype=object)
-        lengths = offsets[1:] - offsets[:-1]
-        blobs = mask_bin.to_numpy()
-        mflat = np.concatenate(
-            [np.unpackbits(np.frombuffer(blobs[i], dtype=np.uint8),
-                           count=int(lengths[i]))
-             for i in range(B)]).view(bool)
-        out = apply_mask_batch(np.asarray(flat, dtype=np.int32), mflat,
-                               offsets, p)
-        return pd.Series([out[offsets[i]:offsets[i + 1]] for i in range(B)])
-
-    return apply_mask_bin
-
-
-def detect_masks_packed(df: DataFrame, params: EngineParams = DEFAULT_PARAMS,
-                        wm_token: Column | None = None) -> DataFrame:
-    """detect_masks flavor emitting the bit-packed mask (X6 wire format)."""
-    wm = wm_token if wm_token is not None else F.lit(None).cast("int")
-    d = make_detect_bin_udf(params)(F.col("tokens"), wm)
-    keep = [c for c in ("doc_id", "seq_no", "event_ts", "source")
-            if c in df.columns]
-    return (df.withColumn("_d", d)
-              .select(*keep, F.col("_d.mask_bin").alias("mask_bin"),
-                      F.col("_d.n_tok").alias("n_tok"),
-                      F.col("_d.wm_token").alias("wm_token"),
-                      F.col("_d.coverage").alias("coverage")))
 
 
 # ---------------------------------------------------------------------------
@@ -341,18 +143,19 @@ def repair_with_marker_spans(df: DataFrame,
              .withColumn("_span", span)
              .withColumn("_merged", mx.mask_or(F.col("_d.mask"),
                                                F.col("_span"))))
-    rep = make_apply_mask_udf(params)(F.col("tokens"), F.col("_merged"))
     keep = [c for c in ("doc_id", "seq_no", "event_ts", "source", "n_tok")
             if c in df.columns]
-    return (stage.select(
+    merged = stage.select(
         *keep,
         F.col("_d.wm_token").alias("wm_token"),
         mx.mask_count(F.col("_d.mask")).alias("detect_cnt"),
         mx.mask_count(F.col("_span")).alias("span_cnt"),
         mx.mask_count(F.col("_merged")).alias("merged_cnt"),
-        rep.alias("tokens"),
+        "tokens",
         F.col("_d.mask").alias("detect_mask"),
-        F.col("_merged").alias("merged_mask")))
+        F.col("_merged").alias("mask"))
+    return apply_masks(merged, params).withColumnRenamed("mask",
+                                                         "merged_mask")
 
 
 def make_auto_detect_udf(params: EngineParams = DEFAULT_PARAMS):

@@ -1,7 +1,10 @@
-"""Batch-vectorized repair kernel over the flat Arrow buffer (mapInArrow).
+"""Batch-vectorized repair kernels and their mapInArrow operators.
 
-The pandas-UDF path (operators/repair.py) loops rows inside the batch; this
-path vectorizes ACROSS rows: a micro-batch's token lists arrive as one flat
+The repair operators here are the engine's only Python boundary for the
+two repair kernels: `repair_sequences` (list layout) and
+`repair_sequences_arrow_packed` (packed layout) run the fused detect+repair
+K1+K2, and `apply_masks` runs K2 with a given mask. Each is one mapInArrow
+that vectorizes ACROSS rows: a micro-batch's token lists arrive as one flat
 int32 values buffer + offsets (zero-copy from Arrow's ListArray/BinaryArray
 buffers), and every stage runs as whole-batch NumPy:
 
@@ -160,28 +163,7 @@ def _span_filter_runs(s, e, rows, min_run, max_run):
     return s[keep], e[keep], rows[keep]
 
 
-# Flat-mask wrappers (kept for the mask-space callers: text protection and
-# the detection chain's final mask materialization)
-def _dilate_flat(m, offsets, k, iters=1):
-    if k <= 1 or iters <= 0:
-        return m.copy()
-    s, e, rows = _spans_rowwise(m, offsets)
-    if s.size == 0:
-        return m.copy()
-    s, e, rows = _span_dilate(s, e, rows, offsets, k, iters)
-    return _write_spans(s, e, m.size)
-
-
-def _erode_flat(m, offsets, k, iters=1):
-    if k <= 1 or iters <= 0:
-        return m.copy()
-    s, e, rows = _spans_rowwise(m, offsets)
-    if s.size == 0:
-        return m.copy()
-    s, e, rows = _span_erode(s, e, rows, offsets, k, iters)
-    return _write_spans(s, e, m.size)
-
-
+# Flat-mask wrappers (kept for the mask-space detection chains)
 def _open_flat(m, offsets, k, iters=1):
     s, e, rows = _spans_rowwise(m, offsets)
     if s.size == 0:
@@ -566,134 +548,193 @@ def flatten_arrays(series) -> tuple[np.ndarray, np.ndarray]:
     return flat, offsets
 
 
-def _as_plain(col, typ):
-    """Pass-through column -> exactly the declared output type (parquet scans
-    hand mapInArrow dictionary-encoded strings, which Spark cannot read back
-    through a plain-string output schema)."""
-    import pyarrow as pa
-    if isinstance(col, pa.ChunkedArray):
-        col = col.combine_chunks()
-    if col.type != typ:
-        col = col.cast(typ)
-    return col
-
-
 # ---------------------------------------------------------------------------
-# mapInArrow operator: zero-copy in and out for both physical layouts.
+# mapInArrow operators: the only Python boundary of the repair kernels.
+# Each operator selects just the columns it reads or passes through, decodes
+# the token column zero-copy into (flat, offsets), runs one whole-batch
+# kernel and re-encodes the result, carrying the input's null bitmap so a
+# NULL row stays NULL (its other fields are those of an empty row).
 # ---------------------------------------------------------------------------
-# Key columns passed through (same list as repair.repair_sequences, so the
-# arrow and pandas engine paths emit identical schemas and the sink's
-# masked_tokens lineage metric survives either path)
+# Key columns the list operator passes through when present (the sink's
+# masked_tokens lineage metric needs n_tok)
 _KEEP_COLS = ("doc_id", "seq_no", "event_ts", "source", "n_tok")
 
 
 def _passthrough(b, name):
-    """Input column -> plain (non-dictionary) array for re-emission.
-
-    Parquet scans hand mapInArrow dictionary-encoded strings, which Spark
-    cannot read back through a plain output schema — decode those; other
-    types pass through unchanged (their Arrow type already matches Spark's
-    expectation since Spark produced them)."""
+    """Input column for re-emission. Parquet scans may hand mapInArrow
+    dictionary-encoded strings, which Spark cannot read back through a
+    plain output schema; those are decoded, everything else is reused."""
     import pyarrow as pa
-    col = b.column(b.schema.get_field_index(name))
-    if isinstance(col, pa.ChunkedArray):
-        col = col.combine_chunks()
-    if pa.types.is_dictionary(col.type):
-        col = col.dictionary_decode()
-    return col
+    col = b.column(name)
+    return col.dictionary_decode() if pa.types.is_dictionary(col.type) else col
 
 
-def repair_sequences_arrow(df, params: EngineParams = DEFAULT_PARAMS):
-    """sequences -> repaired via mapInArrow (whole-batch vectorized kernel).
+def _validity(col):
+    """The column's null bitmap rebased to offset 0 (None: no NULL rows)."""
+    import pyarrow.compute as pc
+    return None if col.null_count == 0 else pc.is_valid(col).buffers()[1]
 
-    Reads the ListArray's values/offsets buffers directly; emits a new
-    ListArray over the repaired flat buffer — no per-row Python objects.
-    Passes every present key column (doc_id/seq_no/event_ts/source/n_tok)
-    through so the output schema matches repair.repair_sequences exactly."""
+
+def _buffer(col, i, dtype):
+    buf = col.buffers()[i]
+    return np.empty(0, dtype) if buf is None else np.frombuffer(buf, dtype)
+
+
+def _binary_offsets(col) -> np.ndarray:
+    """BinaryArray byte offsets (len + 1, int64), slice-aware."""
+    return _buffer(col, 1, np.int32)[col.offset:col.offset + len(col) + 1] \
+        .astype(_I64)
+
+
+def _decode_list(col):
+    """ListArray<int32> -> (flat int32, offsets int64 from 0)."""
+    offsets = col.offsets.to_numpy().astype(_I64)
+    flat = col.values.to_numpy(zero_copy_only=False)[offsets[0]:offsets[-1]]
+    return np.ascontiguousarray(flat, dtype=np.int32), offsets - offsets[0]
+
+
+def _encode_list(out, offsets, validity):
+    import pyarrow as pa
+    return pa.Array.from_buffers(
+        pa.list_(pa.int32()), offsets.size - 1,
+        [validity, pa.py_buffer(offsets.astype(np.int32))],
+        children=[pa.array(out, type=pa.int32())])
+
+
+def _decode_bin(col):
+    """Packed BinaryArray: its data buffer IS the flat little-endian int32
+    token buffer (offsets in bytes / 4). The read-only view goes straight
+    into the kernels, which copy into their output and never mutate it."""
+    byte_offsets = _binary_offsets(col)
+    base = byte_offsets[0] // 4
+    offsets = byte_offsets // 4 - base
+    return _buffer(col, 2, np.int32)[base:base + offsets[-1]], offsets
+
+
+def _encode_bin(out, offsets, validity):
+    """Zero-copy out: py_buffer wraps the numpy arrays directly."""
+    import pyarrow as pa
+    return pa.BinaryArray.from_buffers(
+        pa.binary(), offsets.size - 1,
+        [validity, pa.py_buffer((offsets * 4).astype(np.int32)),
+         pa.py_buffer(out)])
+
+
+def _repair_operator(df, params, keep, tok_col, tok_type, decode, encode,
+                     wm_token=None):
+    """Fused multi-pass detect+repair (K1+K2) over one token layout:
+    `keep` columns pass through, `tok_col` is repaired, and coverage,
+    wm_token and pass_count are appended. `wm_token` (a Column, NULL =
+    self-detect) gives a row's watermark token to repair_batch."""
     import pyarrow as pa
 
     p = params
-    keep = [c for c in _KEEP_COLS if c in df.columns]
-    in_types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
+    has_wm = wm_token is not None
+    pruned = df.select(*keep, tok_col, *([wm_token.cast("int").alias("_wm_in")]
+                                         if has_wm else []))
+    fields = pruned.schema.fields[:len(keep)]
+    keep_names = [f.name for f in fields]
+    names = keep_names + [tok_col, "coverage", "wm_token", "pass_count"]
     out_schema = ", ".join(
-        [f"{c} {in_types[c]}" for c in keep]
-        + ["tokens array<int>", "coverage double", "wm_token int",
+        [f"{f.name} {f.dataType.simpleString()}" for f in fields]
+        + [f"{tok_col} {tok_type}", "coverage double", "wm_token int",
            "pass_count int"])
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for b in batches:
-            toks = b.column(b.schema.get_field_index("tokens"))
-            if isinstance(toks, pa.ChunkedArray):
-                toks = toks.combine_chunks()
-            lst = toks
-            offsets = lst.offsets.to_numpy(zero_copy_only=False).astype(_I64)
-            flat = lst.values.to_numpy(zero_copy_only=False)
-            # Arrow list offsets may not start at 0 when sliced
-            base = offsets[0]
-            flat = flat[base:offsets[-1]]
-            offsets = offsets - base
-            out, cov, wm, npass = repair_batch(
-                np.ascontiguousarray(flat, dtype=np.int32), offsets, p)
-            out_list = pa.ListArray.from_arrays(
-                pa.array(offsets, type=pa.int32()),
-                pa.array(out, type=pa.int32()))
-            wm_arr = pa.array(np.where(wm < 0, None, wm).tolist(),
-                              type=pa.int32())
+            col = b.column(tok_col)
+            flat, offsets = decode(col)
+            wm_in = (b.column("_wm_in").fill_null(-1).to_numpy() if has_wm
+                     else None)
+            out, cov, wm_out, npass = repair_batch(flat, offsets, p,
+                                                   wm_in=wm_in)
             yield pa.RecordBatch.from_arrays(
-                [_passthrough(b, c) for c in keep]
-                + [out_list, pa.array(cov, type=pa.float64()), wm_arr,
-                   pa.array(npass, type=pa.int32())],
-                keep + ["tokens", "coverage", "wm_token", "pass_count"])
+                [_passthrough(b, c) for c in keep_names]
+                + [encode(out, offsets, _validity(col)), pa.array(cov),
+                   pa.array(wm_out, mask=wm_out < 0), pa.array(npass)],
+                names)
 
-    return df.mapInArrow(fn, out_schema)
+    return pruned.mapInArrow(fn, out_schema)
+
+
+def repair_sequences(df, params: EngineParams = DEFAULT_PARAMS,
+                     wm_token=None):
+    """sequences (tokens array<int>) -> repaired: the present key columns
+    (doc_id/seq_no/event_ts/source/n_tok), the repaired tokens, coverage,
+    wm_token and pass_count. `wm_token` is an optional per-row int Column
+    of given watermark tokens; NULL rows self-detect."""
+    return _repair_operator(df, params,
+                            [c for c in _KEEP_COLS if c in df.columns],
+                            "tokens", "array<int>", _decode_list,
+                            _encode_list, wm_token)
 
 
 def repair_sequences_arrow_packed(df, params: EngineParams = DEFAULT_PARAMS):
-    """Packed-binary flavor: the BinaryArray's data buffer IS the flat int32
-    token buffer (offsets in bytes / 4)."""
+    """Packed-binary layout (tokens_bin = little-endian int32 blob) ->
+    doc_id string, seq_no long, source string, tokens_bin binary, coverage
+    double, wm_token int, pass_count int."""
+    from pyspark.sql import functions as F
+    keep = [F.col("doc_id").cast("string").alias("doc_id"),
+            F.col("seq_no").cast("long").alias("seq_no"),
+            F.col("source").cast("string").alias("source")]
+    return _repair_operator(df, params, keep, "tokens_bin", "binary",
+                            _decode_bin, _encode_bin)
+
+
+def _mask_flat(col, offsets) -> np.ndarray:
+    """Mask column aligned with the token rows `offsets` -> flat bool mask.
+    Takes array<boolean> or packbits binary (padded to whole bytes, so each
+    row's length comes from its tokens)."""
     import pyarrow as pa
+    lengths = np.diff(offsets)
+    if pa.types.is_binary(col.type):
+        bo = _binary_offsets(col)
+        bits = np.unpackbits(_buffer(col, 2, np.uint8)[bo[0]:bo[-1]]) \
+            .view(bool)
+        bo = bo - bo[0]
+        starts, have = bo[:-1] * 8, np.diff(bo) * 8
+    else:
+        mo = col.offsets.to_numpy().astype(_I64)
+        bits = col.values.to_numpy(zero_copy_only=False)[mo[0]:mo[-1]]
+        mo = mo - mo[0]
+        starts, have = mo[:-1], np.diff(mo)
+    if (have < lengths).any():
+        raise ValueError("a mask row is shorter than its tokens row")
+    if np.array_equal(starts, offsets[:-1]):
+        return bits[:offsets[-1]]
+    return bits[np.repeat(starts - offsets[:-1], lengths)
+                + np.arange(offsets[-1])]
+
+
+def apply_masks(df, params: EngineParams = DEFAULT_PARAMS):
+    """K2 (inpaint + blend with a GIVEN mask), the post-join repair of the
+    stream-stream pipeline (X6 -> repair) and of the marker-span merge.
+    Reads `tokens` and the mask, `mask` (array<boolean>) or the bit-packed
+    `mask_bin` (whichever is present), and returns its input with `tokens`
+    repaired; empty-mask rows pass through unchanged (P10)."""
+    import pyarrow as pa
+    from pyspark.sql.types import (ArrayType, IntegerType, StructField,
+                                   StructType)
 
     p = params
+    mask_col = "mask_bin" if "mask_bin" in df.columns else "mask"
+    out_schema = StructType([
+        StructField("tokens", ArrayType(IntegerType())) if f.name == "tokens"
+        else f for f in df.schema.fields])
+    names = df.columns
+    tok_i = names.index("tokens")
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for b in batches:
-            col = b.column(b.schema.get_field_index("tokens_bin"))
-            if isinstance(col, pa.ChunkedArray):
-                col = col.combine_chunks()
-            byte_offsets = np.frombuffer(col.buffers()[1], dtype=np.int32,
-                                         count=len(col) + 1 + col.offset)
-            byte_offsets = byte_offsets[col.offset:].astype(_I64)
-            data = np.frombuffer(col.buffers()[2], dtype=np.int32)
-            base = byte_offsets[0] // 4
-            offsets = byte_offsets // 4 - base
-            # read-only frombuffer view goes straight in: repair_batch copies
-            # into its output buffer and never mutates the input
-            flat = data[base:base + offsets[-1]]
-            out, cov, wm, npass = repair_batch(flat, offsets, p)
-            # zero-copy out: py_buffer wraps the numpy arrays directly
-            out_bin = pa.BinaryArray.from_buffers(
-                pa.binary(), len(col),
-                [None, pa.py_buffer((offsets * 4).astype(np.int32)),
-                 pa.py_buffer(out)])
-            wm_arr = pa.array(np.where(wm < 0, None, wm).tolist(),
-                              type=pa.int32())
-            yield pa.RecordBatch.from_arrays(
-                [_as_plain(b.column(b.schema.get_field_index("doc_id")),
-                           pa.string()),
-                 _as_plain(b.column(b.schema.get_field_index("seq_no")),
-                           pa.int64()),
-                 _as_plain(b.column(b.schema.get_field_index("source")),
-                           pa.string()),
-                 out_bin,
-                 pa.array(cov, type=pa.float64()),
-                 wm_arr,
-                 pa.array(npass, type=pa.int32())],
-                ["doc_id", "seq_no", "source", "tokens_bin", "coverage",
-                 "wm_token", "pass_count"])
+            toks = b.column("tokens")
+            flat, offsets = _decode_list(toks)
+            out = apply_mask_batch(flat, _mask_flat(b.column(mask_col),
+                                                    offsets), offsets, p)
+            cols = [_passthrough(b, c) for c in names]
+            cols[tok_i] = _encode_list(out, offsets, _validity(toks))
+            yield pa.RecordBatch.from_arrays(cols, names)
 
-    return df.mapInArrow(fn, "doc_id string, seq_no long, source string, "
-                             "tokens_bin binary, coverage double, "
-                             "wm_token int, pass_count int")
+    return df.mapInArrow(fn, out_schema)
 
 
 def repair_text_arrow(df, params: EngineParams = DEFAULT_PARAMS):
@@ -706,6 +747,7 @@ def repair_text_arrow(df, params: EngineParams = DEFAULT_PARAMS):
     Input: (doc_id, source, text); output per-doc repair stats (no token
     lists shipped back — the aggregate shape used by q40)."""
     import pyarrow as pa
+    from pyspark.sql import functions as F
 
     p = params
 
@@ -743,23 +785,20 @@ def repair_text_arrow(df, params: EngineParams = DEFAULT_PARAMS):
             c[0] = 0
             np.cumsum(out, dtype=np.int64, out=c[1:])
             token_sum = c[offsets[1:]] - c[offsets[:-1]]
-            wm_arr = pa.array(np.where(wm < 0, None, wm).tolist(),
-                              type=pa.int32())
             yield pa.RecordBatch.from_arrays(
-                [_as_plain(b.column(b.schema.get_field_index("doc_id")),
-                           pa.int64()),
-                 _as_plain(b.column(b.schema.get_field_index("source")),
-                           pa.string()),
+                [_passthrough(b, "doc_id"), _passthrough(b, "source"),
                  pa.array(np.diff(offsets), type=pa.int64()),
                  pa.array(cov, type=pa.float64()),
-                 wm_arr,
+                 pa.array(wm, mask=wm < 0),
                  pa.array(npass, type=pa.int32()),
                  pa.array(changed, type=pa.int64()),
                  pa.array(token_sum, type=pa.int64())],
                 ["doc_id", "source", "n_out", "coverage", "wm_token",
                  "pass_count", "changed_tokens", "token_sum"])
 
-    return df.mapInArrow(
+    return df.select(
+        F.col("doc_id").cast("long").alias("doc_id"),
+        F.col("source").cast("string").alias("source"), "text").mapInArrow(
         fn, "doc_id long, source string, n_out long, coverage double, "
             "wm_token int, pass_count int, changed_tokens long, "
             "token_sum long")

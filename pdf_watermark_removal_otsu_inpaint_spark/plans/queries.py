@@ -2866,26 +2866,25 @@ FROM repaired GROUP BY vec_id
 """)
 def q49(spark, sf_dir):
     """Cross-paradigm oracle for the FULL single-pass repair: the Spark side
-    runs the kernel chain (detect UDF -> K2 inpaint+blend UDF); the DuckDB
-    side re-derives the mask via gaps-and-islands morphology (q48) and
+    runs the kernel chain (detect UDF -> apply_masks K2 inpaint+blend); the
+    DuckDB side re-derives the mask via gaps-and-islands morphology (q48) and
     computes the distance-weighted / plateau fill values with pure integer
     SQL. Per-row token sums and position-weighted sums must match — a
     value-level relational check of the inpaint kernel on non-empty masks
     for every row."""
-    from ..operators.repair import make_apply_mask_udf, make_detect_udf
+    from ..operators.repair import make_detect_udf
+    from ..operators.repair_vectorized import apply_masks
     from ..params import DEFAULT_PARAMS
     df = _emb_tokens(spark, sf_dir)
     params = DEFAULT_PARAMS.with_(min_run=2, max_run=64)
     d = make_detect_udf(params)(F.col("tokens"), F.lit(128))
-    rep = make_apply_mask_udf(params)(F.col("tokens"), F.col("_d.mask"))
+    masked = df.select("vec_id", "tokens", d["mask"].alias("mask"))
     weighted = F.aggregate(
-        F.zip_with(F.col("repaired"),
+        F.zip_with(F.col("tokens"),
                    F.sequence(F.lit(1), F.lit(64)),
                    lambda v, i: v.cast("long") * i.cast("long")),
         F.lit(0).cast("long"), lambda acc, x: acc + x)
-    total = F.aggregate(F.col("repaired"), F.lit(0).cast("long"),
+    total = F.aggregate(F.col("tokens"), F.lit(0).cast("long"),
                         lambda acc, x: acc + x.cast("long"))
-    return (df.withColumn("_d", d)
-            .withColumn("repaired", rep)
-            .select("vec_id", total.alias("token_sum"),
-                    weighted.alias("weighted_sum")))
+    return apply_masks(masked, params).select(
+        "vec_id", total.alias("token_sum"), weighted.alias("weighted_sum"))

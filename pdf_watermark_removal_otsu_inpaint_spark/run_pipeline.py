@@ -10,6 +10,10 @@ Streaming (exactly-once, resumable):
     spark-submit run_pipeline.py --mode stream --input <dir|table> \
         --output <dir> --checkpoint <dir>
 
+Both modes repair through one mapInArrow operator
+(operators.repair_vectorized.repair_sequences); --profiled (batch) uses the
+per-source tuned-parameter repair instead.
+
 The same module runs under plain `python` in local mode (the session
 factory creates local[$SPARK_GRAFT_CPUS] when no master is set).
 
@@ -38,8 +42,6 @@ def main(argv: list[str] | None = None) -> None:
     ap.add_argument("--no-protect-text", action="store_true")
     ap.add_argument("--profiled", action="store_true",
                     help="classify sources and auto-tune params (J2)")
-    ap.add_argument("--engine", choices=["pandas", "arrow"], default="pandas",
-                    help="kernel execution path (arrow = batch-vectorized)")
     ap.add_argument("--cpus", type=int, default=None)
     args = ap.parse_args(argv)
 
@@ -53,16 +55,14 @@ def main(argv: list[str] | None = None) -> None:
 
     if args.mode == "batch":
         from pdf_watermark_removal_otsu_inpaint_spark.operators.repair import (
-            repair_sequences, repair_with_profiles)
+            repair_with_profiles)
+        from pdf_watermark_removal_otsu_inpaint_spark.operators.repair_vectorized import (  # noqa: E501
+            repair_sequences)
         from pdf_watermark_removal_otsu_inpaint_spark.sources.tables import (
             read_sequences, write_sequences)
         df = read_sequences(spark, args.input)
         if args.profiled:
             out = repair_with_profiles(df, params)
-        elif args.engine == "arrow":
-            from pdf_watermark_removal_otsu_inpaint_spark.operators.repair_vectorized import (  # noqa: E501
-                repair_sequences_arrow)
-            out = repair_sequences_arrow(df, params)
         else:
             out = repair_sequences(df, params)
         write_sequences(out, args.output, mode="overwrite")
@@ -76,8 +76,7 @@ def main(argv: list[str] | None = None) -> None:
         from pdf_watermark_removal_otsu_inpaint_spark.streaming.pipeline import (
             run_repair_pipeline)
         seq = read_sequences_stream(spark, args.input)
-        q = run_repair_pipeline(seq, args.output, args.checkpoint, params,
-                                engine=args.engine)
+        q = run_repair_pipeline(seq, args.output, args.checkpoint, params)
         q.awaitTermination()
         print(f"stream drained -> {args.output}")
     spark.stop()

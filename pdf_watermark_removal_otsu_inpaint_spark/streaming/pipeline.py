@@ -4,8 +4,9 @@ the raw stream (X6) -> repair -> exactly-once sink (X7/X8), with event-time
 watermarks (X4) and explicit salting for hot sources (X9).
 
 One code path: the streaming transformations reuse the exact batch operators
-(histogram.windowed_histogram, repair.make_apply_mask_udf, detect UDFs), so
-batch parity == streaming parity.
+(histogram.windowed_histogram, the repair_vectorized mapInArrow operators
+repair_sequences and apply_masks, detect UDFs), so batch parity ==
+streaming parity.
 """
 
 from __future__ import annotations
@@ -13,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.repair import make_apply_mask_udf
+from ..operators.repair_vectorized import apply_masks, repair_sequences
 from ..params import DEFAULT_PARAMS, EngineParams
 from ..sources.synth import tok_expr
 from .sink import ExactlyOnceParquetSink
@@ -164,19 +165,15 @@ def join_masks_with_sequences(seq: DataFrame, masks: DataFrame,
 
 def repair_joined(joined: DataFrame,
                   params: EngineParams = DEFAULT_PARAMS) -> DataFrame:
-    """Apply the K2 inpaint kernel to (tokens, mask) pairs post-join; P10
-    empty-mask rows pass through inside the kernel. Accepts either mask
-    layout: array<boolean> or the bit-packed `mask_bin` binary (1/8 the
-    shuffle bytes across the X6 join — the 100 TB wire format)."""
-    if "mask_bin" in joined.columns:
-        from ..operators.repair import make_apply_mask_bin_udf
-        repaired = make_apply_mask_bin_udf(params)(F.col("tokens"),
-                                                   F.col("mask_bin"))
-    else:
-        repaired = make_apply_mask_udf(params)(F.col("tokens"), F.col("mask"))
-    return joined.select("doc_id", "seq_no", "event_ts", "source",
-                         repaired.alias("tokens"), "n_tok", "wm_token",
-                         "coverage")
+    """Apply the K2 inpaint kernel (apply_masks) to (tokens, mask) pairs
+    post-join; P10 empty-mask rows pass through inside the kernel. Accepts
+    either mask layout: array<boolean> or the bit-packed `mask_bin` binary
+    (1/8 the shuffle bytes across the X6 join — the 100 TB wire format)."""
+    mask_col = "mask_bin" if "mask_bin" in joined.columns else "mask"
+    return apply_masks(
+        joined.select("doc_id", "seq_no", "event_ts", "source", "tokens",
+                      "n_tok", "wm_token", "coverage", mask_col),
+        params).drop(mask_col)
 
 
 # --- streaming dedup: drop replayed/duplicate sequence rows at ingest ---------
@@ -210,13 +207,13 @@ def salted_source_stats(seq: DataFrame, n_salts: int = 8) -> DataFrame:
 # --- end-to-end wiring ---------------------------------------------------------
 def run_repair_pipeline(seq: DataFrame, out_dir: str, checkpoint_dir: str,
                         params: EngineParams = DEFAULT_PARAMS,
-                        trigger_once: bool = True, engine: str = "pandas"):
+                        trigger_once: bool = True):
     """sequences stream -> detect (in-batch) -> repair -> exactly-once sink.
 
-    The detect+repair here uses the fused batch operators inside foreachBatch
-    (one Arrow crossing); the X5/X6 stateful variants are separate entry
-    points above. engine="arrow" swaps in the batch-vectorized mapInArrow
-    kernel (same results, parity-tested). Returns the StreamingQuery."""
+    The detect+repair here is the fused mapInArrow operator
+    (repair_sequences) inside foreachBatch, one Arrow crossing per batch;
+    the X5/X6 stateful variants are separate entry points above. Returns
+    the StreamingQuery."""
     sink = ExactlyOnceParquetSink(out_dir)
     # A8 observability: per-batch ingest metrics surface in query progress
     # (and the ProgressCapture listener) without a second aggregation
@@ -224,12 +221,7 @@ def run_repair_pipeline(seq: DataFrame, out_dir: str, checkpoint_dir: str,
                       F.sum("n_tok").alias("tokens_in"))
 
     def process(batch_df, batch_id):
-        if engine == "arrow":
-            from ..operators.repair_vectorized import repair_sequences_arrow
-            sink(repair_sequences_arrow(batch_df, params), batch_id)
-        else:
-            from ..operators.repair import repair_sequences
-            sink(repair_sequences(batch_df, params), batch_id)
+        sink(repair_sequences(batch_df, params), batch_id)
 
     writer = (seq.writeStream.foreachBatch(process)
               .option("checkpointLocation", checkpoint_dir))
@@ -363,10 +355,7 @@ def run_window_detect_pipeline(seq: DataFrame, out_dir: str,
     back onto that window's rows and drives the fused repair with the token
     GIVEN (rows in windows with no qualifying token fall back to per-row
     self-detection, the engine default). Committed exactly-once."""
-    from pyspark.sql import functions as F
-
     from ..operators.histogram import dominant_token
-    from ..operators.repair import repair_sequences
     sink = ExactlyOnceParquetSink(out_dir)
 
     def process(batch_df, batch_id):

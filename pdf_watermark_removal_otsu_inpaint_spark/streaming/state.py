@@ -39,8 +39,8 @@ DETECT_STATE_OUTPUT = ("doc_id string, seq_no long, event_ts timestamp, "
 # stream-stream join SHUFFLE and inside the join's STATE STORE (each side
 # of an interval join buffers its rows in state until the watermark closes
 # them out) — at 2048 tokens that is ~2 KB -> 256 B per buffered row. The
-# post-join repair already dispatches on the mask column name
-# (pipeline.repair_joined -> make_apply_mask_bin_udf).
+# post-join repair reads either mask layout by column name
+# (pipeline.repair_joined -> repair_vectorized.apply_masks).
 DETECT_STATE_OUTPUT_PACKED = (
     "doc_id string, seq_no long, event_ts timestamp, "
     "source string, mask_bin binary, wm_token int, "

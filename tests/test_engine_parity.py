@@ -13,7 +13,9 @@ from pdf_watermark_removal_otsu_inpaint_spark.functions import mask_exprs as mx
 from pdf_watermark_removal_otsu_inpaint_spark.operators import histogram as oh
 from pdf_watermark_removal_otsu_inpaint_spark.operators import otsu as oo
 from pdf_watermark_removal_otsu_inpaint_spark.operators.repair import (
-    detect_masks, make_apply_mask_udf, repair_sequences)
+    detect_masks)
+from pdf_watermark_removal_otsu_inpaint_spark.operators.repair_vectorized import (  # noqa: E501
+    apply_masks, repair_sequences, repair_sequences_arrow_packed)
 from pdf_watermark_removal_otsu_inpaint_spark.params import DEFAULT_PARAMS
 from pdf_watermark_removal_otsu_inpaint_spark.sources.sequences import (
     generate_rows, sequences_df)
@@ -34,19 +36,20 @@ def test_repair_token_array_equality(spark, seq_df, seq_rows):
     tokens, for every row and scenario mix."""
     params = DEFAULT_PARAMS.with_(passes=2)
     out = (repair_sequences(seq_df, params)
-           .select("doc_id", "seq_no", "tokens", "coverage", "pass_count")
+           .select("doc_id", "seq_no", "tokens", "coverage", "wm_token",
+                   "pass_count")
            .collect())
     got = {(r.doc_id, r.seq_no): r for r in out}
     assert len(out) == len(seq_rows)
     checked = 0
     for row in seq_rows:
-        exp_t, exp_p, exp_c, _ = rk.remove_watermark_multi_pass(
+        exp_t, exp_p, exp_c, exp_w = rk.remove_watermark_multi_pass(
             np.array(row["tokens"]), passes=2)
         g = got[(row["doc_id"], row["seq_no"])]
         assert g.tokens == exp_t.astype(np.int32).tolist(), (
             f"token mismatch for {row['doc_id']}/{row['seq_no']} "
             f"scenario={row['scenario']}")
-        assert g.pass_count == exp_p
+        assert g.pass_count == exp_p and g.wm_token == exp_w
         assert abs(g.coverage - exp_c) < 1e-12
         checked += 1
     assert checked == len(seq_rows)
@@ -66,10 +69,8 @@ def test_apply_mask_matches_single_pass_repair(spark, seq_df, seq_rows):
     """detect -> apply_mask (the stream-join shape) == fused single-pass."""
     masked = detect_masks(seq_df).join(
         seq_df.select("doc_id", "seq_no", "tokens"), ["doc_id", "seq_no"])
-    out = (masked.withColumn("repaired",
-                             make_apply_mask_udf()(F.col("tokens"), F.col("mask")))
-           .select("doc_id", "seq_no", "repaired").collect())
-    got = {(r.doc_id, r.seq_no): r.repaired for r in out}
+    out = apply_masks(masked).select("doc_id", "seq_no", "tokens").collect()
+    got = {(r.doc_id, r.seq_no): r.tokens for r in out}
     for row in seq_rows:
         exp, _, _ = rk.remove_watermark(np.array(row["tokens"]))
         assert got[(row["doc_id"], row["seq_no"])] == exp.astype(np.int32).tolist()
@@ -126,31 +127,36 @@ def test_otsu_udf_matches_kernel(spark, seq_df, seq_rows):
 
 
 def test_repair_plan_shape(spark, seq_df):
-    """The fused path must be a single ArrowEvalPython over a pruned scan —
-    no shuffle, no extra Python stages."""
-    plan = repair_sequences(seq_df)._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("ArrowEvalPython") == 1
-    assert "Exchange" not in plan
+    """The fused path is one MapInArrow over the cached input — no shuffle,
+    no other Python stage, and only the columns it reads or passes through
+    cross into Python (seq_df's `scenario` column stays behind)."""
+    from tests.test_plan_hygiene import assert_single_arrow_map
+    assert_single_arrow_map(
+        repair_sequences(seq_df),
+        ["doc_id", "seq_no", "event_ts", "source", "n_tok", "tokens"])
 
 
-def test_packed_path_matches_list_path(spark, seq_df):
-    """The packed-binary physical layout produces identical results to the
-    input_hint array<int32> layout."""
+def test_packed_path_matches_list_path(spark, seq_df, seq_rows):
+    """The packed-binary physical layout gives the reference kernel's
+    tokens, coverage, wm_token and pass_count row by row, as the
+    array<int32> layout does (test_repair_token_array_equality)."""
     from pdf_watermark_removal_otsu_inpaint_spark.operators.repair import (
-        make_pack_udf, repair_sequences_packed)
+        make_pack_udf)
     params = DEFAULT_PARAMS.with_(passes=2)
-    lst = {(r.doc_id, r.seq_no): (r.tokens, r.coverage, r.wm_token, r.pass_count)
-           for r in repair_sequences(seq_df, params).collect()}
     packed_in = seq_df.withColumn("tokens_bin",
                                   make_pack_udf()(F.col("tokens"))) \
                       .drop("tokens")
-    got = repair_sequences_packed(packed_in, params).collect()
-    assert len(got) == len(lst)
-    for r in got:
-        exp_t, exp_c, exp_w, exp_p = lst[(r.doc_id, r.seq_no)]
-        assert np.frombuffer(r.tokens_bin, dtype="<i4").tolist() == exp_t
-        assert r.coverage == exp_c and r.wm_token == exp_w
-        assert r.pass_count == exp_p
+    got = {(r.doc_id, r.seq_no): r for r in
+           repair_sequences_arrow_packed(packed_in, params).collect()}
+    assert len(got) == len(seq_rows)
+    for row in seq_rows:
+        exp_t, exp_p, exp_c, exp_w = rk.remove_watermark_multi_pass(
+            np.array(row["tokens"]), passes=2)
+        g = got[(row["doc_id"], row["seq_no"])]
+        assert np.frombuffer(g.tokens_bin, dtype="<i4").tolist() == \
+            exp_t.astype(np.int32).tolist()
+        assert abs(g.coverage - exp_c) < 1e-12 and g.wm_token == exp_w
+        assert g.pass_count == exp_p
 
 
 def test_repair_with_profiles_matches_kernel(spark, seq_df, seq_rows):
@@ -242,27 +248,24 @@ def test_marker_span_merge_properties(spark, seq_df, seq_rows):
 
 
 def test_packed_mask_join_path_matches_unpacked(spark, seq_df, seq_rows):
-    """X6 wire format: the bit-packed mask (binary, 1/8 shuffle bytes)
-    through join + K2 repair produces token-identical results to the
-    array<boolean> layout."""
-    from pdf_watermark_removal_otsu_inpaint_spark.operators.repair import (
-        detect_masks_packed, make_apply_mask_bin_udf)
-    toks = seq_df.select("doc_id", "seq_no", "tokens")
-    plain = (detect_masks(seq_df).join(toks, ["doc_id", "seq_no"])
-             .withColumn("repaired",
-                         make_apply_mask_udf()(F.col("tokens"), F.col("mask")))
-             .select("doc_id", "seq_no", "repaired"))
-    packed = (detect_masks_packed(seq_df).join(toks, ["doc_id", "seq_no"])
-              .withColumn("repaired",
-                          make_apply_mask_bin_udf()(F.col("tokens"),
-                                                    F.col("mask_bin")))
-              .select("doc_id", "seq_no", "repaired"))
-    a = {(r.doc_id, r.seq_no): r.repaired for r in plain.collect()}
-    b = {(r.doc_id, r.seq_no): r.repaired for r in packed.collect()}
-    assert a == b and len(a) == len(seq_rows)
-    # and the packed wire format is genuinely ~8x smaller than bool masks
-    row = detect_masks_packed(seq_df).select("mask_bin", "n_tok").first()
-    assert len(row.mask_bin) == (row.n_tok + 7) // 8
+    """X6 wire format: bit-packed masks (packbits, (n_tok + 7) // 8 bytes)
+    joined back to the tokens and repaired by apply_masks give the
+    reference single-pass repair, as the array<boolean> layout does
+    (test_apply_mask_matches_single_pass_repair)."""
+    masks = spark.createDataFrame(
+        [(row["doc_id"], row["seq_no"],
+          np.packbits(rk.detect_refine(np.array(row["tokens"]))[0]).tobytes())
+         for row in seq_rows],
+        "doc_id string, seq_no long, mask_bin binary")
+    joined = masks.join(seq_df.select("doc_id", "seq_no", "tokens"),
+                        ["doc_id", "seq_no"])
+    got = {(r.doc_id, r.seq_no): r.tokens
+           for r in apply_masks(joined).collect()}
+    assert len(got) == len(seq_rows)
+    for row in seq_rows:
+        exp, _, _ = rk.remove_watermark(np.array(row["tokens"]))
+        assert got[(row["doc_id"], row["seq_no"])] == \
+            exp.astype(np.int32).tolist()
 
 
 def test_windowed_otsu_repair_matches_kernel(spark, seq_df, seq_rows):

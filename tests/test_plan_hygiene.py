@@ -5,6 +5,7 @@ shuffle. These lock in the Catalyst behavior SURVEY §4.2 relies on.
 """
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -62,15 +63,92 @@ def test_histogram_has_partial_aggregation(spark):
     assert p.index("Exchange") < p.rindex("HashAggregate")
 
 
+def assert_single_arrow_map(df, inputs: list[str]) -> None:
+    """The plan crosses into Python once, through one MapInArrow whose
+    input is exactly the `inputs` columns, with no shuffle."""
+    p = plan_of(df)
+    assert p.count("MapInArrow") == 1, p
+    assert p.count("ArrowEvalPython") == 0, p
+    assert p.count("Exchange") == 0, p
+    args = re.search(r"MapInArrow \w+\(([^)]*)\)", p).group(1)
+    assert [re.sub(r"#\d+L?$", "", a) for a in args.split(", ")] == inputs, p
+
+
 def test_repair_pipeline_is_shuffle_free(spark):
-    """The fused kernel path over a parquet scan adds no Exchange."""
-    from pdf_watermark_removal_otsu_inpaint_spark.operators.repair import (
-        repair_sequences)
+    """Each repair operator is one shuffle-free MapInArrow that reads only
+    the columns it repairs or passes through: the unrelated `scenario` and
+    `text` columns never cross into Python."""
+    import numpy as np
+
+    from pdf_watermark_removal_otsu_inpaint_spark.operators.repair_vectorized import (  # noqa: E501
+        repair_sequences, repair_sequences_arrow_packed)
     from pdf_watermark_removal_otsu_inpaint_spark.sources.sequences import (
-        sequences_df)
-    p = plan_of(repair_sequences(sequences_df(spark, 10)))
-    assert "Exchange" not in p
-    assert p.count("ArrowEvalPython") == 1
+        generate_rows, sequences_df)
+    from pdf_watermark_removal_otsu_inpaint_spark.streaming.pipeline import (
+        repair_joined)
+    df = sequences_df(spark, 10).withColumn("text", F.lit("unrelated"))
+    keys = ["doc_id", "seq_no", "event_ts", "source", "n_tok"]
+    assert_single_arrow_map(repair_sequences(df), keys + ["tokens"])
+    assert_single_arrow_map(repair_sequences(df, wm_token=F.lit(200)),
+                            keys + ["tokens", "_wm_in"])
+    packed = spark.createDataFrame(
+        [(r["doc_id"], r["seq_no"], r["source"],
+          np.asarray(r["tokens"], "<i4").tobytes(), "unrelated")
+         for r in generate_rows(10, seed=1)],
+        "doc_id string, seq_no long, source string, tokens_bin binary, "
+        "text string")
+    assert_single_arrow_map(repair_sequences_arrow_packed(packed),
+                            ["doc_id", "seq_no", "source", "tokens_bin"])
+    joined = df.select("*", F.transform("tokens", lambda t: t == 200)
+                       .alias("mask"), F.lit(200).alias("wm_token"),
+                       F.lit(0.0).alias("coverage"))
+    assert_single_arrow_map(repair_joined(joined),
+                            ["doc_id", "seq_no", "event_ts", "source",
+                             "tokens", "n_tok", "wm_token", "coverage",
+                             "mask"])
+
+
+# Every pandas_udf( under operators/ and streaming/, keyed by file and
+# enclosing function, with the reason it is not (yet) a mapInArrow operator.
+# The repair kernels cross only through repair_vectorized's mapInArrow
+# operators; streaming/ has no pandas UDF of its own.
+PANDAS_UDF_ALLOWED = {
+    "operators/repair.py::make_detect_udf":
+        "detect-only stage (detect_masks, q41/q48/q49/q50): next detect step",
+    "operators/repair.py::make_pack_udf":
+        "list -> packed layout adapter for fixtures and bench inputs",
+    "operators/repair.py::make_auto_detect_udf":
+        "opt-in automatic detection mode (q36): next detect step",
+    "operators/repair.py::make_repair_profiled_udf":
+        "per-row tuned params, batched per profile (q37, --profiled)",
+    "operators/otsu.py::make_otsu_udf":
+        "scalar Otsu on 256-bin vectors; only test_otsu_udf_matches_kernel",
+    "operators/otsu.py::make_threshold_repair_udf":
+        "per-row threshold repair (otsu_repair, q38): next repair step",
+    "operators/classify.py::make_classify_udf":
+        "one first-row classification per source (J2 profiles)",
+}
+
+
+def test_pandas_udf_sites_are_allow_listed():
+    """A new pandas-UDF twin of an Arrow operator fails here: every
+    pandas_udf( site must be in PANDAS_UDF_ALLOWED, and none may sit under
+    streaming/."""
+    import pathlib
+
+    import pdf_watermark_removal_otsu_inpaint_spark as pkg
+    root = pathlib.Path(pkg.__file__).parent
+    found = set()
+    for sub in ("operators", "streaming"):
+        for path in sorted((root / sub).glob("*.py")):
+            fn = None
+            for line in path.read_text().splitlines():
+                m = re.match(r"def (\w+)", line)
+                fn = m.group(1) if m else fn
+                if "pandas_udf(" in line:
+                    found.add(f"{sub}/{path.name}::{fn}")
+    assert not [f for f in found if f.startswith("streaming/")]
+    assert found == set(PANDAS_UDF_ALLOWED)
 
 
 def test_dedup_queries_have_no_all_pairs_join(spark):
@@ -227,7 +305,6 @@ def test_stateful_code_keeps_no_pickled_state():
     and no operator in the package is built on applyInPandasWithState (the
     one stateful operator uses transformWithStateInPandas)."""
     import pathlib
-    import re
 
     import pdf_watermark_removal_otsu_inpaint_spark as pkg
     root = pathlib.Path(pkg.__file__).parent

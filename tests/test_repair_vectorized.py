@@ -1,6 +1,7 @@
 """Batch-vectorized kernel == per-row reference kernel, token-array equality
-on every fixture scenario plus randomized arrays, and the mapInArrow
-operators == the pandas-UDF operators on Spark."""
+on every fixture scenario plus randomized arrays, and each mapInArrow
+operator == the reference kernel row by row on Spark, NULL, empty and
+1-token rows included."""
 
 import numpy as np
 import pytest
@@ -22,12 +23,13 @@ def _flat(rows):
     return np.concatenate(arrs) if arrs else np.empty(0, np.int32), offsets
 
 
-def _expected(rows, params):
+def _expected(rows, params, wm_in=None):
     outs, covs, wms, nps = [], [], [], []
-    for r in rows:
+    for i, r in enumerate(rows):
+        w = None if wm_in is None or wm_in[i] < 0 else wm_in[i]
         out, n, cov, wm = rk.remove_watermark_multi_pass(
             np.asarray(r, dtype=np.int32), params.passes,
-            None, params.color_tolerance, params.kernel_size,
+            w, params.color_tolerance, params.kernel_size,
             params.protect_text, params.text_expand, params.min_run,
             params.max_run, params.inpaint_radius, params.inpaint_strength)
         outs.append(out.astype(np.int32))
@@ -80,48 +82,157 @@ def test_random_rows_batch_equal(rows, passes):
     _check(rows, DEFAULT_PARAMS.with_(passes=passes, min_run=3, max_run=40))
 
 
-def test_spark_arrow_operator_matches_pandas_udf(spark):
-    from pyspark.sql import functions as F
+def _seq_frame(spark, rows, packed=False):
+    """Sequences DataFrame over token lists (None = a NULL row), doc_id
+    "d<i>", plus an unrelated `text` column no operator should read."""
+    import datetime as dt
 
-    from pdf_watermark_removal_otsu_inpaint_spark.operators.repair import (
-        make_pack_udf, repair_sequences)
-    from pdf_watermark_removal_otsu_inpaint_spark.operators.repair_vectorized import (
-        repair_sequences_arrow, repair_sequences_arrow_packed)
-    from pdf_watermark_removal_otsu_inpaint_spark.sources.sequences import (
-        sequences_df)
-    df = sequences_df(spark, 50, seed=15)
+    def enc(r):
+        if r is None or not packed:
+            return r
+        return np.asarray(r, dtype="<i4").tobytes()
+    col = "tokens_bin binary" if packed else "tokens array<int>"
+    return spark.createDataFrame(
+        [(f"d{i}", enc(r), 0 if r is None else len(r), "web",
+          dt.datetime(2026, 1, 1), i, "unrelated")
+         for i, r in enumerate(rows)],
+        f"doc_id string, {col}, n_tok int, source string, "
+        "event_ts timestamp, seq_no long, text string")
+
+
+def _check_operator(out, rows, params, wms=None, packed=False):
+    """Operator output rows == the reference kernel per input row; a NULL
+    input row comes out NULL with the fields an empty row gets."""
+    got = {r.doc_id: r for r in out.collect()}
+    assert len(got) == len(rows)
+    live = [i for i, r in enumerate(rows) if r is not None]
+    exp_t, exp_c, exp_w, exp_p = _expected(
+        [rows[i] for i in live], params,
+        None if wms is None else [wms[i] for i in live])
+    for j, i in enumerate(live):
+        g = got[f"d{i}"]
+        toks = (np.frombuffer(g.tokens_bin, "<i4").tolist() if packed
+                else g.tokens)
+        assert toks == exp_t[j].tolist(), f"row {i} tokens"
+        assert g.wm_token == (None if exp_w[j] < 0 else exp_w[j]), f"row {i}"
+        assert g.pass_count == exp_p[j] and abs(g.coverage - exp_c[j]) < 1e-12
+    for i, r in enumerate(rows):
+        if r is None:
+            g = got[f"d{i}"]
+            assert (g.tokens_bin if packed else g.tokens) is None
+            _, _, empty_w, _ = _expected([[]], params,
+                                         None if wms is None else [wms[i]])
+            assert (g.coverage, g.wm_token, g.pass_count) == (
+                0.0, None if empty_w[0] < 0 else empty_w[0], 0)
+
+
+def _tiny_batch():
+    """Normal rows with a NULL, an empty and a 1-token row between them."""
+    return ([scenario_tokens("wm_basic", 600).tolist(), None, [],
+             scenario_tokens("wm_multipass", 700).tolist(), [200],
+             [255] * 10])
+
+
+def test_spark_repair_operators_match_reference(spark):
+    """Both layouts of the fused detect+repair operator == the reference
+    kernel row by row on a generated scenario mix."""
+    from pdf_watermark_removal_otsu_inpaint_spark.operators.repair_vectorized import (  # noqa: E501
+        repair_sequences, repair_sequences_arrow_packed)
+    rows = [r["tokens"] for r in generate_rows(50, seed=15)]
     params = DEFAULT_PARAMS.with_(passes=2)
-    exp = {(r.doc_id, r.seq_no): (r.tokens, r.wm_token, r.pass_count)
-           for r in repair_sequences(df, params).collect()}
-    got = {(r.doc_id, r.seq_no): (r.tokens, r.wm_token, r.pass_count)
-           for r in repair_sequences_arrow(df, params).collect()}
-    assert got == exp
-    packed = df.withColumn("tokens_bin", make_pack_udf()(F.col("tokens"))) \
-        .drop("tokens")
-    got_b = {(r.doc_id, r.seq_no):
-             (np.frombuffer(r.tokens_bin, "<i4").tolist(), r.wm_token,
-              r.pass_count)
-             for r in repair_sequences_arrow_packed(packed, params).collect()}
-    assert got_b == exp
+    _check_operator(repair_sequences(_seq_frame(spark, rows), params),
+                    rows, params)
+    _check_operator(repair_sequences_arrow_packed(
+        _seq_frame(spark, rows, packed=True), params), rows, params,
+        packed=True)
 
 
 def test_empty_and_tiny_rows(spark):
-    """Degenerate rows (empty, single-token) flow through both kernel paths."""
+    """repair_sequences on a NULL, an empty and a 1-token row in one batch
+    with normal rows: NULL stays NULL, the rest equal the reference."""
+    from pdf_watermark_removal_otsu_inpaint_spark.operators.repair_vectorized import (  # noqa: E501
+        repair_sequences)
+    rows = _tiny_batch()
+    params = DEFAULT_PARAMS.with_(passes=2)
+    _check_operator(repair_sequences(_seq_frame(spark, rows).coalesce(1),
+                                     params), rows, params)
+
+
+def test_packed_empty_and_tiny_rows(spark):
+    """repair_sequences_arrow_packed on the same degenerate batch: a NULL
+    tokens_bin stays NULL instead of becoming b''."""
+    from pdf_watermark_removal_otsu_inpaint_spark.operators.repair_vectorized import (  # noqa: E501
+        repair_sequences_arrow_packed)
+    rows = _tiny_batch()
+    params = DEFAULT_PARAMS.with_(passes=2)
+    out = repair_sequences_arrow_packed(
+        _seq_frame(spark, rows, packed=True).coalesce(1), params)
+    assert out.columns == ["doc_id", "seq_no", "source", "tokens_bin",
+                           "coverage", "wm_token", "pass_count"]
+    _check_operator(out, rows, params, packed=True)
+
+
+def test_repair_sequences_given_wm_token(spark):
+    """Per-row wm_token: given, NULL (self-detect) and tokens that do not
+    occur in their row, mixed in one batch, == the reference kernel with
+    the same wm_token argument."""
+    from pyspark.sql import functions as F
+
+    from pdf_watermark_removal_otsu_inpaint_spark.operators.repair_vectorized import (  # noqa: E501
+        repair_sequences)
+    rows = [scenario_tokens(s, 900).tolist()
+            for s in ("wm_basic", "wm_multipass", "wm_gap", "wm_basic",
+                      "wm_none", "wm_textlike")] + [None]
+    detected = [rk.detect_wm_token(np.asarray(r)) for r in rows[:4]]
+    assert 77 not in rows[3] and 240 not in rows[4]
+    wms = [detected[0], None, detected[2], 77, 240, None, 200]
+    df = _seq_frame(spark, rows).coalesce(1).withColumn(
+        "_given", F.element_at(F.array(*[F.lit(w).cast("int") for w in wms]),
+                               F.col("seq_no").cast("int") + 1))
+    params = DEFAULT_PARAMS.with_(passes=2)
+    _check_operator(repair_sequences(df, params, wm_token=F.col("_given")),
+                    rows, params,
+                    wms=[-1 if w is None else w for w in wms])
+
+
+def test_apply_masks_empty_and_tiny_rows(spark):
+    """apply_masks on both mask layouts (array<boolean>, packbits
+    mask_bin): masked rows, empty-mask rows, a NULL tokens row, an empty row
+    and a 1-token row in one batch == the reference inpaint + blend; NULL
+    tokens stay NULL and every other column passes through."""
     import datetime as dt
 
-    from pdf_watermark_removal_otsu_inpaint_spark.operators.repair import (
-        repair_sequences)
-    from pdf_watermark_removal_otsu_inpaint_spark.operators.repair_vectorized import (
-        repair_sequences_arrow)
-    rows = [("d0", [], 0, "web", dt.datetime(2026, 1, 1), 0),
-            ("d1", [200], 1, "web", dt.datetime(2026, 1, 1), 0),
-            ("d2", [255] * 10, 10, "web", dt.datetime(2026, 1, 1), 0)]
-    df = spark.createDataFrame(
-        rows, "doc_id string, tokens array<int>, n_tok int, source string, "
-              "event_ts timestamp, seq_no long")
-    a = {r.doc_id: r.tokens for r in repair_sequences(df).collect()}
-    b = {r.doc_id: r.tokens for r in repair_sequences_arrow(df).collect()}
-    assert a == b == {"d0": [], "d1": [200], "d2": [255] * 10}
+    from pdf_watermark_removal_otsu_inpaint_spark.operators.repair_vectorized import (  # noqa: E501
+        apply_masks)
+    rows = _tiny_batch()
+    masks = [None if r is None else np.zeros(len(r), dtype=bool)
+             for r in rows]
+    masks[0][100:300] = True
+    masks[3][:40] = masks[3][333:350] = True   # one-sided and two-sided runs
+    masks[4][0] = True                         # the 1-token row, masked
+    # masks[5]: a non-empty row with an empty mask
+    exp = {}
+    for i, (r, m) in enumerate(zip(rows, masks)):
+        if r is not None and m.any():
+            a = np.asarray(r)
+            radius = rk.dynamic_radius(rk.coverage(m), 2, 1.0)
+            r = rk.blend(a, rk.inpaint_1d(a, m, radius), m, 1.0).tolist()
+        exp[f"d{i}"] = r
+    ts = dt.datetime(2026, 1, 1)
+    for layout, enc in (("mask array<boolean>",
+                         lambda m: m.tolist()),
+                        ("mask_bin binary",
+                         lambda m: np.packbits(m).tobytes())):
+        df = spark.createDataFrame(
+            [(f"d{i}", r, None if m is None else enc(m), ts)
+             for i, (r, m) in enumerate(zip(rows, masks))],
+            f"doc_id string, tokens array<int>, {layout}, event_ts timestamp"
+        ).coalesce(1)
+        out = apply_masks(df)
+        assert out.columns == df.columns, layout
+        got = {r.doc_id: r for r in out.collect()}
+        assert {k: g.tokens for k, g in got.items()} == exp, layout
+        assert all(g.event_ts == ts for g in got.values()), layout
 
 
 @settings(max_examples=40, deadline=None)
@@ -171,13 +282,11 @@ def test_empty_rows_in_batch_kernels():
 
 def test_fused_text_path_matches_split_ascii(spark):
     """repair_text_arrow (zero-copy UTF-8 tokenization) == the split+ascii
-    + per-row pandas path on the real documents table."""
+    token lists through repair_sequences on the real documents table."""
     from pyspark.sql import functions as F
 
-    from pdf_watermark_removal_otsu_inpaint_spark.operators.repair import (
-        repair_sequences)
     from pdf_watermark_removal_otsu_inpaint_spark.operators.repair_vectorized import (
-        repair_text_arrow)
+        repair_sequences, repair_text_arrow)
     from pdf_watermark_removal_otsu_inpaint_spark.plans.queries import (
         _char_tokens)
     sf = "/root/testdata/sf0.001"

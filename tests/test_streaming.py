@@ -15,7 +15,9 @@ from pyspark.sql.readwriter import DataFrameWriter
 from pdf_watermark_removal_otsu_inpaint_spark import reference_kernels as rk
 from pdf_watermark_removal_otsu_inpaint_spark.operators import histogram as oh
 from pdf_watermark_removal_otsu_inpaint_spark.operators.repair import (
-    detect_masks, repair_sequences)
+    detect_masks)
+from pdf_watermark_removal_otsu_inpaint_spark.operators.repair_vectorized import (  # noqa: E501
+    repair_sequences)
 from pdf_watermark_removal_otsu_inpaint_spark.params import DEFAULT_PARAMS
 from pdf_watermark_removal_otsu_inpaint_spark.sources.sequences import (
     SEQUENCES_DDL, generate_rows, sequences_df)

@@ -45,3 +45,17 @@ def test_spark_submit_pyfiles_batch(tmp_path, spark):
         capture_output=True, text=True, cwd=str(tmp_path), env=env,
         timeout=480)
     assert "repaired 50 sequences" in r.stdout, r.stderr[-2000:]
+
+
+def test_run_pipeline_has_no_engine_switch(capsys):
+    """One repair path: the CLI rejects --engine before any Spark work, and
+    run_repair_pipeline takes no engine parameter."""
+    import inspect
+
+    from pdf_watermark_removal_otsu_inpaint_spark.run_pipeline import main
+    from pdf_watermark_removal_otsu_inpaint_spark.streaming.pipeline import (
+        run_repair_pipeline)
+    with pytest.raises(SystemExit):
+        main(["--input", "in", "--output", "out", "--engine", "arrow"])
+    assert "unrecognized arguments: --engine" in capsys.readouterr().err
+    assert "engine" not in inspect.signature(run_repair_pipeline).parameters
