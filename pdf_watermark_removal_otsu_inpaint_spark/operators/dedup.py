@@ -302,7 +302,13 @@ def connected_components(vertices: DataFrame, edges: DataFrame,
     """vertices(id) + edges(u, v) -> (id, cluster_id = min id reachable).
 
     Singleton vertices cluster to themselves. Edges may be directed pairs
-    (u < v); propagation symmetrizes them."""
+    (u < v); propagation symmetrizes them.
+
+    Precondition: every edge endpoint is a vertex id (q52's edges are
+    pairs of its documents). Labels are seeded from edge endpoints, so an
+    edge naming an absent id still donates that id: a vertex connected
+    to it can get a `cluster_id` that is not a vertex, and the absent id
+    itself gets no output row."""
     sym = edges.select("u", "v").union(
         edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
     sym = sym.repartition("v").localCheckpoint()

@@ -1,19 +1,26 @@
-"""Exactly-once idempotent sink (X7) + per-partition lineage/metrics (X8).
+"""Exactly-once idempotent sink (X7) + per-file lineage/metrics (X8).
 
 `foreachBatch` is at-least-once on retry; exactly-once is recovered by making
 each micro-batch commit idempotent (SURVEY §4.3). Per micro-batch N:
 
 1. write: the batch plan runs once, in a plain overwrite of
    `<out>/data/batch_id=N/` (a retried batch N rewrites the same directory
-   instead of duplicating); there is no shuffle before the write;
-2. key check: one key-only job over the WRITTEN files asks whether any
-   sink key (doc_id, seq_no) repeats within the batch;
-3. only if one does: the written rows are deduplicated into
-   `<out>/_staging/batch_id=N/` and swapped into the data directory;
-4. lineage: per-partition rows (batch_id, partition_id, rows_out, masked
-   tokens, coverage sum) are aggregated from a column-pruned scan of the
-   written files and collected on the driver — the resume audit trail
-   (reference ProcessingStats, stats.py:13-245, made transactional);
+   instead of duplicating); there is no shuffle before the write, and this
+   is the only Spark job of a batch with no repeated key;
+2. key check: the driver reads the key columns (doc_id, seq_no) and the
+   metric columns (coverage, n_tok) of each WRITTEN file with pyarrow —
+   about 30 bytes a row, never the token arrays — and asks whether any
+   sink key repeats within the batch (NULL keys group together, as in
+   Spark's dropDuplicates);
+3. only if one does: the written rows are deduplicated by Spark into
+   `<out>/_staging/batch_id=N/`, swapped into the data directory and read
+   back the same way;
+4. lineage: one row per written data file (batch_id, partition_id, rows_out,
+   masked tokens, coverage sum) is derived on the driver from those columns
+   — the resume audit trail (reference ProcessingStats, stats.py:13-245,
+   made transactional). `partition_id` is the part number in the file's
+   name, i.e. the write task that produced it; a file with no rows gets no
+   row;
 5. metrics: the driver writes those rows with pyarrow as the single file
    `<out>/metrics/batch_id=N/part-00000.parquet` (no Spark job);
 6. commit: a marker `<out>/_commits/N.json` is written atomically
@@ -22,7 +29,8 @@ each micro-batch commit idempotent (SURVEY §4.3). Per micro-batch N:
 
 Readers (`read_committed`, `read_metrics`) only see batches with markers, so
 a crash at any step before 6 leaves no visible partial output, and the
-replay rewrites every file of the batch.
+replay rewrites every file of the batch. Like `os.replace` and the markers,
+steps 2 and 4 need `out_dir` to be visible to the driver.
 
 The production target is an Iceberg/Delta MERGE on (doc_id, seq_no) — those
 jars are not in this image (import-gated), but the commit-marker protocol
@@ -35,12 +43,61 @@ import json
 import os
 import shutil
 import tempfile
+from decimal import ROUND_HALF_UP, Decimal
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import to_arrow_schema
+
+
+def _round_half_up(x: float, places: int) -> Decimal:
+    """Spark's round(): HALF_UP on the double's decimal form."""
+    return Decimal(repr(x)).quantize(Decimal(1).scaleb(-places),
+                                     ROUND_HALF_UP)
+
+
+def _read_written(data_path: str,
+                  cols: list[str]) -> list[tuple[int, pa.Table]]:
+    """(part number, `cols` of the file) for each data file of a batch."""
+    return [(int(name.split("-")[1]),
+             pq.read_table(os.path.join(data_path, name), columns=cols))
+            for name in sorted(os.listdir(data_path))
+            if name.startswith("part-") and name.endswith(".parquet")]
+
+
+def _lineage(files: list[tuple[int, pa.Table]], batch_id: int,
+             metric_cols: list[str]) -> pa.Table:
+    """One metrics row per non-empty data file: its row count,
+    round(sum(coverage), 9) and round(sum(coverage * n_tok)), each rounded
+    HALF_UP as Spark's round() does."""
+    has_cov = "coverage" in metric_cols
+    has_masked = has_cov and "n_tok" in metric_cols
+    fields = [pa.field("partition_id", pa.int32(), False),
+              pa.field("rows_out", pa.int64(), False)]
+    if has_cov:
+        fields.append(pa.field("coverage_sum", pa.float64()))
+    if has_masked:
+        fields.append(pa.field("masked_tokens", pa.int64()))
+    fields.append(pa.field("batch_id", pa.int32(), False))
+    rows = []
+    for part, t in files:
+        if not t.num_rows:
+            continue
+        row = {"partition_id": part, "rows_out": t.num_rows,
+               "batch_id": batch_id}
+        if has_cov:
+            cov = pc.sum(t["coverage"]).as_py()
+            row["coverage_sum"] = (None if cov is None
+                                   else float(_round_half_up(cov, 9)))
+        if has_masked:
+            masked = pc.sum(pc.multiply(
+                t["coverage"], t["n_tok"].cast(pa.float64()))).as_py()
+            row["masked_tokens"] = (None if masked is None
+                                    else int(_round_half_up(masked, 0)))
+        rows.append(row)
+    return pa.Table.from_pylist(rows, schema=pa.schema(fields))
 
 
 class ExactlyOnceParquetSink:
@@ -61,54 +118,37 @@ class ExactlyOnceParquetSink:
             return
         data_path = f"{self.out_dir}/data/batch_id={batch_id}"
         metrics_path = f"{self.out_dir}/metrics/batch_id={batch_id}"
-        spark = batch_df.sparkSession
-        schema = batch_df.schema
 
         batch_df.write.mode("overwrite").parquet(data_path)
-        # explicit schema: skips a schema-inference job per micro-batch AND
-        # survives an EMPTY micro-batch (foreachBatch fires on no-data
-        # batches for watermark progress; a committer that writes only
-        # _SUCCESS would make schema inference fail before the marker)
-        written = spark.read.schema(schema).parquet(data_path)
-        repeats = (written.groupBy(*self.key_cols).count()
-                   .where(F.col("count") > 1).limit(1).count())
-        if repeats:
-            # a source row replayed within the batch must not double-write
+        metric_cols = [c for c in ("coverage", "n_tok")
+                       if c in batch_df.columns]
+        files = _read_written(data_path, self.key_cols + metric_cols)
+        keys = pa.concat_tables([t.select(self.key_cols) for _, t in files])
+        if keys.group_by(self.key_cols).aggregate([]).num_rows < keys.num_rows:
+            # a source row replayed within the batch must not double-write.
+            # The explicit schema skips a schema-inference job.
             staging = f"{self.out_dir}/_staging/batch_id={batch_id}"
-            written.dropDuplicates(self.key_cols).write.mode("overwrite") \
-                .parquet(staging)
+            (batch_df.sparkSession.read.schema(batch_df.schema)
+             .parquet(data_path).dropDuplicates(self.key_cols)
+             .write.mode("overwrite").parquet(staging))
             shutil.rmtree(data_path)
             os.replace(staging, data_path)
             shutil.rmtree(f"{self.out_dir}/_staging")
-            written = spark.read.schema(schema).parquet(data_path)
+            files = _read_written(data_path, self.key_cols + metric_cols)
 
-        # lineage from the WRITTEN files: parquet reads only the tiny metric
-        # columns, never the token arrays
-        agg_cols = [F.count("*").alias("rows_out")]
-        if "coverage" in written.columns:
-            agg_cols.append(F.round(F.sum("coverage"), 9).alias("coverage_sum"))
-        if "n_tok" in written.columns and "coverage" in written.columns:
-            agg_cols.append(F.round(F.sum(F.col("coverage") * F.col("n_tok")))
-                            .cast("long").alias("masked_tokens"))
-        lineage = (written.groupBy(F.spark_partition_id().alias("partition_id"))
-                   .agg(*agg_cols)
-                   .withColumn("batch_id", F.lit(batch_id)))
-        lineage_rows = lineage.collect()
-        n_rows = int(sum(r["rows_out"] for r in lineage_rows))
+        lineage = _lineage(files, batch_id, metric_cols)
         # at most a few rows: written on the driver, which already writes
         # the marker into out_dir
         shutil.rmtree(metrics_path, ignore_errors=True)
         os.makedirs(metrics_path)
-        pq.write_table(
-            pa.Table.from_pylist([r.asDict() for r in lineage_rows],
-                                 schema=to_arrow_schema(lineage.schema)),
-            f"{metrics_path}/part-00000.parquet")
+        pq.write_table(lineage, f"{metrics_path}/part-00000.parquet")
 
         # atomic commit marker: tmp file + rename (rename is atomic on POSIX)
         fd, tmp = tempfile.mkstemp(dir=f"{self.out_dir}/_commits",
                                    suffix=".tmp")
         with os.fdopen(fd, "w") as f:
-            json.dump({"batch_id": batch_id, "rows": n_rows}, f)
+            json.dump({"batch_id": batch_id,
+                       "rows": sum(t.num_rows for _, t in files)}, f)
         os.replace(tmp, self._commit_path(batch_id))
 
     def committed_batches(self) -> list[int]:

@@ -35,6 +35,17 @@ def test_disjoint_components_and_singletons(spark):
     assert got == [{0}, {1, 2, 3}, {4}, {5, 6}, {7}]
 
 
+def test_edge_to_absent_vertex_labels_component(spark):
+    """Broken precondition (an edge endpoint that is not a vertex): the
+    absent id 0 still labels its component, so vertex 2 clusters to a
+    non-vertex id, vertex 4 follows it through 2, and 0 gets no row."""
+    vertices = spark.createDataFrame([(i,) for i in range(1, 6)], "id long")
+    edges = spark.createDataFrame([(0, 2), (2, 4)], "u long, v long")
+    got = {r.id: r.cluster_id
+           for r in connected_components(vertices, edges).collect()}
+    assert got == {1: 1, 2: 0, 3: 3, 4: 0, 5: 5}
+
+
 def test_nonconvergence_raises(spark):
     """max_iterations too small for the diameter -> hard error, never a
     silently-wrong partial clustering."""

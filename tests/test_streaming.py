@@ -5,6 +5,7 @@ resume (X7/X8), salting (X9)."""
 import glob
 import os
 import time
+import uuid
 
 import numpy as np
 import pyarrow.parquet as pq
@@ -282,11 +283,11 @@ def test_exactly_once_crash_between_data_and_commit(spark, tmp_path,
     assert m.agg(F.sum("rows_out")).collect()[0][0] == len(resumed)
 
 
-def _repeating_batch(spark, n_rows, n_repeats, seed):
+def _repeating_batch(spark, n_rows, n_repeats, seed, max_tok=512):
     """Static repaired batch of `n_rows` distinct (doc_id, seq_no) keys
     plus identical copies of the first `n_repeats` rows: a source replayed
     within one micro-batch. Returns (batch DataFrame, input rows)."""
-    rows = generate_rows(n_rows, seed, min_tok=64, max_tok=512)
+    rows = generate_rows(n_rows, seed, min_tok=64, max_tok=max_tok)
     df = spark.createDataFrame(rows + rows[:n_repeats], SEQUENCES_DDL)
     return repair_sequences(_seq_cols(df), DEFAULT_PARAMS), rows
 
@@ -317,10 +318,39 @@ def test_exactly_once_sink_dedups_repeated_keys(spark, tmp_path):
     assert committed_view(spark, sink) == (got, n)
 
 
+def _record_writes(monkeypatch):
+    """The paths DataFrameWriter.parquet is called with, from now on."""
+    writes = []
+    write = DataFrameWriter.parquet
+
+    def recording_write(w, path, *a, **kw):
+        writes.append(path)
+        return write(w, path, *a, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", recording_write)
+    return writes
+
+
+def _sink_jobs(spark, sink, batch, batch_id):
+    """Run one sink call and return the number of Spark jobs it ran."""
+    sc = spark.sparkContext
+    group = f"sink-call-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "exactly-once sink call")
+    try:
+        sink(batch, batch_id)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # job starts reach the status tracker through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_exactly_once_sink_runs_batch_plan_once(spark, tmp_path, monkeypatch):
     """A batch with no repeated key: the batch plan executes exactly once,
-    and the sink neither deduplicates nor runs a Spark job for the
-    metrics file."""
+    the sink neither deduplicates nor runs a Spark job for the metrics
+    file, and the data write is the commit's only Spark job. A batch with
+    repeated keys adds only the staging rewrite's jobs."""
     batch, rows = _repeating_batch(spark, 40, 0, seed=24)
     executed = spark.sparkContext.accumulator(0)
 
@@ -330,25 +360,106 @@ def test_exactly_once_sink_runs_batch_plan_once(spark, tmp_path, monkeypatch):
             yield b
 
     counted = batch.mapInArrow(count_rows, batch.schema)
-    inject_crash(monkeypatch, type(batch), "dropDuplicates",
-                 lambda *a: True, after=False)
-    inject_crash(monkeypatch, type(spark), "createDataFrame",
-                 lambda *a: True, after=False)
-    writes = []
-    write = DataFrameWriter.parquet
-
-    def recording_write(w, path, *a, **kw):
-        writes.append(path)
-        return write(w, path, *a, **kw)
-
-    monkeypatch.setattr(DataFrameWriter, "parquet", recording_write)
-    out = str(tmp_path / "out")
-    sink = ExactlyOnceParquetSink(out)
-    sink(counted, 0)
+    with monkeypatch.context() as m:
+        inject_crash(m, type(batch), "dropDuplicates",
+                     lambda *a: True, after=False)
+        inject_crash(m, type(spark), "createDataFrame",
+                     lambda *a: True, after=False)
+        writes = _record_writes(m)
+        out = str(tmp_path / "out")
+        sink = ExactlyOnceParquetSink(out)
+        jobs = _sink_jobs(spark, sink, counted, 0)
 
     assert executed.value == len(rows) == sink.committed_rows()
     assert writes == [f"{out}/data/batch_id=0"]
     assert os.listdir(f"{out}/metrics/batch_id=0")
+    assert jobs == 1
+    repeating, _ = _repeating_batch(spark, 40, 10, seed=24)
+    rep_sink = ExactlyOnceParquetSink(str(tmp_path / "repeating"))
+    # a Spark key check and lineage query around the rewrite made it 8
+    assert _sink_jobs(spark, rep_sink, repeating, 0) < 8
+    assert rep_sink.committed_rows() == 40
+
+
+def test_exactly_once_sink_commits_null_keys_once(spark, tmp_path,
+                                                  monkeypatch):
+    """X7 with NULL keys: a repeated row whose seq_no is NULL and a row
+    whose doc_id is NULL each commit once. NULL keys group together, as in
+    Spark's dropDuplicates, so the repeat takes the staging rewrite."""
+    rows = generate_rows(20, 41, min_tok=64, max_tok=512)
+    null_seq = dict(rows[0], seq_no=None)
+    null_doc = dict(rows[1], doc_id=None)
+    df = spark.createDataFrame(rows + [null_seq, null_seq, null_doc],
+                               SEQUENCES_DDL)
+    writes = _record_writes(monkeypatch)
+    sink = ExactlyOnceParquetSink(str(tmp_path / "out"))
+    sink(repair_sequences(_seq_cols(df), DEFAULT_PARAMS), 0)
+
+    got, n = committed_view(spark, sink)
+    assert n == len(got) == sink.committed_rows() == 22
+    assert (rows[0]["doc_id"], None) in got
+    assert (None, rows[1]["seq_no"]) in got
+    assert [p for p in writes if "/_staging/" in p]
+    assert sum(r.rows_out for r in sink.read_metrics(spark).collect()) == 22
+
+
+def _part_no(path):
+    """The part number in a data file's name (part-00003-<uuid>...)."""
+    return int(os.path.basename(path).split("-")[1])
+
+
+def test_exactly_once_lineage_matches_written_files(spark, tmp_path):
+    """X8: each metrics row describes one committed data file: its part
+    number, its row count, and the coverage and masked-token sums Spark's
+    own aggregate gives over that file. Covers the list kernel (n_tok,
+    so masked_tokens), the packed kernel, a batch whose repeated keys
+    went through the staging rewrite, and a batch whose empty write task
+    leaves a gap in the part numbers."""
+    from pdf_watermark_removal_otsu_inpaint_spark.operators.repair import (
+        make_pack_udf)
+    from pdf_watermark_removal_otsu_inpaint_spark.operators.repair_vectorized import (  # noqa: E501
+        repair_sequences_arrow_packed)
+    df = _seq_cols(sequences_df(spark, 20, seed=3))
+    packed = (df.withColumn("tokens_bin", make_pack_udf()(F.col("tokens")))
+              .drop("tokens"))
+    repeating, _ = _repeating_batch(spark, 40, 10, seed=5, max_tok=4096)
+    gapped = repair_sequences(df.where(F.spark_partition_id() != 1),
+                              DEFAULT_PARAMS)
+    cases = {"list": (repair_sequences(df, DEFAULT_PARAMS), 20),
+             "packed": (repair_sequences_arrow_packed(packed, DEFAULT_PARAMS),
+                        20),
+             "repeating": (repeating, 40),
+             "gapped": (gapped, None)}
+    for name, (batch, n_rows) in cases.items():
+        out = str(tmp_path / name)
+        sink = ExactlyOnceParquetSink(out)
+        sink(batch, 2)
+
+        files = glob.glob(f"{out}/data/batch_id=2/part-*.parquet")
+        agg = [F.count("*").alias("rows_out"),
+               F.round(F.sum("coverage"), 9).alias("coverage_sum")]
+        if "n_tok" in batch.columns:
+            agg.append(F.round(F.sum(F.col("coverage") * F.col("n_tok")))
+                       .cast("long").alias("masked_tokens"))
+        want = {_part_no(r.f): r.asDict() for r in
+                spark.read.parquet(*files)
+                .groupBy(F.input_file_name().alias("f")).agg(*agg).collect()}
+        assert set(want) == {_part_no(f) for f in files
+                             if pq.read_metadata(f).num_rows}, name
+        got = {r.partition_id: r for r in sink.read_metrics(spark).collect()}
+        assert set(got) == set(want), name
+        for part, w in want.items():
+            g = got[part]
+            assert (g.batch_id, g.rows_out) == (2, w["rows_out"]), name
+            assert abs(g.coverage_sum - w["coverage_sum"]) <= 1e-9, name
+            if "masked_tokens" in w:
+                assert g.masked_tokens == w["masked_tokens"], name
+        assert sum(w["coverage_sum"] for w in want.values()) > 0, name
+        n_rows = n_rows or sum(w["rows_out"] for w in want.values())
+        assert sum(g.rows_out for g in got.values()) == n_rows, name
+        assert sink.committed_rows() == n_rows, name
+    # the empty task 1 wrote no file
+    assert 1 not in got and max(got) > 1
 
 
 # the sink's steps a crash can follow: (owner, callable, hit, after)
