@@ -1434,18 +1434,6 @@ def _write_bench_md(result, scale, north, ceiling):
         "its advantage grows with tokens-per-row; both shuffle O(groups x "
         "256 x partitions).",
         "",
-        "IVF ANN (operators/ivf.py): sampled k-means centroids "
-        "(k-means++ seeding, empty-cell reseeding, deterministic under the "
-        "fixed seed), broadcast cell assignment, n_probe-cell exact-cosine "
-        "search. recall@10 vs brute force on near-uniform synthetic "
-        "embeddings (sf0.01, 16 cells): 0.24 / 0.54 / 0.82 at n_probe "
-        "1/4/8 single-assignment, 0.49 / 1.0 at n_probe 1/8 with "
-        "n_assign=3 multi-assignment (the index triples, recall at a fixed "
-        "probe count roughly doubles — thresholds pinned in "
-        "tests/test_ivf.py); probing all cells reproduces exact top-k. "
-        "Candidate set shrinks ~n_cells/n_probe vs the q24 brute-force "
-        "baseline.",
-        "",
         f"Headline sf0.1 queries total: {result['value']} s — "
         f"{result.get('headline_protocol', 'single-shot')}. Medians: "
         f"{json.dumps(result['queries'])}; per-query relative spreads: "

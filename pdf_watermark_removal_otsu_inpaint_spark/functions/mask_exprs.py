@@ -1,12 +1,14 @@
 """Native Catalyst column expressions for the token/mask algebra.
 
 Everything here is JVM-side (higher-order functions over arrays — transform /
-zip_with / aggregate / exists / sequence): whole-stage-codegen friendly, no
+zip_with / aggregate / sequence): whole-stage-codegen friendly, no
 Python in the hot path. These are the Spark mapping of SURVEY.md §2.2 P1-P11,
 §2.7 U1, §2.8 F1-F10 and A5, with reference citations inline.
 
-The heavyweight kernels (morphology K1, inpaint K2) live in operators/ as
-Arrow pandas UDFs; this module covers the parts Catalyst can own.
+The heavyweight kernels (morphology K1, inpaint K2) run as mapInArrow
+operators in operators/repair_vectorized.py, which also computes the
+text-core protection (P4), the text-like guard (P5) and the saturation
+predicate (P7); this module covers the parts Catalyst can own.
 """
 
 from __future__ import annotations
@@ -14,9 +16,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from ..reference_kernels import (BACKGROUND_THRESHOLD, TEXT_CORE_THRESHOLD,
-                                 TEXTLIKE_HI, TEXTLIKE_LO, WM_COV_HI,
-                                 WM_COV_LO, WM_VALUE_HI, WM_VALUE_LO)
+from ..reference_kernels import (BACKGROUND_THRESHOLD, WM_COV_HI, WM_COV_LO,
+                                 WM_VALUE_HI, WM_VALUE_LO)
 
 
 # --- P1: token value-class bucketing (grayscale projection analogue) --------
@@ -35,32 +36,14 @@ def raw_color_mask(tokens: Column, wm_token: Column, tolerance: Column) -> Colum
     return F.transform(tokens, lambda t: F.abs(bucket(t) - wm_token) < tolerance)
 
 
-def has_wm_token(tokens: Column, wm_token: Column, tolerance: Column) -> Column:
-    """Row-level filter flavor of P2: any position matches."""
-    return F.exists(tokens, lambda t: F.abs(bucket(t) - wm_token) < tolerance)
-
-
-# --- P3/P4: protection predicates (watermark_detector.py:455, :207) ---------
+# --- P3: background-protection predicate (watermark_detector.py:455) --------
 def background_mask(tokens: Column) -> Column:
     return F.transform(tokens, lambda t: bucket(t) > F.lit(BACKGROUND_THRESHOLD))
-
-
-def text_core_mask(tokens: Column) -> Column:
-    return F.transform(tokens, lambda t: bucket(t) < F.lit(TEXT_CORE_THRESHOLD))
-
-
-# --- P5: text-like watermark guard (watermark_detector.py:463) ---------------
-def is_textlike(wm_token: Column) -> Column:
-    return wm_token.between(TEXTLIKE_LO, TEXTLIKE_HI)
 
 
 # --- P8/P9/U1: positional mask algebra (watermark_detector.py:456-529) -------
 def mask_or(m1: Column, m2: Column) -> Column:
     return F.zip_with(m1, m2, lambda a, b: a | b)
-
-
-def mask_and(m1: Column, m2: Column) -> Column:
-    return F.zip_with(m1, m2, lambda a, b: a & b)
 
 
 def mask_and_not(m1: Column, m2: Column) -> Column:
@@ -93,20 +76,6 @@ def mask_max_combine(masks: Column, n_tok: Column) -> Column:
     aggregate over the instance list with a zip_with OR combiner."""
     zero = F.transform(F.sequence(F.lit(0), n_tok - 1), lambda _: F.lit(False))
     return F.aggregate(masks, zero, mask_or)
-
-
-# --- F2: per-row token mean (saturation-mean analogue, :503) ------------------
-def token_mean(tokens: Column, n_tok: Column) -> Column:
-    s = F.aggregate(tokens, F.lit(0).cast("long"),
-                    lambda acc, t: acc + bucket(t).cast("long"))
-    return s.cast("double") / n_tok.cast("double")
-
-
-# --- P7: per-row dynamic-threshold predicate (watermark_detector.py:501-505) --
-def saturation_mask(tokens: Column, n_tok: Column) -> Column:
-    """1-D analogue of the HSV-saturation detector: t < max(30, 0.6*row_mean)."""
-    thr = F.greatest(F.lit(30.0), token_mean(tokens, n_tok) * 0.6)
-    return F.transform(tokens, lambda t: bucket(t).cast("double") < thr)
 
 
 # --- A3 helpers: the dominant-token qualification predicate -------------------

@@ -151,14 +151,17 @@ def token_histogram_bincount_text(df: DataFrame,
     """A1b with tokenization FUSED into the bincount: per-char tokens are
     the UTF-8 bytes of `text_col`, read zero-copy off the Arrow
     StringArray's data buffer (ASCII corpus — the repair_text_arrow
-    convention; identical to ascii() per char).
+    convention; identical to ascii() per char). A non-ASCII char counts
+    as its UTF-8 bytes ('é' -> 195, 169), where ascii() gives its code
+    point (233). An empty text counts one token 0, as
+    transform(split('', ''), ascii) does; a NULL text counts nothing.
 
     Replaces the round-5 feed `token_histogram_bincount(split+transform)`,
     whose Catalyst stage materialized one single-char string plus one int
     per character (~15M objects at sf1) and shipped the int arrays through
     Arrow before the kernel saw a byte. Here the text column crosses once
-    and the whole batch is one np.bincount — result identical (asserted in
-    tests/test_histogram_paths.py)."""
+    and the whole batch is one np.bincount — result identical on ASCII
+    text (asserted in tests/test_histogram_paths.py)."""
     group_cols = group_cols or ["source"]
     src = df.select(*group_cols, text_col)
     out_schema = ", ".join(
@@ -179,8 +182,12 @@ def token_histogram_bincount_text(df: DataFrame,
                     continue
                 tcol = b.column(b.schema.get_field_index(text_col))
             g, offsets = _utf8_flat(tcol)
-            out = _bincount_partial_batch(b, group_cols, g,
-                                          np.diff(offsets))
+            lengths = np.diff(offsets)
+            empty = lengths == 0
+            if empty.any():  # split('', '') is [''] and ascii('') is 0
+                g = np.insert(g, offsets[:-1][empty], 0)
+                lengths = np.maximum(lengths, 1)
+            out = _bincount_partial_batch(b, group_cols, g, lengths)
             if out is not None:
                 yield out
 

@@ -1,14 +1,11 @@
-"""Otsu binarization threshold from token histograms — two implementations.
+"""Otsu binarization threshold from token histograms, as window SQL.
 
-1. `otsu_sql` — pure window-function SQL (cumulative sums ordered by bin):
-   between-class variance argmax, expressible in any ANSI engine; this is the
-   DuckDB-checkable flavor (SURVEY §4.3).
-2. `otsu_udf` — vectorized Arrow UDF over assembled count vectors, used on
-   the streaming path where the histogram arrives as an array<long> column.
-
-Both match reference_kernels.otsu_threshold (ties -> smallest t; thresholds
-with an empty class excluded). The north_star names this the "vectorized
-Arrow-UDF Otsu binarization" fed by per-window token histograms.
+`otsu_sql` computes the between-class variance argmax with cumulative sums
+ordered by bin: expressible in any ANSI engine, so DuckDB checks it
+(SURVEY §4.3). It matches reference_kernels.otsu_threshold (ties -> smallest
+t; thresholds with an empty class excluded). Every caller runs it: q30,
+`otsu_repair` and the streaming `run_otsu_pipeline`. The threshold then
+drives the per-row repair UDF below.
 """
 
 from __future__ import annotations
@@ -46,48 +43,6 @@ def otsu_sql(hist: DataFrame, group_cols: list[str]) -> DataFrame:
     return (scored.withColumn("rn", F.row_number().over(pick))
             .where(F.col("rn") == 1)
             .select(*group_cols, F.col("tok").alias("otsu_threshold")))
-
-
-def make_otsu_udf():
-    """counts: array<long>[256] per row -> Otsu threshold per row,
-    vectorized ACROSS rows: one (B,256) matrix, cumulative sums along the
-    bin axis, one argmax — semantics exactly rk.otsu_threshold per row
-    (ties -> smallest t; degenerate histograms -> 255 'mask nothing').
-    (Factory: pandas_udf DDL parsing needs an active session.)"""
-
-    @pandas_udf("int")
-    def otsu_udf(counts: pd.Series) -> pd.Series:
-        arrs = counts.to_numpy()
-        B = len(arrs)
-        if B == 0:
-            return pd.Series([], dtype="int32")
-        M = np.stack([np.asarray(c, dtype=np.float64) for c in arrs])
-        total = M.sum(axis=1)
-        bins = np.arange(M.shape[1], dtype=np.float64)
-        w0 = np.cumsum(M, axis=1)
-        m0 = np.cumsum(M * bins, axis=1)
-        w1 = total[:, None] - w0
-        mu_t = m0[:, -1]
-        with np.errstate(divide="ignore", invalid="ignore"):
-            between = (m0 * total[:, None]
-                       - mu_t[:, None] * w0) ** 2 / (w0 * w1)
-        finite = np.isfinite(between)
-        between[~finite] = -1.0
-        thr = np.argmax(between, axis=1).astype(np.int64)
-        degenerate = (total <= 0) | ~finite.any(axis=1)
-        return pd.Series(np.where(degenerate, 255, thr).astype("int32"))
-
-    return otsu_udf
-
-
-def assemble_hist_vector(hist: DataFrame, group_cols: list[str]) -> DataFrame:
-    """(group..., tok, cnt) -> (group..., counts:array<long>[256]) — dense
-    count vector via map assembly (no per-row Python)."""
-    pairs = (hist.groupBy(*group_cols)
-             .agg(F.map_from_entries(
-                 F.collect_list(F.struct("tok", "cnt"))).alias("m")))
-    dense = F.expr("transform(sequence(0, 255), i -> coalesce(m[i], 0L))")
-    return pairs.select(*group_cols, dense.alias("counts"))
 
 
 def make_threshold_repair_udf(params=None):

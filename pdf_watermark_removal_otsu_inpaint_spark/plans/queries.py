@@ -1072,7 +1072,8 @@ FROM qual WHERE pick = 1
 def q29(spark, sf_dir):
     """Flagship A1+A2+A3: dominant-token detection per source over real
     char-token arrays (detect_watermark_color, watermark_detector.py:147-191,
-    generalized across a corpus)."""
+    generalized across a corpus). The corpus is assumed ASCII: the
+    histogram kernel counts UTF-8 bytes, the oracle ascii() code points."""
     docs = _ensure_parallelism(
         t(spark, sf_dir, "documents").select("source", "text"), spark,
         min_bytes=16 << 20)
@@ -1111,8 +1112,8 @@ WHERE rn = 1
 def q30(spark, sf_dir):
     """Otsu threshold per source over char-token histograms — the pure-SQL
     window formulation (SURVEY §4.3) through the engine's otsu_sql, fed by
-    the A1b bincount histogram (same result as the explode path, ~1.7x
-    faster at sf0.1)."""
+    the A1b bincount histogram (same result as the explode path on the
+    assumed-ASCII corpus, ~1.7x faster at sf0.1)."""
     docs = _ensure_parallelism(
         t(spark, sf_dir, "documents").select("source", "text"), spark,
         min_bytes=16 << 20)

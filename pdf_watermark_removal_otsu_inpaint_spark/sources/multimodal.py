@@ -17,9 +17,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-MEDIA_SCHEMA = ("doc_id long, payload binary, "
-                "meta struct<kind:string,byte_len:long,codec:string>")
-
 FEATURE_SCHEMA = ("doc_id long, kind string, byte_len long, "
                   "feature array<double>, frames int")
 

@@ -40,9 +40,6 @@ class ProgressCapture(StreamingQueryListener):
                 total += int(op.get("numRowsDroppedByWatermark", 0))
         return total
 
-    def input_rows(self) -> int:
-        return sum(int(p.get("numInputRows", 0)) for p in self.progresses)
-
     def observed(self, name: str) -> list[dict]:
         """df.observe(...) metric rows captured per batch (A8)."""
         out = []

@@ -1,6 +1,7 @@
 """connected_components: exactness on adversarial shapes (long chains,
 which need O(diameter) rounds without pointer-jumping) and the
-non-convergence guard."""
+non-convergence guard; LSH bucket guards; and the NumPy text kernels
+(MinHash, SimHash, shingle bands) against a per-row Python reference."""
 
 import pytest
 
@@ -88,3 +89,81 @@ def test_lsh_bucket_filter_precedes_join(spark):
     assert join_at >= 0
     below = plan[join_at:]
     assert "Filter" in below and "window" in below.lower()
+
+
+# --- text kernels vs a per-row reference of their documented semantics ----
+P = 1_000_000_007
+A_VALS = (3, 5, 7, 11, 13, 17, 19, 23)
+TEXTS = [None, "", " lead", "trail ", "double  space", "one", "two words",
+         "the cat the cat the", "a b c d e", "café crème brûlée"]
+
+
+def _text_docs(spark):
+    return spark.createDataFrame(list(enumerate(TEXTS)),
+                                 "doc_id long, text string")
+
+
+def _fold(bs):
+    """The 31-fold word hash mod P over UTF-8 bytes ('é' folds its two
+    bytes 195, 169, not the code point 233)."""
+    h = 0
+    for c in bs:
+        h = (h * 31 + c) % P
+    return h
+
+
+def _words(text):
+    """split(text, ' ') with limit -1: empty words are kept."""
+    return text.encode("utf-8").split(b" ")
+
+
+def test_minhash_text_matches_reference(spark):
+    from pdf_watermark_removal_otsu_inpaint_spark.operators.dedup import (
+        minhash_signatures_text)
+    got = {(r.doc_id, r.hash_i): r.minhash
+           for r in minhash_signatures_text(_text_docs(spark)).collect()}
+    want = {}
+    for d, text in enumerate(TEXTS):
+        if text is None:
+            continue
+        hs = {_fold(w) for w in _words(text)}   # min() ignores duplicates
+        for i, a in enumerate(A_VALS):
+            want[(d, i)] = min((a * h + i + 1) % P for h in hs)
+    assert got == want
+
+
+def test_simhash_text_matches_reference(spark):
+    from pdf_watermark_removal_otsu_inpaint_spark.operators.dedup import (
+        simhash_text)
+    got = {r.doc_id: r.simhash16
+           for r in simhash_text(_text_docs(spark)).collect()}
+    want = {}
+    for d, text in enumerate(TEXTS):
+        if text is None:
+            continue
+        hs = [_fold(w) for w in _words(text)]   # every occurrence votes
+        want[d] = sum(1 << j for j in range(16)
+                      if sum(1 if h >> j & 1 else -1 for h in hs) > 0)
+    assert got == want
+
+
+def test_shingle_bands_text_match_reference(spark):
+    from pdf_watermark_removal_otsu_inpaint_spark.operators.dedup import (
+        shingle_band_signatures_text)
+    got = {(r.doc_id, r.band): (r.mh1, r.mh2)
+           for r in shingle_band_signatures_text(_text_docs(spark))
+           .collect()}
+    want = {}
+    for d, text in enumerate(TEXTS):
+        if text is None:
+            continue
+        w = _words(text)
+        hs = [_fold(b" ".join(w[i:i + 3])) for i in range(len(w) - 2)]
+        if not hs:                               # below 3 words: no rows
+            continue
+        for b in range(4):
+            want[(d, b)] = tuple(
+                min((A_VALS[k] * h + k + 1) % P for h in hs)
+                for k in (2 * b, 2 * b + 1))
+    assert got == want
+    assert {d for d, _ in got} == {4, 7, 8, 9}

@@ -115,17 +115,6 @@ def test_otsu_sql_matches_kernel(spark, seq_df, seq_rows):
         assert got[(row["doc_id"], row["seq_no"])] == rk.otsu_threshold(h)
 
 
-def test_otsu_udf_matches_kernel(spark, seq_df, seq_rows):
-    hist = oh.token_histogram(seq_df, ["doc_id", "seq_no"])
-    vec = oo.assemble_hist_vector(hist, ["doc_id", "seq_no"])
-    got = {(r.doc_id, r.seq_no): r.th
-           for r in vec.withColumn("th", oo.make_otsu_udf()(F.col("counts")))
-                       .select("doc_id", "seq_no", "th").collect()}
-    for row in seq_rows:
-        h = rk.histogram256(rk.bucket256(np.array(row["tokens"])))
-        assert got[(row["doc_id"], row["seq_no"])] == rk.otsu_threshold(h)
-
-
 def test_repair_plan_shape(spark, seq_df):
     """The fused path is one MapInArrow over the cached input — no shuffle,
     no other Python stage, and only the columns it reads or passes through

@@ -66,3 +66,55 @@ def test_bincount_path_handles_empty_and_negative_tokens(spark):
                  ["source"])
     # pmod semantics for negatives: -1 -> 255, -256 -> 0, 256 -> 0, 300 -> 44
     assert a == b == {("web", 255): 2, ("web", 0): 2, ("web", 44): 1}
+
+
+def test_text_kernel_matches_explode_path(spark):
+    """token_histogram_bincount_text == transform(split(text, ''), ascii)
+    through the explode path, with NULL texts (no tokens), empty texts
+    (one token 0 each — leading, consecutive and trailing), and repeated
+    spaces. Non-ASCII differs: the kernel counts UTF-8 bytes ('é' -> 195,
+    169) where ascii() gives the code point (233); q29/q30 assume an
+    ASCII corpus."""
+    from pdf_watermark_removal_otsu_inpaint_spark.operators.histogram import (
+        token_histogram_bincount_text)
+
+    def both(texts):
+        """(explode path, kernel) histograms; two sources alternate so
+        group keys cross batches."""
+        df = spark.createDataFrame(
+            [("ab"[i % 2], t) for i, t in enumerate(texts)],
+            "source string, text string")
+        toks = F.transform(F.split("text", ""), lambda c: F.ascii(c))
+        explode = token_histogram(df.select("source", toks.alias("tokens")),
+                                  ["source"])
+        return tuple(_as_dict(h.collect(), ["source"]) for h in (
+            explode, token_histogram_bincount_text(df, ["source"])))
+
+    a, b = both(["", None, "abc", "", "", "a  b   c", None, "zz ", "  ",
+                 "Hello, World!", ""])
+    assert a == b
+    assert a[("a", 0)] == 3 and a[("b", 0)] == 1
+    assert both(["", ""]) == ({("a", 0): 1, ("b", 0): 1},) * 2
+    assert both([None, None]) == ({}, {})
+    assert both(["é"]) == ({("a", 233): 1}, {("a", 195): 1, ("a", 169): 1})
+
+
+def test_float_kernel_matches_explode_path(spark):
+    """token_histogram_bincount_floats == the explode path over
+    clip(floor(v*128+128), 0, 255), with empty and NULL lists."""
+    from pdf_watermark_removal_otsu_inpaint_spark.operators.histogram import (
+        token_histogram_bincount_floats)
+    rows = [("x", [0.0, -1.0, 1.0, 0.5, -0.0078125]), ("y", []),
+            ("x", None), ("y", [2.5, -3.0, 0.999, 0.25]), ("x", []),
+            ("y", [0.25, 0.25])]
+    df = spark.createDataFrame(rows, "label string, embedding array<float>")
+    q = F.transform("embedding", lambda v: F.least(
+        F.lit(255.0), F.greatest(F.lit(0.0), F.floor(v.cast("double") * 128
+                                                     + 128))).cast("int"))
+    a = _as_dict(token_histogram(df.select("label", q.alias("tokens")),
+                                 ["label"]).collect(), ["label"])
+    b = _as_dict(token_histogram_bincount_floats(df, ["label"]).collect(),
+                 ["label"])
+    assert a == b == {("x", 128): 1, ("x", 0): 1, ("x", 255): 1,
+                      ("x", 192): 1, ("x", 127): 1, ("y", 255): 2,
+                      ("y", 0): 1, ("y", 160): 3}
