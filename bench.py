@@ -76,10 +76,8 @@ def _noop(df) -> None:
 
 def materialize_input(spark, n_rows: int) -> None:
     """Write the synthetic token table once, in both layouts."""
-    from pyspark.sql import functions as F
-
     from pdf_watermark_removal_otsu_inpaint_spark.operators.repair import (
-        make_pack_udf)
+        pack_tokens)
     from pdf_watermark_removal_otsu_inpaint_spark.sources.synth import (
         synth_sequences)
     marker = f"{BENCH_INPUT}/.complete_{n_rows}_{N_TOK}"
@@ -90,9 +88,7 @@ def materialize_input(spark, n_rows: int) -> None:
     df = synth_sequences(spark, n_rows, N_TOK, partitions=64)
     df.write.mode("overwrite").parquet(f"{BENCH_INPUT}/list")
     lst = spark.read.parquet(f"{BENCH_INPUT}/list")
-    (lst.withColumn("tokens_bin", make_pack_udf()(F.col("tokens")))
-        .drop("tokens")
-        .write.mode("overwrite").parquet(f"{BENCH_INPUT}/packed"))
+    pack_tokens(lst).write.mode("overwrite").parquet(f"{BENCH_INPUT}/packed")
     open(marker, "w").write("ok")
 
 
@@ -119,7 +115,7 @@ def pipeline_secs(spark, layout: str, trials: int = 3) -> float:
 
 def histogram_compare_secs(spark, trials: int = 3) -> dict:
     """A1 vs A1b on the pipeline input (same grouped-histogram result two
-    physical ways): explode -> partial hash agg, vs mapInPandas
+    physical ways): explode -> partial hash agg, vs mapInArrow
     per-batch np.bincount partials -> tree-merge (SURVEY §4.3)."""
     from pdf_watermark_removal_otsu_inpaint_spark.operators.histogram import (
         token_histogram, token_histogram_bincount)
@@ -535,10 +531,8 @@ LADDER_INPUT = os.environ.get("SPARK_GRAFT_LADDER_INPUT",
 
 def materialize_ladder_input(spark) -> None:
     """8x pipeline input, packed layout only (the north-ladder workload)."""
-    from pyspark.sql import functions as F
-
     from pdf_watermark_removal_otsu_inpaint_spark.operators.repair import (
-        make_pack_udf)
+        pack_tokens)
     from pdf_watermark_removal_otsu_inpaint_spark.sources.synth import (
         synth_sequences)
     marker = f"{LADDER_INPUT}/.complete_{LADDER_ROWS}_{N_TOK}"
@@ -547,8 +541,7 @@ def materialize_ladder_input(spark) -> None:
     shutil.rmtree(LADDER_INPUT, ignore_errors=True)
     os.makedirs(LADDER_INPUT, exist_ok=True)
     df = synth_sequences(spark, LADDER_ROWS, N_TOK, partitions=128)
-    (df.withColumn("tokens_bin", make_pack_udf()(F.col("tokens")))
-       .drop("tokens").write.mode("overwrite").parquet(f"{LADDER_INPUT}/packed"))
+    pack_tokens(df).write.mode("overwrite").parquet(f"{LADDER_INPUT}/packed")
     open(marker, "w").write("ok")
 
 
@@ -1426,7 +1419,7 @@ def _write_bench_md(result, scale, north, ceiling):
         "zero-copy in the worker), the 10^12-scale physical design.",
         "",
         "Grouped histogram, A1 (explode -> partial hash agg) vs A1b "
-        "(mapInPandas per-batch np.bincount partials -> tree-merge), same "
+        "(mapInArrow per-batch np.bincount partials -> tree-merge), same "
         f"result both ways (tests/test_histogram_paths.py): "
         f"{result.get('hist_explode_sec', 'n/a')} s vs "
         f"{result.get('hist_bincount_sec', 'n/a')} s on the pipeline input. "

@@ -9,30 +9,13 @@ whole document (cli.py:742-841) become a per-source profile dim.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
+import pyarrow as pa
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
+from .. import reference_kernels as rk
 from ..params import PROFILE_PARAMS
-
-CLASSIFY_STRUCT = ("struct<color_discreteness:double,text_concentration:double,"
-                   "edge_sharpness:double,noise_level:double,"
-                   "doc_type:string,confidence:double>")
-
-
-def make_classify_udf():
-    @pandas_udf(CLASSIFY_STRUCT)
-    def classify(tokens: pd.Series) -> pd.DataFrame:
-        from .. import reference_kernels as rk
-        rows = []
-        for arr in tokens.to_numpy():
-            m = rk.classify_metrics(np.asarray(arr, dtype=np.int64))
-            typ, conf = rk.decide_type(m)
-            rows.append({**m, "doc_type": typ, "confidence": conf})
-        return pd.DataFrame(rows)
-
-    return classify
+from .repair_vectorized import _arrow_operator, _decode_list
 
 
 def profile_params_df(spark) -> DataFrame:
@@ -52,14 +35,23 @@ def classify_sources(df: DataFrame, sample_per_source: int = 1) -> DataFrame:
 
     Returns (source, doc_type, confidence, color_tolerance, kernel_size,
     inpaint_strength, passes)."""
-    from pyspark.sql import Window
     w = Window.partitionBy("source").orderBy("doc_id", "seq_no")
     probe = (df.withColumn("_rn", F.row_number().over(w))
-             .where(F.col("_rn") <= sample_per_source)
-             .select("source", "tokens"))
-    c = make_classify_udf()(F.col("tokens"))
-    classified = (probe.withColumn("_c", c)
-                  .select("source", F.col("_c.doc_type").alias("doc_type"),
-                          F.col("_c.confidence").alias("confidence")))
+             .where(F.col("_rn") <= sample_per_source))
+
+    def kernel(b):
+        toks = b.column("tokens")
+        flat, offsets = _decode_list(toks)
+        typ, conf = [None] * len(toks), [None] * len(toks)
+        for i in np.flatnonzero(toks.is_valid().to_numpy(
+                zero_copy_only=False)):
+            metrics = rk.classify_metrics(
+                flat[offsets[i]:offsets[i + 1]].astype(np.int64))
+            typ[i], conf[i] = rk.decide_type(metrics)
+        return [pa.array(typ, pa.string()), pa.array(conf, pa.float64())]
+
+    classified = _arrow_operator(probe, ["source"], ["tokens"],
+                                 ["doc_type string", "confidence double"],
+                                 kernel)
     spark = df.sparkSession
     return classified.join(F.broadcast(profile_params_df(spark)), "doc_type")

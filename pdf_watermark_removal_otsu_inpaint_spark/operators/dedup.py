@@ -17,25 +17,30 @@ partial clusters.
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from .repair_vectorized import _decode_text, _decoded, _passthrough
 
 
 def _word_hashes_flat(g, offs, pw_box, p):
     """Shared word-segmentation + polynomial-hash core for the NumPy text
     kernels (minhash / shingle bands).
 
-    g: flat uint8 UTF-8 bytes; offs: int64 row offsets (n+1).
+    g: flat char tokens (_decode_text: code points, uint8 on an ASCII
+    batch); offs: int64 row offsets (n+1).
     Returns (wh, wlen, words_per_row): per-word hash
-    fold((acc*31 + byte) % p), word byte length, and words per row —
-    word list == split(text, ' ') with Java limit=-1 (empty words from
-    consecutive/leading/trailing spaces kept, hashing to 0).
+    fold((acc*31 + ascii(char)) % p), word length in chars, and words per
+    row — word list == split(text, ' ') with Java limit=-1 (empty words
+    from consecutive/leading/trailing spaces kept, hashing to 0).
 
     pw_box is a 1-element list holding the 31^j % p power table, grown on
     demand and carried across batches by the caller. int64 is exact:
-    contributions < 256 * p < 2^38, and a batch holds < 2^24 word bytes,
-    so the cumsum peaks < 2^62."""
-    import numpy as np
+    contributions < 256 * p < 2^38 on a uint8 batch (each is reduced mod p
+    otherwise: a code point up to 0x10FFFF times 31^j % p reaches 2^51),
+    and a batch holds < 2^24 chars, so the cumsum peaks < 2^62."""
     nb = offs.size - 1
     sp = np.flatnonzero(g == 32)             # space = word delimiter
     row_of_sp = np.searchsorted(offs, sp, side="right") - 1
@@ -58,6 +63,8 @@ def _word_hashes_flat(g, offs, pw_box, p):
     np.cumsum(wlen[:-1], out=basew[1:])
     pos = np.arange(total, dtype=np.int64) - basew[wi] + ws[wi]
     contrib = g[pos].astype(np.int64) * pw[we[wi] - 1 - pos]
+    if g.dtype != np.uint8:
+        contrib %= p
     c = np.empty(total + 1, dtype=np.int64)
     c[0] = 0
     np.cumsum(contrib, out=c[1:])
@@ -69,8 +76,9 @@ def minhash_signatures_text(df: DataFrame, text_col: str = "text",
                             id_col: str = "doc_id",
                             a_vals: tuple = (3, 5, 7, 11, 13, 17, 19, 23),
                             p: int = 1_000_000_007) -> DataFrame:
-    """MinHash signatures computed in NumPy straight off the raw UTF-8
-    buffer (round-6 rewrite of q25's feed; guide §4.2).
+    """MinHash signatures computed in NumPy straight off the text's Arrow
+    buffer (round-6 rewrite of q25's feed; guide §4.2). NULL texts emit
+    nothing, as the oracle's UNNEST drops them.
 
     Semantics are exactly the round-5 Catalyst in-row form: words =
     split(text, ' ') with Java's limit=-1 (empty words from consecutive /
@@ -82,37 +90,22 @@ def minhash_signatures_text(df: DataFrame, text_col: str = "text",
     arithmetic, exact, no summation-order sensitivity (unlike floats).
     The Catalyst version evaluated an interpreted per-char aggregate HOF
     ~15M times per sf1 pass; this is three vectorized passes over the
-    byte buffer. min() is duplicate-insensitive, so the round-5
+    char-token buffer. min() is duplicate-insensitive, so the round-5
     array_distinct(words) step is dropped — identical results (the
     sf0.01 oracle gate and tests/test_dedup.py pin this).
 
     Stays a pure map (partial rows per batch, no shuffle); int64 is exact
-    throughout: contributions < 256 * p < 2^38 and one batch holds < 2^24
-    word bytes, so the cumsum peaks < 2^62."""
+    throughout (see _word_hashes_flat)."""
     src = df.select(id_col, text_col)
     id_type = dict(src.dtypes)[id_col]
     out_schema = f"{id_col} {id_type}, hash_i int, minhash long"
     K = len(a_vals)
 
     def fn(batches):
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        from .histogram import _plain_col, _utf8_flat
         A = np.asarray(a_vals, dtype=np.int64)
         B = np.arange(1, K + 1, dtype=np.int64)
         pw_box = [np.ones(1, dtype=np.int64)]    # 31^j % p, grown on demand
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            tcol = b.column(b.schema.get_field_index(text_col))
-            if tcol.null_count:  # oracle's UNNEST drops NULL-text docs
-                b = b.filter(pc.is_valid(tcol))
-                if b.num_rows == 0:
-                    continue
-                tcol = b.column(b.schema.get_field_index(text_col))
-            g, offs = _utf8_flat(tcol)
+        for b, g, offs in _decoded(batches, text_col, _decode_text):
             nb = b.num_rows
             wh, _, words_per_row = _word_hashes_flat(g, offs, pw_box, p)
             doc_starts = np.zeros(nb, dtype=np.int64)
@@ -121,7 +114,7 @@ def minhash_signatures_text(df: DataFrame, text_col: str = "text",
             for k in range(K):
                 mh[:, k] = np.minimum.reduceat((A[k] * wh + B[k]) % p,
                                                doc_starts)
-            ids = _plain_col(b, id_col)
+            ids = _passthrough(b, id_col)
             yield pa.RecordBatch.from_arrays(
                 [ids.take(pa.array(np.repeat(np.arange(nb), K))),
                  pa.array(np.tile(np.arange(K, dtype=np.int32), nb)),
@@ -134,7 +127,7 @@ def minhash_signatures_text(df: DataFrame, text_col: str = "text",
 def simhash_text(df: DataFrame, text_col: str = "text",
                  id_col: str = "doc_id", n_bits: int = 16,
                  p: int = 1_000_000_007) -> DataFrame:
-    """q27's SimHash in NumPy off the raw UTF-8 buffer: per-word polynomial
+    """q27's SimHash in NumPy off the text's Arrow buffer: per-word polynomial
     hashes (shared _word_hashes_flat core — frequency-weighted: duplicate
     words count each time, empty words hash to 0, exactly like the
     round-5 in-row form), then one (words x n_bits) signed-bit matrix and
@@ -146,23 +139,9 @@ def simhash_text(df: DataFrame, text_col: str = "text",
     out_schema = f"{id_col} {id_type}, simhash16 long"
 
     def fn(batches):
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        from .histogram import _plain_col, _utf8_flat
         pw_box = [np.ones(1, dtype=np.int64)]
         bits = np.arange(n_bits, dtype=np.int64)
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            tcol = b.column(b.schema.get_field_index(text_col))
-            if tcol.null_count:
-                b = b.filter(pc.is_valid(tcol))
-                if b.num_rows == 0:
-                    continue
-                tcol = b.column(b.schema.get_field_index(text_col))
-            g, offs = _utf8_flat(tcol)
+        for b, g, offs in _decoded(batches, text_col, _decode_text):
             nb = b.num_rows
             wh, _, wpr = _word_hashes_flat(g, offs, pw_box, p)
             doc_starts = np.zeros(nb, dtype=np.int64)
@@ -171,7 +150,7 @@ def simhash_text(df: DataFrame, text_col: str = "text",
             sums = np.add.reduceat(signed, doc_starts, axis=0)
             sim = (((sums > 0).astype(np.int64)) << bits).sum(axis=1)
             yield pa.RecordBatch.from_arrays(
-                [_plain_col(b, id_col), pa.array(sim)],
+                [_passthrough(b, id_col), pa.array(sim)],
                 [id_col, "simhash16"])
 
     return src.mapInArrow(fn, out_schema)
@@ -183,12 +162,12 @@ def shingle_band_signatures_text(df: DataFrame, text_col: str = "text",
                                                   23),
                                  p: int = 1_000_000_007) -> DataFrame:
     """q53's signature stage in NumPy: word 3-gram shingle hashes + 4
-    bands x 2 minhash rows per doc, off the raw UTF-8 buffer.
+    bands x 2 minhash rows per doc, off the text's Arrow buffer.
 
     Semantics match the round-5 Catalyst form exactly: shingle string =
     concat_ws(' ', w_i, w_i+1, w_i+2), its polynomial 31-hash composed
     from the word hashes via h(concat(a,b)) = (h(a) * 31^len(b) + h(b))
-    mod p (so the joining spaces contribute byte 32 like any other char);
+    mod p (so the joining spaces contribute token 32 like any other char);
     band b keys = min over shingles of (a_2b * h + 2b+1) % p and
     (a_2b+1 * h + 2b+2) % p. Docs with fewer than 3 words emit nothing
     (the round-5 plan's size(hs) > 0 filter; array_distinct on shingles
@@ -205,23 +184,9 @@ def shingle_band_signatures_text(df: DataFrame, text_col: str = "text",
     n_bands = len(a_vals) // 2
 
     def fn(batches):
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        from .histogram import _plain_col, _utf8_flat
         A = np.asarray(a_vals, dtype=np.int64)
         pw_box = [np.ones(1, dtype=np.int64)]
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            tcol = b.column(b.schema.get_field_index(text_col))
-            if tcol.null_count:
-                b = b.filter(pc.is_valid(tcol))
-                if b.num_rows == 0:
-                    continue
-                tcol = b.column(b.schema.get_field_index(text_col))
-            g, offs = _utf8_flat(tcol)
+        for b, g, offs in _decoded(batches, text_col, _decode_text):
             nb = b.num_rows
             wh, wlen, wpr = _word_hashes_flat(g, offs, pw_box, p)
             pw = pw_box[0]
@@ -247,7 +212,7 @@ def shingle_band_signatures_text(df: DataFrame, text_col: str = "text",
             for k in range(2 * n_bands):
                 mh[:, k] = np.minimum.reduceat((A[k] * h + (k + 1)) % p,
                                                starts)
-            ids = _plain_col(b, id_col)
+            ids = _passthrough(b, id_col)
             rep = np.repeat(kept_idx, n_bands)
             yield pa.RecordBatch.from_arrays(
                 [ids.take(pa.array(rep)),

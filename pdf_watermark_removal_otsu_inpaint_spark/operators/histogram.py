@@ -4,9 +4,10 @@ The scan path is pure Catalyst: explode -> hash aggregate. The explode emits
 n_tok rows per sequence, but partial (map-side) aggregation collapses them to
 <= 256 rows per group per partition *before* the shuffle, so shuffle volume is
 O(groups x 256), independent of token count — the property that makes this
-hold at 10^12 sequences. (The per-row np.bincount flavor lives inside the
-fused kernel for per-row decisions; relationally, explode+partial-agg already
-achieves the same tree-merge, SURVEY §4.3.)
+hold at 10^12 sequences. The A1b flavor (`token_histogram_bincount` and its
+fused text and float feeds) gets the same tree-merge from one mapInArrow
+that bincounts each Arrow batch, never emitting the exploded rows
+(SURVEY §4.3).
 
 Reference: cv2.calcHist (watermark_detector.py:162-165), top-k modes
 (:168-172), dominant-token selection (:172-189).
@@ -14,11 +15,16 @@ Reference: cv2.calcHist (watermark_detector.py:162-165), top-k modes
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import mask_exprs as mx
 from ..reference_kernels import TOPK_MODES
+from .repair_vectorized import (_decode_list, _decode_text, _decoded,
+                                _passthrough)
 
 
 def token_histogram(df: DataFrame, group_cols: list[str] | None = None,
@@ -30,11 +36,62 @@ def token_histogram(df: DataFrame, group_cols: list[str] | None = None,
     return ex.groupBy(*group_cols, "tok").agg(F.count("*").alias("cnt"))
 
 
+def _bincount_partial_batch(b, group_cols, g, lengths):
+    """Bincount the uint8 token classes `g` (flat, `lengths` per row) per
+    group key and return the partial-histogram RecordBatch, or None when
+    the batch holds no token. Group keys factorize over a \\x1f-joined
+    string (pandas' hashtable treats \\x00 as a C string terminator, so
+    'a\\x00b' == 'a\\x00c')."""
+    gp = pa.RecordBatch.from_arrays(
+        [_passthrough(b, c) for c in group_cols], list(group_cols)).to_pandas()
+    keys = gp.astype(str).agg("\x1f".join, axis=1)
+    codes, uniq = pd.factorize(keys)
+    code_per_pos = np.repeat(codes, lengths)
+    hist = np.bincount(code_per_pos * 256 + g, minlength=len(uniq) * 256)
+    nz = np.flatnonzero(hist)
+    if nz.size == 0:
+        return None
+    # one representative row per group code (codes are 0..k-1 in
+    # first-appearance order, so first-occurrence indexes map 1:1)
+    _, first_pos = np.unique(codes, return_index=True)
+    rep_idx = pa.array(first_pos[nz // 256])
+    return pa.RecordBatch.from_arrays(
+        [_passthrough(b, c).take(rep_idx) for c in group_cols]
+        + [pa.array((nz % 256).astype("int32")),
+           pa.array(hist[nz].astype("int64"))],
+        list(group_cols) + ["tok", "cnt"])
+
+
+def _bincount_histogram(df: DataFrame, group_cols: list[str], col: str,
+                        decode) -> DataFrame:
+    """A1b: one mapInArrow decodes `col` into flat token classes
+    (`decode`), bincounts each batch per group key, and a final
+    groupBy(group, tok) sum tree-merges the partials. Rows whose `col` is
+    NULL count nothing, as the explode path drops them."""
+    src = df.select(*group_cols, col)
+    out_schema = ", ".join(
+        [f"{f.name} {f.dataType.simpleString()}"
+         for f in src.schema.fields if f.name != col]
+        + ["tok int", "cnt long"])
+
+    def fn(batches):
+        for b, flat, offsets in _decoded(batches, col, decode):
+            out = _bincount_partial_batch(
+                b, group_cols, flat.astype(np.uint8, copy=False),
+                np.diff(offsets))
+            if out is not None:
+                yield out
+
+    partial = src.mapInArrow(fn, out_schema)
+    return partial.groupBy(*group_cols, "tok") \
+        .agg(F.sum("cnt").alias("cnt"))
+
+
 def token_histogram_bincount(df: DataFrame,
                              group_cols: list[str] | None = None,
                              tokens_col: str = "tokens") -> DataFrame:
     """A1b: the at-scale flavor of token_histogram — identical result,
-    different physical shape. mapInPandas bincounts each batch's tokens at
+    different physical shape. Each Arrow batch's token lists bincount at
     memory speed (one np.bincount over group_code*256 + token_class per
     batch: the whole batch collapses to <= groups x 256 partial rows
     WITHOUT ever materializing n_tok exploded rows), then a final
@@ -43,207 +100,50 @@ def token_histogram_bincount(df: DataFrame,
     agg, but the map side does one vectorized pass instead of emitting and
     hash-aggregating n_tok rows per sequence — the swap SURVEY §4.3 calls
     out for 2048-token rows at 10^12 scale."""
-    group_cols = group_cols or ["source"]
-    src = df.select(*group_cols, tokens_col)
-    out_schema = ", ".join(
-        [f"{c} {t}" for c, t in src.dtypes if c != tokens_col]
-        + ["tok int", "cnt long"])
-
-    def bincount_batches(pdfs):
-        import numpy as np
-        import pandas as pd
-
-        from .repair_vectorized import flatten_arrays
-        for pdf in pdfs:
-            # the explode path silently drops NULL token arrays; match it
-            pdf = pdf[pdf[tokens_col].notna()]
-            if not len(pdf):
-                continue
-            flat, offsets = flatten_arrays(pdf[tokens_col])
-            g = np.asarray(flat).astype(np.uint8)  # low byte == mod 256
-            lengths = np.diff(offsets)
-            # NB: pandas' factorize hashtable treats \x00 as a C string
-            # terminator ('a\x00b' == 'a\x00c'); \x1f is a safe separator
-            keys = pdf[group_cols].astype(str).agg("\x1f".join, axis=1)
-            codes, uniq = pd.factorize(keys)
-            code_per_pos = np.repeat(codes, lengths)
-            hist = np.bincount(code_per_pos * 256 + g,
-                               minlength=len(uniq) * 256)
-            nz = np.flatnonzero(hist)
-            if nz.size == 0:
-                continue
-            # one representative row per group code (codes are 0..k-1 in
-            # first-appearance order, so first-occurrence indexes map 1:1)
-            _, first_pos = np.unique(codes, return_index=True)
-            rep = pdf.iloc[first_pos][group_cols].reset_index(drop=True)
-            out = rep.iloc[nz // 256].reset_index(drop=True)
-            out["tok"] = (nz % 256).astype("int32")
-            out["cnt"] = hist[nz].astype("int64")
-            yield out
-
-    partial = src.mapInPandas(bincount_batches, out_schema)
-    return partial.groupBy(*group_cols, "tok") \
-        .agg(F.sum("cnt").alias("cnt"))
-
-
-def _utf8_flat(txt):
-    """Arrow StringArray -> (flat uint8 byte buffer view, int64 offsets).
-
-    For an ASCII corpus the bytes ARE the per-char ascii() tokens (non-ASCII
-    bytes count as raw bytes mod 256 — the repair_text_arrow convention)."""
-    import numpy as np
-    import pyarrow as pa
-    if isinstance(txt, pa.ChunkedArray):
-        txt = txt.combine_chunks()
-    if pa.types.is_dictionary(txt.type):
-        txt = txt.dictionary_decode()
-    off_dtype = np.int64 if pa.types.is_large_string(txt.type) else np.int32
-    offs = np.frombuffer(txt.buffers()[1], dtype=off_dtype,
-                         count=len(txt) + 1 + txt.offset)
-    offs = offs[txt.offset:].astype(np.int64)
-    data = np.frombuffer(txt.buffers()[2], dtype=np.uint8)
-    base = offs[0]
-    return data[base:offs[-1]], offs - base
-
-
-def _plain_col(b, name):
-    """RecordBatch column -> plain (non-dictionary) array, for re-emission
-    through a declared output schema."""
-    import pyarrow as pa
-    col = b.column(b.schema.get_field_index(name))
-    if isinstance(col, pa.ChunkedArray):
-        col = col.combine_chunks()
-    if pa.types.is_dictionary(col.type):
-        col = col.dictionary_decode()
-    return col
-
-
-def _bincount_partial_batch(b, group_cols, g, lengths):
-    """Shared A1b core for the fused mapInArrow feeds: bincount the uint8
-    token classes `g` (flat, `lengths` per row) per group key and return
-    the partial-histogram RecordBatch, or None when the batch is empty.
-    Same group handling as bincount_batches (factorize over a \\x1f-joined
-    key — \\x00 is unsafe in pandas' hashtable)."""
-    import numpy as np
-    import pandas as pd
-    import pyarrow as pa
-    gp = pa.RecordBatch.from_arrays(
-        [_plain_col(b, c) for c in group_cols], list(group_cols)).to_pandas()
-    keys = gp.astype(str).agg("\x1f".join, axis=1)
-    codes, uniq = pd.factorize(keys)
-    code_per_pos = np.repeat(codes, lengths)
-    hist = np.bincount(code_per_pos * 256 + g, minlength=len(uniq) * 256)
-    nz = np.flatnonzero(hist)
-    if nz.size == 0:
-        return None
-    _, first_pos = np.unique(codes, return_index=True)
-    rep_idx = pa.array(first_pos[nz // 256])
-    return pa.RecordBatch.from_arrays(
-        [_plain_col(b, c).take(rep_idx) for c in group_cols]
-        + [pa.array((nz % 256).astype("int32")),
-           pa.array(hist[nz].astype("int64"))],
-        list(group_cols) + ["tok", "cnt"])
+    return _bincount_histogram(df, group_cols or ["source"], tokens_col,
+                               _decode_list)
 
 
 def token_histogram_bincount_text(df: DataFrame,
                                   group_cols: list[str] | None = None,
                                   text_col: str = "text") -> DataFrame:
-    """A1b with tokenization FUSED into the bincount: per-char tokens are
-    the UTF-8 bytes of `text_col`, read zero-copy off the Arrow
-    StringArray's data buffer (ASCII corpus — the repair_text_arrow
-    convention; identical to ascii() per char). A non-ASCII char counts
-    as its UTF-8 bytes ('é' -> 195, 169), where ascii() gives its code
-    point (233). An empty text counts one token 0, as
-    transform(split('', ''), ascii) does; a NULL text counts nothing.
+    """A1b with tokenization FUSED into the bincount: the per-char tokens
+    of `text_col` are those of transform(split(text, ''), ascii) — the
+    code points, read zero-copy off the Arrow StringArray's bytes for an
+    ASCII batch (_decode_text). An empty text counts one token 0; a NULL
+    text counts nothing.
 
     Replaces the round-5 feed `token_histogram_bincount(split+transform)`,
     whose Catalyst stage materialized one single-char string plus one int
     per character (~15M objects at sf1) and shipped the int arrays through
     Arrow before the kernel saw a byte. Here the text column crosses once
-    and the whole batch is one np.bincount — result identical on ASCII
-    text (asserted in tests/test_histogram_paths.py)."""
-    group_cols = group_cols or ["source"]
-    src = df.select(*group_cols, text_col)
-    out_schema = ", ".join(
-        [f"{f.name} {f.dataType.simpleString()}"
-         for f in src.schema.fields if f.name != text_col]
-        + ["tok int", "cnt long"])
+    and the whole batch is one np.bincount — result identical (asserted in
+    tests/test_histogram_paths.py)."""
+    return _bincount_histogram(df, group_cols or ["source"], text_col,
+                               _decode_text)
 
-    def fn(batches):
-        import numpy as np
-        import pyarrow.compute as pc
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            tcol = b.column(b.schema.get_field_index(text_col))
-            if tcol.null_count:  # explode feed drops NULL token rows
-                b = b.filter(pc.is_valid(tcol))
-                if b.num_rows == 0:
-                    continue
-                tcol = b.column(b.schema.get_field_index(text_col))
-            g, offsets = _utf8_flat(tcol)
-            lengths = np.diff(offsets)
-            empty = lengths == 0
-            if empty.any():  # split('', '') is [''] and ascii('') is 0
-                g = np.insert(g, offsets[:-1][empty], 0)
-                lengths = np.maximum(lengths, 1)
-            out = _bincount_partial_batch(b, group_cols, g, lengths)
-            if out is not None:
-                yield out
 
-    partial = src.mapInArrow(fn, out_schema)
-    return partial.groupBy(*group_cols, "tok") \
-        .agg(F.sum("cnt").alias("cnt"))
+def _quantized(col):
+    """Float lists -> P1 token classes clip(floor(v*128+128), 0, 255) over
+    float64 — bit-identical to the Catalyst _quantize expression: *128 and
+    +128 are exact in float64."""
+    v, offsets = _decode_list(col, np.float64)
+    g = np.clip(np.floor(v * 128.0 + 128.0), 0.0, 255.0)
+    return g.astype(np.int64).astype(np.uint8), offsets
 
 
 def token_histogram_bincount_floats(df: DataFrame,
                                     group_cols: list[str] | None = None,
                                     emb_col: str = "embedding") -> DataFrame:
     """A1b with P1 quantization FUSED into the bincount: float lists are
-    read off the Arrow ListArray's values buffer and quantized in NumPy
-    (clip(floor(v*128+128), 0, 255) over float64 — bit-identical to the
-    Catalyst _quantize expression: *128 and +128 are exact in float64).
+    read off the Arrow ListArray's values buffer and quantized in NumPy.
 
     Replaces the round-5 feed `token_histogram_bincount(transform(
     _quantize))`, which built a full int array per row in Catalyst and
     shipped it through Arrow. Result identical (tests/
     test_histogram_paths.py)."""
-    group_cols = group_cols or ["label"]
-    src = df.select(*group_cols, emb_col)
-    out_schema = ", ".join(
-        [f"{f.name} {f.dataType.simpleString()}"
-         for f in src.schema.fields if f.name != emb_col]
-        + ["tok int", "cnt long"])
-
-    def fn(batches):
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            lst = b.column(b.schema.get_field_index(emb_col))
-            if lst.null_count:
-                b = b.filter(pc.is_valid(lst))
-                if b.num_rows == 0:
-                    continue
-                lst = b.column(b.schema.get_field_index(emb_col))
-            if isinstance(lst, pa.ChunkedArray):
-                lst = lst.combine_chunks()
-            offs = lst.offsets.to_numpy().astype(np.int64)
-            base = offs[0]
-            vals = lst.values.to_numpy(zero_copy_only=False)
-            v = vals[base:offs[-1]].astype(np.float64)
-            g = np.clip(np.floor(v * 128.0 + 128.0), 0.0, 255.0) \
-                .astype(np.int64).astype(np.uint8)
-            out = _bincount_partial_batch(b, group_cols, g,
-                                          np.diff(offs - base))
-            if out is not None:
-                yield out
-
-    partial = src.mapInArrow(fn, out_schema)
-    return partial.groupBy(*group_cols, "tok") \
-        .agg(F.sum("cnt").alias("cnt"))
+    return _bincount_histogram(df, group_cols or ["label"], emb_col,
+                               _quantized)
 
 
 def windowed_histogram(df: DataFrame, window_duration: str = "1 minute",

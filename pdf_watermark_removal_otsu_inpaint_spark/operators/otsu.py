@@ -4,17 +4,21 @@
 ordered by bin: expressible in any ANSI engine, so DuckDB checks it
 (SURVEY §4.3). It matches reference_kernels.otsu_threshold (ties -> smallest
 t; thresholds with an empty class excluded). Every caller runs it: q30,
-`otsu_repair` and the streaming `run_otsu_pipeline`. The threshold then
-drives the per-row repair UDF below.
+`otsu_repair` and the streaming `run_otsu_pipeline`. In `otsu_repair` the
+threshold then drives threshold_repair_batch, one mapInArrow over the
+token rows.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+
+from ..params import DEFAULT_PARAMS
+from .histogram import token_histogram
+from .repair_vectorized import (_arrow_operator, _decode_list, _encode_list,
+                                _key_cols, _validity, threshold_repair_batch)
 
 
 def otsu_sql(hist: DataFrame, group_cols: list[str]) -> DataFrame:
@@ -45,30 +49,6 @@ def otsu_sql(hist: DataFrame, group_cols: list[str]) -> DataFrame:
             .select(*group_cols, F.col("tok").alias("otsu_threshold")))
 
 
-def make_threshold_repair_udf(params=None):
-    """Repair driven by a per-row (window/source-level) Otsu threshold:
-    mask = detect_mask_threshold + run filter, then inpaint + blend."""
-    from ..params import DEFAULT_PARAMS
-    p = params or DEFAULT_PARAMS
-
-    @pandas_udf("struct<tokens:array<int>,coverage:double>")
-    def repair_thr(tokens: pd.Series, thr: pd.Series) -> pd.DataFrame:
-        # whole-batch vectorized through the span-space kernel
-        from .repair_vectorized import flatten_arrays, threshold_repair_batch
-        flat, offsets = flatten_arrays(tokens)
-        B = offsets.size - 1
-        if B == 0:
-            return pd.DataFrame({"tokens": [], "coverage": []})
-        out, cov = threshold_repair_batch(
-            np.asarray(flat, dtype=np.int32), offsets,
-            thr.to_numpy().astype(np.int64), p)
-        return pd.DataFrame({
-            "tokens": [out[offsets[i]:offsets[i + 1]] for i in range(B)],
-            "coverage": cov})
-
-    return repair_thr
-
-
 def otsu_repair_windowed(df: DataFrame, duration: str = "1 minute",
                          params=None) -> DataFrame:
     """north_star, window-keyed: per-(event-time window, source) histograms
@@ -90,19 +70,20 @@ def otsu_repair(df: DataFrame, group_cols: list[str] | None = None,
 
     Runs identically over a static table or inside a streaming micro-batch;
     the per-batch grouping mirrors the reference's per-page thresholding."""
-    from pyspark.sql import functions as F
-
-    from ..operators.histogram import token_histogram
+    p = params or DEFAULT_PARAMS
     group_cols = group_cols or ["source"]
     thr = otsu_sql(token_histogram(df, group_cols), group_cols)
     joined = df.join(F.broadcast(thr), group_cols, "left") \
         .withColumn("otsu_threshold",
                     F.coalesce(F.col("otsu_threshold"), F.lit(255)))
-    r = make_threshold_repair_udf(params)(F.col("tokens"),
-                                          F.col("otsu_threshold"))
-    keep = [c for c in ("doc_id", "seq_no", "event_ts", "source", "n_tok")
-            if c in df.columns]
-    return (joined.withColumn("_r", r)
-            .select(*keep, "otsu_threshold",
-                    F.col("_r.tokens").alias("tokens"),
-                    F.col("_r.coverage").alias("coverage")))
+
+    def kernel(b):
+        toks = b.column("tokens")
+        flat, offsets = _decode_list(toks)
+        out, cov = threshold_repair_batch(
+            flat, offsets, b.column("otsu_threshold").to_numpy(), p)
+        return [_encode_list(out, offsets, _validity(toks)), pa.array(cov)]
+
+    return _arrow_operator(joined, _key_cols(joined, ("otsu_threshold",)),
+                           ["tokens"],
+                           ["tokens array<int>", "coverage double"], kernel)

@@ -1,12 +1,15 @@
-"""Batch-vectorized repair kernels and their mapInArrow operators.
+"""Batch-vectorized token kernels, their Arrow codecs and the repair
+mapInArrow operators.
 
-The repair operators here are the engine's only Python boundary for the
-two repair kernels: `repair_sequences` (list layout) and
-`repair_sequences_arrow_packed` (packed layout) run the fused detect+repair
-K1+K2, and `apply_masks` runs K2 with a given mask. Each is one mapInArrow
-that vectorizes ACROSS rows: a micro-batch's token lists arrive as one flat
-int32 values buffer + offsets (zero-copy from Arrow's ListArray/BinaryArray
-buffers), and every stage runs as whole-batch NumPy:
+Every Python crossing of a token kernel is one mapInArrow built from the
+codecs and the operator loop here (`_arrow_operator`): the repair
+operators below (`repair_sequences`, `repair_sequences_arrow_packed`,
+`apply_masks`, `repair_text_arrow`), the detect, profiled-repair and
+packing operators of repair.py, the threshold repair of otsu.py, the
+classifier of classify.py, the A1b histograms and the dedup text kernels. Each
+vectorizes ACROSS rows: a micro-batch's token lists (or text) arrive as one
+flat values buffer + offsets (zero-copy from Arrow's ListArray, BinaryArray
+or StringArray buffers), and every stage runs as whole-batch NumPy:
 
 - per-row histograms: one bincount over (row_idx*256 + g)
 - dominant-token selection: one argsort over the (B,256) histogram matrix
@@ -29,6 +32,8 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from .. import reference_kernels as rk
 from ..params import DEFAULT_PARAMS, EngineParams
@@ -163,29 +168,19 @@ def _span_filter_runs(s, e, rows, min_run, max_run):
     return s[keep], e[keep], rows[keep]
 
 
-# Flat-mask wrappers (kept for the mask-space detection chains)
-def _open_flat(m, offsets, k, iters=1):
+def _refine_spans(m, offsets, p):
+    """refine_mask + filter_runs in span space: the raw flat mask's spans,
+    opened x1, closed x2 and run-length filtered, as (starts, ends, rows)."""
     s, e, rows = _spans_rowwise(m, offsets)
-    if s.size == 0:
-        return m.copy()
-    return _write_spans(*_span_open(s, e, rows, offsets, k, iters)[:2], m.size)
+    s, e, rows = _span_open(s, e, rows, offsets, p.kernel_size, 1)
+    s, e, rows = _span_close(s, e, rows, offsets, p.kernel_size, 2)
+    return _span_filter_runs(s, e, rows, p.min_run, p.max_run)
 
 
-def _close_flat(m, offsets, k, iters=1):
-    s, e, rows = _spans_rowwise(m, offsets)
-    if s.size == 0:
-        return m.copy()
-    return _write_spans(*_span_close(s, e, rows, offsets, k, iters)[:2],
-                        m.size)
-
-
-def _filter_runs_flat(m, offsets, min_run, max_run):
-    s, e, _ = _spans_rowwise(m, offsets)
-    if s.size == 0:
-        return m.copy()
-    ln = e - s
-    keep = (ln >= min_run) & (ln <= max_run)
-    return _write_spans(s[keep], e[keep], m.size)
+def _span_coverage(s, e, rows, lengths):
+    """Per-row masked share of disjoint spans (0.0 for an empty row)."""
+    return (np.bincount(rows, weights=e - s, minlength=lengths.size)
+            / np.maximum(lengths, 1))
 
 
 def _detect_wm_batch(g, offsets, lengths, row_idx):
@@ -256,8 +251,8 @@ def _inpaint_flat(out, m, offsets, radius_per_row):
 
 def _row_sums(m: np.ndarray, offsets: np.ndarray,
               lengths: np.ndarray) -> np.ndarray:
-    """Per-row True counts of a flat bool mask via prefix sums — exact for
-    empty rows anywhere in the batch (reduceat mis-handles idx[i]==idx[i+1]
+    """Per-row sums of a flat bool or int array via int64 prefix sums —
+    exact for empty rows anywhere in the batch (reduceat mis-handles idx[i]==idx[i+1]
     and clamping the start index steals the previous row's last element)."""
     if m.size == 0:
         return np.zeros(lengths.size, dtype=_I64)
@@ -401,11 +396,9 @@ def detect_batch(flat: np.ndarray, offsets: np.ndarray,
         if prot_rows.any() and m.any():
             tp = _text_protect_flat(g, offsets, p.text_expand)
             m &= ~(tp & np.repeat(prot_rows, lengths))
-    m = _open_flat(m, offsets, p.kernel_size, 1)
-    m = _close_flat(m, offsets, p.kernel_size, 2)
-    m = _filter_runs_flat(m, offsets, p.min_run, p.max_run)
-    cov = _row_sums(m, offsets, lengths) / np.maximum(lengths, 1)
-    return m, wm, cov
+    s, e, rows = _refine_spans(m, offsets, p)
+    return (_write_spans(s, e, g.size), wm,
+            _span_coverage(s, e, rows, lengths))
 
 
 def detect_auto_batch(flat: np.ndarray, offsets: np.ndarray,
@@ -451,11 +444,8 @@ def detect_auto_batch(flat: np.ndarray, offsets: np.ndarray,
     m &= g <= rk.BACKGROUND_THRESHOLD
     if p.protect_text and m.any():
         m &= ~_text_protect_flat(g, offsets, p.text_expand)
-    m = _open_flat(m, offsets, p.kernel_size, 1)
-    m = _close_flat(m, offsets, p.kernel_size, 2)
-    m = _filter_runs_flat(m, offsets, p.min_run, p.max_run)
-    cov = _row_sums(m, offsets, lengths) / np.maximum(lengths, 1)
-    return m, cov
+    s, e, rows = _refine_spans(m, offsets, p)
+    return _write_spans(s, e, n), _span_coverage(s, e, rows, lengths)
 
 
 def threshold_repair_batch(flat: np.ndarray, offsets: np.ndarray,
@@ -470,7 +460,6 @@ def threshold_repair_batch(flat: np.ndarray, offsets: np.ndarray,
     Returns (out_flat int32, coverage float64[B])."""
     p = params
     offsets = np.asarray(offsets, dtype=_I64)
-    B = offsets.size - 1
     lengths = np.diff(offsets)
     out = np.array(flat, dtype=np.int32, copy=True)
     g = out.astype(np.uint8)
@@ -482,13 +471,8 @@ def threshold_repair_batch(flat: np.ndarray, offsets: np.ndarray,
     m &= g <= rk.BACKGROUND_THRESHOLD
     if p.protect_text and m.any():
         m &= ~_text_protect_flat(g, offsets, p.text_expand)
-    s, e, rows = _spans_rowwise(m, offsets)
-    s, e, rows = _span_open(s, e, rows, offsets, p.kernel_size, 1)
-    s, e, rows = _span_close(s, e, rows, offsets, p.kernel_size, 2)
-    s, e, rows = _span_filter_runs(s, e, rows, p.min_run, p.max_run)
-    masked = np.zeros(B, dtype=_I64)
-    np.add.at(masked, rows, e - s)
-    cov = masked / np.maximum(lengths, 1)
+    s, e, rows = _refine_spans(m, offsets, p)
+    cov = _span_coverage(s, e, rows, lengths)
     radius = np.maximum(
         2, (p.inpaint_radius + cov * 10.0 * p.inpaint_strength).astype(_I64))
     if p.inpaint_strength >= rk.BLEND_FULL_STRENGTH or \
@@ -549,29 +533,33 @@ def flatten_arrays(series) -> tuple[np.ndarray, np.ndarray]:
 
 
 # ---------------------------------------------------------------------------
-# mapInArrow operators: the only Python boundary of the repair kernels.
-# Each operator selects just the columns it reads or passes through, decodes
-# the token column zero-copy into (flat, offsets), runs one whole-batch
-# kernel and re-encodes the result, carrying the input's null bitmap so a
-# NULL row stays NULL (its other fields are those of an empty row).
+# Arrow buffer codecs and the mapInArrow operator loop: the one Python
+# boundary of every token kernel. Each operator selects just the columns it
+# reads or passes through, decodes the token column zero-copy into
+# (flat, offsets), runs one whole-batch kernel and re-encodes the result,
+# carrying the input's null bitmap so a NULL row stays NULL (its other
+# fields are those of an empty row).
 # ---------------------------------------------------------------------------
-# Key columns the list operator passes through when present (the sink's
+# Key columns an operator passes through when present (the sink's
 # masked_tokens lineage metric needs n_tok)
 _KEEP_COLS = ("doc_id", "seq_no", "event_ts", "source", "n_tok")
+
+
+def _key_cols(df, extra=()) -> list[str]:
+    """The `_KEEP_COLS` (then `extra`) columns `df` has, in that order."""
+    return [c for c in (*_KEEP_COLS, *extra) if c in df.columns]
 
 
 def _passthrough(b, name):
     """Input column for re-emission. Parquet scans may hand mapInArrow
     dictionary-encoded strings, which Spark cannot read back through a
     plain output schema; those are decoded, everything else is reused."""
-    import pyarrow as pa
     col = b.column(name)
     return col.dictionary_decode() if pa.types.is_dictionary(col.type) else col
 
 
 def _validity(col):
     """The column's null bitmap rebased to offset 0 (None: no NULL rows)."""
-    import pyarrow.compute as pc
     return None if col.null_count == 0 else pc.is_valid(col).buffers()[1]
 
 
@@ -586,19 +574,23 @@ def _binary_offsets(col) -> np.ndarray:
         .astype(_I64)
 
 
-def _decode_list(col):
-    """ListArray<int32> -> (flat int32, offsets int64 from 0)."""
+def _decode_list(col, dtype=np.int32):
+    """ListArray -> (flat values as `dtype`, offsets int64 from 0)."""
     offsets = col.offsets.to_numpy().astype(_I64)
     flat = col.values.to_numpy(zero_copy_only=False)[offsets[0]:offsets[-1]]
-    return np.ascontiguousarray(flat, dtype=np.int32), offsets - offsets[0]
+    return np.ascontiguousarray(flat, dtype=dtype), offsets - offsets[0]
 
 
-def _encode_list(out, offsets, validity):
-    import pyarrow as pa
+def _encode_list(out, offsets, validity, value_type=pa.int32()):
     return pa.Array.from_buffers(
-        pa.list_(pa.int32()), offsets.size - 1,
+        pa.list_(value_type), offsets.size - 1,
         [validity, pa.py_buffer(offsets.astype(np.int32))],
-        children=[pa.array(out, type=pa.int32())])
+        children=[pa.array(out, type=value_type)])
+
+
+def _encode_mask(m, offsets, validity):
+    """Flat bool mask -> array<boolean> rows."""
+    return _encode_list(m, offsets, validity, pa.bool_())
 
 
 def _decode_bin(col):
@@ -613,11 +605,93 @@ def _decode_bin(col):
 
 def _encode_bin(out, offsets, validity):
     """Zero-copy out: py_buffer wraps the numpy arrays directly."""
-    import pyarrow as pa
     return pa.BinaryArray.from_buffers(
         pa.binary(), offsets.size - 1,
         [validity, pa.py_buffer((offsets * 4).astype(np.int32)),
          pa.py_buffer(out)])
+
+
+def _utf8_code_points(data, offs):
+    """UTF-8 bytes + byte offsets -> (int32 code points, char offsets),
+    one vectorised pass per continuation byte."""
+    lead = (data & 0xC0) != 0x80
+    starts = np.flatnonzero(lead)
+    b0 = data[starts].astype(np.int32)
+    n = 1 + (b0 >= 0xC0) + (b0 >= 0xE0) + (b0 >= 0xF0)   # bytes per char
+    cp = np.where(n == 1, b0, b0 & (0x7F >> n))
+    pad = np.concatenate([data, np.zeros(3, np.uint8)])
+    for k in (1, 2, 3):
+        cp = np.where(n > k, (cp << 6) | (pad[starts + k] & 0x3F), cp)
+    chars = np.zeros(data.size + 1, dtype=_I64)
+    np.cumsum(lead, out=chars[1:])
+    return cp, chars[offs]
+
+
+def _decode_text(col):
+    """StringArray -> (flat tokens, offsets): the code points that
+    transform(split(text, ''), ascii) gives, an empty text as one token 0
+    and a NULL text as no tokens. An all-ASCII batch is a zero-copy uint8
+    view of the string bytes; otherwise the bytes are decoded to int32
+    code points."""
+    if pa.types.is_dictionary(col.type):
+        col = col.dictionary_decode()
+    off_type = np.int64 if pa.types.is_large_string(col.type) else np.int32
+    offs = _buffer(col, 1, off_type)[col.offset:col.offset + len(col) + 1] \
+        .astype(_I64)
+    flat = _buffer(col, 2, np.uint8)[offs[0]:offs[-1]]
+    offs = offs - offs[0]
+    if flat.size and flat.max() >= 0x80:
+        flat, offs = _utf8_code_points(flat, offs)
+    empty = offs[1:] == offs[:-1]
+    if col.null_count:
+        empty &= pc.is_valid(col).to_numpy(zero_copy_only=False)
+    if empty.any():      # split('', '') is [''] and ascii('') is 0
+        flat = np.insert(flat, offs[:-1][empty], 0)
+        offs = offs + np.concatenate(([0], np.cumsum(empty)))
+    return flat, offs
+
+
+def _decoded(batches, name, decode):
+    """(batch, flat, offsets) per batch, with the rows whose `name` is NULL
+    dropped (as explode and UNNEST drop them) and empty batches skipped."""
+    for b in batches:
+        col = b.column(name)
+        if col.null_count:
+            b = b.filter(pc.is_valid(col))
+            col = b.column(name)
+        if b.num_rows:
+            yield (b, *decode(col))
+
+
+def _given_wm(b):
+    """The batch's `_wm_in` column as int32, -1 = self-detect (None when
+    the operator was given no wm_token)."""
+    if b.schema.get_field_index("_wm_in") < 0:
+        return None
+    return b.column("_wm_in").fill_null(-1).to_numpy()
+
+
+def _wm_array(wm):
+    return pa.array(wm, mask=wm < 0)
+
+
+def _arrow_operator(df, keep, reads, tail, kernel):
+    """One mapInArrow over `df.select(*keep, *reads)`: the `keep` columns
+    pass through and kernel(batch) returns the arrays of the appended
+    `tail` fields ("name type" strings), one row per input row."""
+    pruned = df.select(*keep, *reads)
+    fields = pruned.schema.fields[:len(keep)]
+    keep_names = [f.name for f in fields]
+    names = keep_names + [t.split()[0] for t in tail]
+    out_schema = ", ".join(
+        [f"{f.name} {f.dataType.simpleString()}" for f in fields] + tail)
+
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for b in batches:
+            yield pa.RecordBatch.from_arrays(
+                [_passthrough(b, c) for c in keep_names] + kernel(b), names)
+
+    return pruned.mapInArrow(fn, out_schema)
 
 
 def _repair_operator(df, params, keep, tok_col, tok_type, decode, encode,
@@ -626,35 +700,20 @@ def _repair_operator(df, params, keep, tok_col, tok_type, decode, encode,
     `keep` columns pass through, `tok_col` is repaired, and coverage,
     wm_token and pass_count are appended. `wm_token` (a Column, NULL =
     self-detect) gives a row's watermark token to repair_batch."""
-    import pyarrow as pa
+    reads = [tok_col] + ([] if wm_token is None
+                         else [wm_token.cast("int").alias("_wm_in")])
 
-    p = params
-    has_wm = wm_token is not None
-    pruned = df.select(*keep, tok_col, *([wm_token.cast("int").alias("_wm_in")]
-                                         if has_wm else []))
-    fields = pruned.schema.fields[:len(keep)]
-    keep_names = [f.name for f in fields]
-    names = keep_names + [tok_col, "coverage", "wm_token", "pass_count"]
-    out_schema = ", ".join(
-        [f"{f.name} {f.dataType.simpleString()}" for f in fields]
-        + [f"{tok_col} {tok_type}", "coverage double", "wm_token int",
-           "pass_count int"])
+    def kernel(b):
+        col = b.column(tok_col)
+        flat, offsets = decode(col)
+        out, cov, wm, npass = repair_batch(flat, offsets, params,
+                                           wm_in=_given_wm(b))
+        return [encode(out, offsets, _validity(col)), pa.array(cov),
+                _wm_array(wm), pa.array(npass)]
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            col = b.column(tok_col)
-            flat, offsets = decode(col)
-            wm_in = (b.column("_wm_in").fill_null(-1).to_numpy() if has_wm
-                     else None)
-            out, cov, wm_out, npass = repair_batch(flat, offsets, p,
-                                                   wm_in=wm_in)
-            yield pa.RecordBatch.from_arrays(
-                [_passthrough(b, c) for c in keep_names]
-                + [encode(out, offsets, _validity(col)), pa.array(cov),
-                   pa.array(wm_out, mask=wm_out < 0), pa.array(npass)],
-                names)
-
-    return pruned.mapInArrow(fn, out_schema)
+    return _arrow_operator(
+        df, keep, reads, [f"{tok_col} {tok_type}", "coverage double",
+                          "wm_token int", "pass_count int"], kernel)
 
 
 def repair_sequences(df, params: EngineParams = DEFAULT_PARAMS,
@@ -663,10 +722,9 @@ def repair_sequences(df, params: EngineParams = DEFAULT_PARAMS,
     (doc_id/seq_no/event_ts/source/n_tok), the repaired tokens, coverage,
     wm_token and pass_count. `wm_token` is an optional per-row int Column
     of given watermark tokens; NULL rows self-detect."""
-    return _repair_operator(df, params,
-                            [c for c in _KEEP_COLS if c in df.columns],
-                            "tokens", "array<int>", _decode_list,
-                            _encode_list, wm_token)
+    return _repair_operator(df, params, _key_cols(df), "tokens",
+                            "array<int>", _decode_list, _encode_list,
+                            wm_token)
 
 
 def repair_sequences_arrow_packed(df, params: EngineParams = DEFAULT_PARAMS):
@@ -738,67 +796,29 @@ def apply_masks(df, params: EngineParams = DEFAULT_PARAMS):
 
 
 def repair_text_arrow(df, params: EngineParams = DEFAULT_PARAMS):
-    """Fused tokenize+repair over document text: Arrow's UTF-8 StringArray
-    stores (offsets, bytes) — for an ASCII corpus the bytes buffer IS the
-    char-token array, so tokenization is a zero-copy buffer view and the
-    whole batch goes straight into repair_batch. (Non-ASCII bytes become
-    their raw byte values mod 256 — same as per-byte tokenization.)
+    """Fused tokenize+repair over document text: the text column decodes
+    straight into the char-token buffer (_decode_text; a zero-copy byte
+    view on ASCII batches) and the whole batch goes into repair_batch.
 
     Input: (doc_id, source, text); output per-doc repair stats (no token
     lists shipped back — the aggregate shape used by q40)."""
-    import pyarrow as pa
     from pyspark.sql import functions as F
 
-    p = params
+    def kernel(b):
+        flat, offsets = _decode_text(b.column("text"))
+        out, cov, wm, npass = repair_batch(flat, offsets, params)
+        lengths = np.diff(offsets)
+        # value-level evidence of the inpaint fills: per-row sum of the
+        # FINAL repaired tokens (exact int64 — order-independent), the
+        # quantity q40's unrolled 2-pass DuckDB oracle re-derives
+        return [pa.array(lengths), pa.array(cov), _wm_array(wm),
+                pa.array(npass),
+                pa.array(_row_sums(out != flat, offsets, lengths)),
+                pa.array(_row_sums(out, offsets, lengths))]
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            txt = b.column(b.schema.get_field_index("text"))
-            if isinstance(txt, pa.ChunkedArray):
-                txt = txt.combine_chunks()
-            if pa.types.is_large_string(txt.type):
-                off_dtype = np.int64
-            else:
-                off_dtype = np.int32
-            offs = np.frombuffer(txt.buffers()[1], dtype=off_dtype,
-                                 count=len(txt) + 1 + txt.offset)
-            offs = offs[txt.offset:].astype(_I64)
-            data = np.frombuffer(txt.buffers()[2], dtype=np.uint8)
-            base = offs[0]
-            offsets = offs - base
-            flat = data[base:base + offsets[-1]].astype(np.int32)
-            out, cov, wm, npass = repair_batch(flat, offsets, p)
-            changed = np.add.reduceat(
-                (out != flat).astype(np.int64),
-                offsets[:-1].clip(max=max(flat.size - 1, 0))) \
-                if flat.size else np.zeros(len(txt), dtype=np.int64)
-            # rows with zero length: reduceat duplicates — recompute safely
-            if (np.diff(offsets) == 0).any():
-                changed = np.array(
-                    [int((out[offsets[i]:offsets[i + 1]]
-                          != flat[offsets[i]:offsets[i + 1]]).sum())
-                     for i in range(len(txt))], dtype=np.int64)
-            # value-level evidence of the inpaint fills: per-row sum of the
-            # FINAL repaired tokens (exact int64 — order-independent), the
-            # quantity q40's unrolled 2-pass DuckDB oracle re-derives
-            c = np.empty(out.size + 1, dtype=np.int64)
-            c[0] = 0
-            np.cumsum(out, dtype=np.int64, out=c[1:])
-            token_sum = c[offsets[1:]] - c[offsets[:-1]]
-            yield pa.RecordBatch.from_arrays(
-                [_passthrough(b, "doc_id"), _passthrough(b, "source"),
-                 pa.array(np.diff(offsets), type=pa.int64()),
-                 pa.array(cov, type=pa.float64()),
-                 pa.array(wm, mask=wm < 0),
-                 pa.array(npass, type=pa.int32()),
-                 pa.array(changed, type=pa.int64()),
-                 pa.array(token_sum, type=pa.int64())],
-                ["doc_id", "source", "n_out", "coverage", "wm_token",
-                 "pass_count", "changed_tokens", "token_sum"])
-
-    return df.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.col("source").cast("string").alias("source"), "text").mapInArrow(
-        fn, "doc_id long, source string, n_out long, coverage double, "
-            "wm_token int, pass_count int, changed_tokens long, "
-            "token_sum long")
+    keep = [F.col("doc_id").cast("long").alias("doc_id"),
+            F.col("source").cast("string").alias("source")]
+    return _arrow_operator(
+        df, keep, ["text"],
+        ["n_out long", "coverage double", "wm_token int", "pass_count int",
+         "changed_tokens long", "token_sum long"], kernel)

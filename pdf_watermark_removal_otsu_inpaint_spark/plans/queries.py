@@ -15,7 +15,6 @@ embeddings).
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -1040,12 +1039,12 @@ def q28(spark, sf_dir):
 # Flagship: the detection pipeline on char-token arrays from real text
 # ===========================================================================
 
-def _char_tokens(spark, sf_dir):
-    """documents.text -> (doc_id, source, tokens:array<int>) via per-char
+def _char_tokens(spark, sf_dir, *cols):
+    """documents -> (doc_id, source, *cols, tokens:array<int>) via per-char
     ascii — the deterministic token table derived from driver data."""
     d = t(spark, sf_dir, "documents")
     toks = F.transform(F.split("text", ""), lambda c: F.ascii(c))
-    return d.select("doc_id", "source", toks.alias("tokens"))
+    return d.select("doc_id", "source", *cols, toks.alias("tokens"))
 
 
 @q("q29_dominant_char_token", """
@@ -1072,8 +1071,8 @@ FROM qual WHERE pick = 1
 def q29(spark, sf_dir):
     """Flagship A1+A2+A3: dominant-token detection per source over real
     char-token arrays (detect_watermark_color, watermark_detector.py:147-191,
-    generalized across a corpus). The corpus is assumed ASCII: the
-    histogram kernel counts UTF-8 bytes, the oracle ascii() code points."""
+    generalized across a corpus). The histogram kernel counts the same
+    ascii() code points as the oracle."""
     docs = _ensure_parallelism(
         t(spark, sf_dir, "documents").select("source", "text"), spark,
         min_bytes=16 << 20)
@@ -1112,8 +1111,8 @@ WHERE rn = 1
 def q30(spark, sf_dir):
     """Otsu threshold per source over char-token histograms — the pure-SQL
     window formulation (SURVEY §4.3) through the engine's otsu_sql, fed by
-    the A1b bincount histogram (same result as the explode path on the
-    assumed-ASCII corpus, ~1.7x faster at sf0.1)."""
+    the A1b bincount histogram (same result as the explode path, ~1.7x
+    faster at sf0.1)."""
     docs = _ensure_parallelism(
         t(spark, sf_dir, "documents").select("source", "text"), spark,
         min_bytes=16 << 20)
@@ -1347,8 +1346,9 @@ LEFT JOIN sums s ON s.doc_id = d.doc_id
 """)
 def q40(spark, sf_dir):
     """Full fused tokenize+detect+repair pipeline (K1+K2 MULTI-PASS) over
-    documents.text via the batch-vectorized mapInArrow kernel (the UTF-8
-    string buffer is read as the char-token array zero-copy). The DuckDB
+    documents.text via the batch-vectorized mapInArrow kernel (the text
+    decodes straight into the char-token array, zero-copy when a batch is
+    ASCII). The DuckDB
     oracle UNROLLS both kernel passes in pure SQL: pass 1 = q41's detection
     CTEs + q49's distance-weighted integer fills; pass 2 = re-detection
     over the repaired stream with the cached wm token, the k=3 inter-pass
@@ -1882,15 +1882,14 @@ def q36(spark, sf_dir):
     every position of an all-ASCII corpus (g<140 everywhere) and would blank
     the mask — automatic mode on text runs unprotected (documented)."""
     from ..functions import mask_exprs as mxx
-    from ..operators.repair import make_auto_detect_udf
+    from ..operators.repair import detect_masks_auto
     from ..params import DEFAULT_PARAMS
-    df = _char_tokens(spark, sf_dir)
-    d = make_auto_detect_udf(
-        DEFAULT_PARAMS.with_(min_run=5, protect_text=False))(F.col("tokens"))
-    return (df.withColumn("_d", d)
-            .select("doc_id", "source",
-                    F.round(F.col("_d.coverage"), 6).alias("coverage"),
-                    mxx.mask_count(F.col("_d.mask")).alias("masked_positions")))
+    out = detect_masks_auto(
+        _char_tokens(spark, sf_dir),
+        DEFAULT_PARAMS.with_(min_run=5, protect_text=False))
+    return out.select("doc_id", "source",
+                      F.round("coverage", 6).alias("coverage"),
+                      mxx.mask_count(F.col("mask")).alias("masked_positions"))
 
 
 @q("q37_profiled_repair", """
@@ -2522,12 +2521,10 @@ def q50(spark, sf_dir):
     are pinned by tests/test_engine_parity.py property tests."""
     from ..operators.repair import repair_with_marker_spans
     from ..params import DEFAULT_PARAMS
-    d = t(spark, sf_dir, "documents")
     loc = F.locate("hash", F.col("text"))
     n = F.length("text")
-    toks = F.transform(F.split("text", ""), lambda c: F.ascii(c))
-    df = d.select(
-        "doc_id", "source", toks.alias("tokens"),
+    df = _char_tokens(spark, sf_dir, "text").select(
+        "doc_id", "source", "tokens",
         F.when(loc > 0, loc - 1).alias("marker_lo"),
         F.when(loc > 0, F.least(loc - 1 + 24, n)).alias("marker_hi"))
     out = repair_with_marker_spans(df, DEFAULT_PARAMS.with_(min_run=5))
@@ -2757,7 +2754,7 @@ FROM runs WHERE ln BETWEEN 2 AND 64 GROUP BY vec_id
 """)
 def q48(spark, sf_dir):
     """Cross-paradigm oracle for the FULL detection pipeline: the Spark side
-    runs the NumPy kernel (Arrow UDF: raw mask -> background protection ->
+    runs the NumPy kernel (mapInArrow: raw mask -> background protection ->
     open x1 / close x2 morphology -> run filter); the DuckDB side is a
     pure-SQL gaps-and-islands re-implementation of the same span arithmetic.
     wm=128 lies in the text-like band, so the guard skips text protection on
@@ -2766,14 +2763,13 @@ def q48(spark, sf_dir):
     pins the kernel's mask semantics against an independent relational
     formulation."""
     from ..functions import mask_exprs as mxx
-    from ..operators.repair import make_detect_udf
+    from ..operators.repair import _detect_operator
     from ..params import DEFAULT_PARAMS
     df = _emb_tokens(spark, sf_dir)
     params = DEFAULT_PARAMS.with_(min_run=2, max_run=64)
-    d = make_detect_udf(params)(F.col("tokens"), F.lit(128))
-    return (df.withColumn("_d", d)
-            .select("vec_id",
-                    mxx.mask_count(F.col("_d.mask")).alias("masked_positions"))
+    d = _detect_operator(df, params, ["vec_id"], wm_token=F.lit(128))
+    return (d.select("vec_id",
+                     mxx.mask_count(F.col("mask")).alias("masked_positions"))
             .where(F.col("masked_positions") > 0))
 
 
@@ -2867,19 +2863,20 @@ FROM repaired GROUP BY vec_id
 """)
 def q49(spark, sf_dir):
     """Cross-paradigm oracle for the FULL single-pass repair: the Spark side
-    runs the kernel chain (detect UDF -> apply_masks K2 inpaint+blend); the
+    runs the kernel chain (detect operator -> apply_masks K2 inpaint+blend); the
     DuckDB side re-derives the mask via gaps-and-islands morphology (q48) and
     computes the distance-weighted / plateau fill values with pure integer
     SQL. Per-row token sums and position-weighted sums must match — a
     value-level relational check of the inpaint kernel on non-empty masks
     for every row."""
-    from ..operators.repair import make_detect_udf
+    from ..operators.repair import _detect_operator
     from ..operators.repair_vectorized import apply_masks
     from ..params import DEFAULT_PARAMS
     df = _emb_tokens(spark, sf_dir)
     params = DEFAULT_PARAMS.with_(min_run=2, max_run=64)
-    d = make_detect_udf(params)(F.col("tokens"), F.lit(128))
-    masked = df.select("vec_id", "tokens", d["mask"].alias("mask"))
+    masked = _detect_operator(df, params, ["vec_id", "tokens"],
+                              wm_token=F.lit(128)) \
+        .select("vec_id", "tokens", "mask")
     weighted = F.aggregate(
         F.zip_with(F.col("tokens"),
                    F.sequence(F.lit(1), F.lit(64)),

@@ -95,7 +95,8 @@ def test_lsh_bucket_filter_precedes_join(spark):
 P = 1_000_000_007
 A_VALS = (3, 5, 7, 11, 13, 17, 19, 23)
 TEXTS = [None, "", " lead", "trail ", "double  space", "one", "two words",
-         "the cat the cat the", "a b c d e", "café crème brûlée"]
+         "the cat the cat the", "a b c d e", "café crème brûlée",
+         "€uro 😀 smile 😀", "𝄞 clef"]
 
 
 def _text_docs(spark):
@@ -103,18 +104,29 @@ def _text_docs(spark):
                                  "doc_id long, text string")
 
 
-def _fold(bs):
-    """The 31-fold word hash mod P over UTF-8 bytes ('é' folds its two
-    bytes 195, 169, not the code point 233)."""
+def _fold(word):
+    """The 31-fold word hash mod P over code points, as ascii() gives them
+    ('é' folds 233, '😀' 128512)."""
     h = 0
-    for c in bs:
-        h = (h * 31 + c) % P
+    for c in word:
+        h = (h * 31 + ord(c)) % P
     return h
 
 
 def _words(text):
     """split(text, ' ') with limit -1: empty words are kept."""
-    return text.encode("utf-8").split(b" ")
+    return text.split(" ")
+
+
+def test_reference_folds_spark_ascii(spark):
+    """_fold's ord(c) is what Spark's transform(split(text, ''), ascii)
+    gives for every char of TEXTS, 2-, 3- and 4-byte UTF-8 included."""
+    from pyspark.sql import functions as F
+    toks = F.transform(F.split("text", ""), lambda c: F.ascii(c))
+    got = {r.doc_id: r.t for r in _text_docs(spark)
+           .select("doc_id", toks.alias("t")).collect()}
+    assert got == {d: None if t is None else [ord(c) for c in t] or [0]
+                   for d, t in enumerate(TEXTS)}
 
 
 def test_minhash_text_matches_reference(spark):
@@ -158,7 +170,7 @@ def test_shingle_bands_text_match_reference(spark):
         if text is None:
             continue
         w = _words(text)
-        hs = [_fold(b" ".join(w[i:i + 3])) for i in range(len(w) - 2)]
+        hs = [_fold(" ".join(w[i:i + 3])) for i in range(len(w) - 2)]
         if not hs:                               # below 3 words: no rows
             continue
         for b in range(4):
@@ -166,4 +178,4 @@ def test_shingle_bands_text_match_reference(spark):
                 min((A_VALS[k] * h + k + 1) % P for h in hs)
                 for k in (2 * b, 2 * b + 1))
     assert got == want
-    assert {d for d, _ in got} == {4, 7, 8, 9}
+    assert {d for d, _ in got} == {4, 7, 8, 9, 10}

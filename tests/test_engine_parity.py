@@ -130,11 +130,9 @@ def test_packed_path_matches_list_path(spark, seq_df, seq_rows):
     tokens, coverage, wm_token and pass_count row by row, as the
     array<int32> layout does (test_repair_token_array_equality)."""
     from pdf_watermark_removal_otsu_inpaint_spark.operators.repair import (
-        make_pack_udf)
+        pack_tokens)
     params = DEFAULT_PARAMS.with_(passes=2)
-    packed_in = seq_df.withColumn("tokens_bin",
-                                  make_pack_udf()(F.col("tokens"))) \
-                      .drop("tokens")
+    packed_in = pack_tokens(seq_df)
     got = {(r.doc_id, r.seq_no): r for r in
            repair_sequences_arrow_packed(packed_in, params).collect()}
     assert len(got) == len(seq_rows)

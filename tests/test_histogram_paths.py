@@ -1,5 +1,5 @@
 """A1 vs A1b: the explode+partial-agg histogram and the bincount-vector
-mapInPandas histogram must produce identical results — same groups, same
+mapInArrow histogram must produce identical results — same groups, same
 bins, same counts — on real tables and synthetic sequences."""
 
 from pyspark.sql import functions as F
@@ -72,9 +72,9 @@ def test_text_kernel_matches_explode_path(spark):
     """token_histogram_bincount_text == transform(split(text, ''), ascii)
     through the explode path, with NULL texts (no tokens), empty texts
     (one token 0 each — leading, consecutive and trailing), and repeated
-    spaces. Non-ASCII differs: the kernel counts UTF-8 bytes ('é' -> 195,
-    169) where ascii() gives the code point (233); q29/q30 assume an
-    ASCII corpus."""
+    spaces, and 2-, 3- and 4-byte UTF-8 characters, which count their
+    code points as ascii() does ('é' 233, '€' 8364, '😀' 128512), bucketed
+    mod 256 on both sides."""
     from pdf_watermark_removal_otsu_inpaint_spark.operators.histogram import (
         token_histogram_bincount_text)
 
@@ -96,7 +96,10 @@ def test_text_kernel_matches_explode_path(spark):
     assert a[("a", 0)] == 3 and a[("b", 0)] == 1
     assert both(["", ""]) == ({("a", 0): 1, ("b", 0): 1},) * 2
     assert both([None, None]) == ({}, {})
-    assert both(["é"]) == ({("a", 233): 1}, {("a", 195): 1, ("a", 169): 1})
+    assert both(["é"]) == ({("a", 233): 1},) * 2
+    a, b = both(["é", "a€b", "😀", "", None, "xé€😀 ", "plain"])
+    assert a == b
+    assert a[("b", 8364 % 256)] == 2 and a[("a", 128512 % 256)] == 1
 
 
 def test_float_kernel_matches_explode_path(spark):

@@ -75,11 +75,13 @@ def assert_single_arrow_map(df, inputs: list[str]) -> None:
 
 
 def test_repair_pipeline_is_shuffle_free(spark):
-    """Each repair operator is one shuffle-free MapInArrow that reads only
-    the columns it repairs or passes through: the unrelated `scenario` and
-    `text` columns never cross into Python."""
+    """Each repair and detect operator is one shuffle-free MapInArrow that
+    reads only the columns it uses or passes through: the unrelated
+    `scenario` and `text` columns never cross into Python."""
     import numpy as np
 
+    from pdf_watermark_removal_otsu_inpaint_spark.operators.repair import (
+        detect_masks, detect_masks_auto)
     from pdf_watermark_removal_otsu_inpaint_spark.operators.repair_vectorized import (  # noqa: E501
         repair_sequences, repair_sequences_arrow_packed)
     from pdf_watermark_removal_otsu_inpaint_spark.sources.sequences import (
@@ -91,6 +93,10 @@ def test_repair_pipeline_is_shuffle_free(spark):
     assert_single_arrow_map(repair_sequences(df), keys + ["tokens"])
     assert_single_arrow_map(repair_sequences(df, wm_token=F.lit(200)),
                             keys + ["tokens", "_wm_in"])
+    assert_single_arrow_map(detect_masks(df), keys + ["tokens"])
+    assert_single_arrow_map(detect_masks(df, wm_token=F.lit(200)),
+                            keys + ["tokens", "_wm_in"])
+    assert_single_arrow_map(detect_masks_auto(df), keys + ["tokens"])
     packed = spark.createDataFrame(
         [(r["doc_id"], r["seq_no"], r["source"],
           np.asarray(r["tokens"], "<i4").tobytes(), "unrelated")
@@ -108,45 +114,35 @@ def test_repair_pipeline_is_shuffle_free(spark):
                              "mask"])
 
 
-# Every pandas_udf( under operators/ and streaming/, keyed by file and
-# enclosing function, with the reason it is not (yet) a mapInArrow operator.
-# The repair kernels cross only through repair_vectorized's mapInArrow
-# operators; streaming/ has no pandas UDF of its own.
-PANDAS_UDF_ALLOWED = {
-    "operators/repair.py::make_detect_udf":
-        "detect-only stage (detect_masks, q41/q48/q49/q50): next detect step",
-    "operators/repair.py::make_pack_udf":
-        "list -> packed layout adapter for fixtures and bench inputs",
-    "operators/repair.py::make_auto_detect_udf":
-        "opt-in automatic detection mode (q36): next detect step",
-    "operators/repair.py::make_repair_profiled_udf":
-        "per-row tuned params, batched per profile (q37, --profiled)",
-    "operators/otsu.py::make_threshold_repair_udf":
-        "per-row threshold repair (otsu_repair, q38): next repair step",
-    "operators/classify.py::make_classify_udf":
-        "one first-row classification per source (J2 profiles)",
-}
-
-
-def test_pandas_udf_sites_are_allow_listed():
-    """A new pandas-UDF twin of an Arrow operator fails here: every
-    pandas_udf( site must be in PANDAS_UDF_ALLOWED, and none may sit under
-    streaming/."""
+def test_no_pandas_udf_and_one_map_in_pandas():
+    """Every token kernel crosses into Python through mapInArrow: no
+    pandas_udf( anywhere in the package, and the one mapInPandas is the
+    multimodal feature extractor, which decodes media payloads, not
+    tokens."""
     import pathlib
 
     import pdf_watermark_removal_otsu_inpaint_spark as pkg
     root = pathlib.Path(pkg.__file__).parent
-    found = set()
-    for sub in ("operators", "streaming"):
-        for path in sorted((root / sub).glob("*.py")):
-            fn = None
-            for line in path.read_text().splitlines():
-                m = re.match(r"def (\w+)", line)
-                fn = m.group(1) if m else fn
-                if "pandas_udf(" in line:
-                    found.add(f"{sub}/{path.name}::{fn}")
-    assert not [f for f in found if f.startswith("streaming/")]
-    assert found == set(PANDAS_UDF_ALLOWED)
+    udfs, maps = [], []
+    for path in sorted(root.rglob("*.py")):
+        src = path.read_text()
+        rel = path.relative_to(root).as_posix()
+        udfs += [rel] * src.count("pandas_udf(")
+        maps += [rel] * src.count("mapInPandas(")
+    assert udfs == []
+    assert maps == ["sources/multimodal.py"]
+
+
+@pytest.mark.parametrize("name", [
+    "q36_auto_detect_masks", "q37_profiled_repair", "q38_otsu_repair",
+    "q41_detect_char_masks", "q48_relational_detect_mask",
+    "q49_relational_repair", "q50_marker_merged_repair"])
+def test_kernel_queries_cross_through_map_in_arrow(spark, name):
+    """The detect, profiled, threshold and marker-span kernel queries reach
+    NumPy through MapInArrow only: no scalar pandas or Python UDF stage."""
+    p = plan_of(QUERIES[name](spark, SF_DIR))
+    assert "MapInArrow" in p, p
+    assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p, p
 
 
 # Package modules that no entry point imports, with the reason each stays.

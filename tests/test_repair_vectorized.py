@@ -281,26 +281,210 @@ def test_empty_rows_in_batch_kernels():
 
 
 def test_fused_text_path_matches_split_ascii(spark):
-    """repair_text_arrow (zero-copy UTF-8 tokenization) == the split+ascii
-    token lists through repair_sequences on the real documents table."""
+    """repair_text_arrow (tokenization fused into the Arrow decode) == the
+    split+ascii token lists through repair_sequences, per doc: length,
+    coverage, wm_token, pass_count, changed tokens and token sum. Covers
+    the real documents table plus upper-case texts whose watermark runs
+    are 2-, 3- and 4-byte UTF-8 characters ('Ű' 368, '₄' 8324, '🚀'
+    128640: text-like tokens mod 256, so no text halo keeps the run) and
+    an empty text between them."""
     from pyspark.sql import functions as F
 
-    from pdf_watermark_removal_otsu_inpaint_spark.operators.repair_vectorized import (
+    from pdf_watermark_removal_otsu_inpaint_spark.operators.repair_vectorized import (  # noqa: E501
         repair_sequences, repair_text_arrow)
-    from pdf_watermark_removal_otsu_inpaint_spark.plans.queries import (
-        _char_tokens)
     sf = "/root/testdata/sf0.001"
     params = DEFAULT_PARAMS.with_(passes=2, min_run=5)
     docs = spark.read.parquet(f"{sf}/documents.parquet") \
         .select("doc_id", "source", "text")
-    new = {r.doc_id: (round(r.coverage, 6), r.wm_token, r.pass_count)
+    extra = spark.createDataFrame(
+        [(-1, "x", "LOREM IPSUM 42 " * 20 + "Ű" * 30 + " DOLOR SIT 7" * 20),
+         (-2, "x", ""),
+         (-3, "y", "ABC 123 " * 40 + "₄" * 25),
+         (-4, "y", "🚀" * 20 + "PLAIN ASCII TEXT " * 10)],
+        "doc_id long, source string, text string")
+    docs = docs.unionByName(extra)
+    new = {r.doc_id: (r.n_out, round(r.coverage, 6), r.wm_token,
+                      r.pass_count, r.changed_tokens, r.token_sum)
            for r in repair_text_arrow(docs, params).collect()}
-    old_df = repair_sequences(
-        _char_tokens(spark, sf).withColumn("seq_no", F.lit(0).cast("long")),
-        params)
-    old = {r.doc_id: (round(r.coverage, 6), r.wm_token, r.pass_count)
-           for r in old_df.collect()}
-    assert new == old and len(new) > 0
+    toks = docs.select("doc_id", "source", F.lit(0).cast("long")
+                       .alias("seq_no"),
+                       F.transform(F.split("text", ""),
+                                   lambda c: F.ascii(c)).alias("tokens"))
+    before = {r.doc_id: np.array(r.tokens) for r in toks.collect()}
+    old = {}
+    for r in repair_sequences(toks, params).collect():
+        t = np.array(r.tokens)
+        old[r.doc_id] = (t.size, round(r.coverage, 6), r.wm_token,
+                         r.pass_count, int((t != before[r.doc_id]).sum()),
+                         int(t.sum()))
+    assert new == old and len(new) > 4
+    assert old[-2][0] == 1                         # '' is one token 0
+    assert [old[d][2] for d in (-1, -3, -4)] == [368 % 256, 8324 % 256,
+                                                 128640 % 256]
+    assert all(old[d][4] > 0 for d in (-1, -3, -4))
+
+
+def _doc_frame(spark, rows, sources=None):
+    """_seq_frame over `rows`, each row its own source s<i> when
+    `sources` is set (so per-source operators see every row)."""
+    from pyspark.sql import functions as F
+    df = _seq_frame(spark, rows).coalesce(1)
+    if sources:
+        df = df.withColumn("source", F.concat(F.lit("s"), F.col("seq_no")))
+    return df
+
+
+def _given_wm_col(wms):
+    from pyspark.sql import functions as F
+    return F.element_at(F.array(*[F.lit(w).cast("int") for w in wms]),
+                        F.col("seq_no").cast("int") + 1)
+
+
+def test_detect_masks_empty_and_tiny_rows(spark):
+    """detect_masks, self-detecting and with a given wm_token, on a NULL,
+    an empty and a 1-token row between normal rows == rk.detect_refine
+    per row; the NULL row gets a NULL mask and an empty row's fields."""
+    from pdf_watermark_removal_otsu_inpaint_spark.operators.repair import (
+        detect_masks)
+    rows = _tiny_batch()
+    params = DEFAULT_PARAMS.with_(min_run=3)
+    for wms in ([None] * len(rows), [200, 200, None, None, 200, 255]):
+        wm_col = None if wms[0] is None else _given_wm_col(wms)
+        out = detect_masks(_doc_frame(spark, rows), params, wm_col)
+        assert out.columns == ["doc_id", "seq_no", "event_ts", "source",
+                               "n_tok", "mask", "wm_token", "coverage"]
+        got = {r.doc_id: r for r in out.collect()}
+        for i, r in enumerate(rows):
+            mask, wm = rk.detect_refine(
+                np.asarray(r or [], dtype=np.int32), wms[i],
+                params.color_tolerance, params.kernel_size,
+                params.protect_text, params.text_expand, params.min_run,
+                params.max_run)
+            g = got[f"d{i}"]
+            assert g.mask == (None if r is None else mask.tolist()), i
+            assert (g.wm_token, g.coverage) == (wm, rk.coverage(mask)), i
+
+
+def test_detect_masks_auto_empty_and_tiny_rows(spark):
+    """detect_masks_auto on the same degenerate batch == rk.detect_mask_auto
+    + rk.filter_runs per row; the NULL row gets a NULL mask."""
+    from pdf_watermark_removal_otsu_inpaint_spark.operators.repair import (
+        detect_masks_auto)
+    rows = _tiny_batch()
+    params = DEFAULT_PARAMS.with_(min_run=3, protect_text=False)
+    out = detect_masks_auto(_doc_frame(spark, rows), params)
+    assert out.columns == ["doc_id", "seq_no", "event_ts", "source", "n_tok",
+                           "mask", "coverage"]
+    got = {r.doc_id: r for r in out.collect()}
+    for i, r in enumerate(rows):
+        mask = rk.filter_runs(rk.detect_mask_auto(
+            np.asarray(r or [], dtype=np.int32), params.kernel_size,
+            params.protect_text, params.text_expand),
+            params.min_run, params.max_run)
+        g = got[f"d{i}"]
+        assert g.mask == (None if r is None else mask.tolist()), i
+        assert g.coverage == rk.coverage(mask), i
+
+
+def test_otsu_repair_empty_and_tiny_rows(spark):
+    """otsu_repair on the degenerate batch, one source: the Otsu threshold
+    of the non-NULL rows drives rk.detect_mask_threshold + filter_runs +
+    inpaint per row; the NULL row stays NULL."""
+    from pdf_watermark_removal_otsu_inpaint_spark.operators.otsu import (
+        otsu_repair)
+    rows = _tiny_batch()
+    hist = sum(rk.histogram256(rk.bucket256(np.asarray(r)))
+               for r in rows if r is not None)
+    thr = rk.otsu_threshold(hist)
+    got = {r.doc_id: r for r in otsu_repair(_doc_frame(spark, rows))
+           .collect()}
+    assert len(got) == len(rows)
+    for i, r in enumerate(rows):
+        g = got[f"d{i}"]
+        assert g.otsu_threshold == thr
+        if r is None:
+            assert (g.tokens, g.coverage) == (None, 0.0)
+            continue
+        a = np.asarray(r)
+        mask = rk.filter_runs(rk.detect_mask_threshold(a, thr), 100, 5000)
+        exp = a
+        if mask.any():
+            radius = rk.dynamic_radius(rk.coverage(mask), 2, 1.0)
+            exp = rk.blend(a, rk.inpaint_1d(a, mask, radius), mask, 1.0)
+        assert g.tokens == exp.astype(np.int32).tolist(), i
+        assert g.coverage == rk.coverage(mask), i
+
+
+def _profile(r):
+    """(doc_type, confidence) the reference classifier gives a row."""
+    return rk.decide_type(rk.classify_metrics(np.asarray(r, dtype=np.int64)))
+
+
+def test_classify_sources_empty_and_tiny_rows(spark):
+    """classify_sources with every degenerate row its own source ==
+    rk.classify_metrics + rk.decide_type per row; a NULL row is not
+    classified, so its source gets no profile."""
+    from pdf_watermark_removal_otsu_inpaint_spark.operators.classify import (
+        classify_sources)
+    rows = _tiny_batch()
+    got = {r.source: (r.doc_type, r.confidence) for r in
+           classify_sources(_doc_frame(spark, rows, sources=True)).collect()}
+    assert got == {f"s{i}": _profile(r) for i, r in enumerate(rows)
+                   if r is not None}
+
+
+def test_repair_with_profiles_empty_and_tiny_rows(spark):
+    """repair_with_profiles with every degenerate row its own source: each
+    row == the reference kernel run with its own profile's parameters (a
+    NULL row has none, so it stays NULL with the base parameters' empty-row
+    fields)."""
+    from pdf_watermark_removal_otsu_inpaint_spark.operators.repair import (
+        repair_with_profiles)
+    from pdf_watermark_removal_otsu_inpaint_spark.params import (
+        PROFILE_PARAMS)
+    rows = _tiny_batch()
+    got = {r.doc_id: r for r in repair_with_profiles(
+        _doc_frame(spark, rows, sources=True)).collect()}
+    assert len(got) == len(rows)
+    for i, r in enumerate(rows):
+        g = got[f"d{i}"]
+        if r is None:
+            assert (g.doc_type, g.tokens, g.coverage, g.wm_token,
+                    g.pass_count) == (None, None, 0.0, None, 0)
+            continue
+        typ = _profile(r)[0]
+        prof = PROFILE_PARAMS[typ]
+        params = DEFAULT_PARAMS.with_(
+            color_tolerance=prof.color_tolerance,
+            kernel_size=prof.kernel_size,
+            inpaint_strength=prof.inpaint_strength, passes=prof.passes)
+        exp_t, exp_c, exp_w, exp_p = _expected([r], params)
+        assert g.doc_type == typ
+        assert g.tokens == exp_t[0].tolist(), i
+        assert (g.coverage, g.wm_token, g.pass_count) == (
+            exp_c[0], None if exp_w[0] < 0 else exp_w[0], exp_p[0]), i
+
+
+def test_pack_tokens_empty_and_tiny_rows(spark):
+    """pack_tokens keeps every other column and appends each row's
+    little-endian int32 blob; a NULL row gets a NULL blob, an empty row
+    b''. repair_sequences_arrow_packed over it == the reference kernel."""
+    from pdf_watermark_removal_otsu_inpaint_spark.operators.repair import (
+        pack_tokens)
+    from pdf_watermark_removal_otsu_inpaint_spark.operators.repair_vectorized import (  # noqa: E501
+        repair_sequences_arrow_packed)
+    rows = _tiny_batch()
+    df = _doc_frame(spark, rows)
+    packed = pack_tokens(df)
+    assert packed.columns == [c for c in df.columns if c != "tokens"] + [
+        "tokens_bin"]
+    got = {r.doc_id: r.tokens_bin for r in packed.collect()}
+    assert got == {f"d{i}": None if r is None
+                   else np.asarray(r, "<i4").tobytes()
+                   for i, r in enumerate(rows)}
+    params = DEFAULT_PARAMS.with_(passes=2)
+    _check_operator(repair_sequences_arrow_packed(packed, params), rows,
+                    params, packed=True)
 
 
 @settings(max_examples=40, deadline=None)

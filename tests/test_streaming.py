@@ -416,12 +416,11 @@ def test_exactly_once_lineage_matches_written_files(spark, tmp_path):
     went through the staging rewrite, and a batch whose empty write task
     leaves a gap in the part numbers."""
     from pdf_watermark_removal_otsu_inpaint_spark.operators.repair import (
-        make_pack_udf)
+        pack_tokens)
     from pdf_watermark_removal_otsu_inpaint_spark.operators.repair_vectorized import (  # noqa: E501
         repair_sequences_arrow_packed)
     df = _seq_cols(sequences_df(spark, 20, seed=3))
-    packed = (df.withColumn("tokens_bin", make_pack_udf()(F.col("tokens")))
-              .drop("tokens"))
+    packed = pack_tokens(df)
     repeating, _ = _repeating_batch(spark, 40, 10, seed=5, max_tok=4096)
     gapped = repair_sequences(df.where(F.spark_partition_id() != 1),
                               DEFAULT_PARAMS)
@@ -529,12 +528,11 @@ def test_exactly_once_metrics_schema(spark, tmp_path):
     the Arrow-packed kernel, and an empty micro-batch commits 0 rows with
     a readable zero-row metrics file."""
     from pdf_watermark_removal_otsu_inpaint_spark.operators.repair import (
-        make_pack_udf)
+        pack_tokens)
     from pdf_watermark_removal_otsu_inpaint_spark.operators.repair_vectorized import (  # noqa: E501
         repair_sequences_arrow_packed)
     df = _seq_cols(sequences_df(spark, 20, seed=3))
-    packed = (df.withColumn("tokens_bin", make_pack_udf()(F.col("tokens")))
-              .drop("tokens"))
+    packed = pack_tokens(df)
     cases = {"list": (repair_sequences(df, DEFAULT_PARAMS), _METRICS_FIELDS),
              "packed": (repair_sequences_arrow_packed(packed, DEFAULT_PARAMS),
                         [f for f in _METRICS_FIELDS
