@@ -1127,12 +1127,22 @@ def q30(spark, sf_dir):
 # profiled/status compositions) are exact-parity-tested in pytest instead.
 # ===========================================================================
 
-@q("q40_repair_char_tokens", """
-WITH pos AS (
+# DuckDB form of _char_tokens, one row per token: split(text, '') + ascii
+# gives the code points `v`, an empty text one token 0 and a NULL text none.
+# The kernels classify (histogram, masks) on `g` = v mod 256 and inpaint
+# with the full values.
+_CHAR_POS_SQL = """pos AS (
   SELECT doc_id, source, CAST(t.i - 1 AS BIGINT) AS p,
-         ascii(substring(text, CAST(t.i AS INT), 1)) AS g,
-         CAST(length(text) AS BIGINT) AS n
-  FROM documents, UNNEST(generate_series(1, length(text))) AS t(i)),
+         ascii(substring(text, CAST(t.i AS INT), 1)) AS v,
+         ascii(substring(text, CAST(t.i AS INT), 1)) % 256 AS g,
+         CAST(length(text) + CAST(text = '' AS INT) AS BIGINT) AS n
+  FROM documents,
+       UNNEST(generate_series(1, length(text) + CAST(text = '' AS INT)))
+         AS t(i))"""
+
+
+@q("q40_repair_char_tokens", f"""
+WITH {_CHAR_POS_SQL},
 hist AS (SELECT doc_id, g AS tok, MAX(n) AS n, COUNT(*) AS cnt
          FROM pos GROUP BY doc_id, g),
 ranked AS (  -- top-10 modes, ties toward higher token (engine spec)
@@ -1150,7 +1160,8 @@ wm AS (  -- first qualifying mode (value 100..250, coverage 1..20%)
       AND coverage_pct BETWEEN 1 AND 20) s
   WHERE pick = 1),
 -- ============================ PASS 1 =====================================
-raw1 AS (  -- |g - wm| < 30, background-protected; ASCII wm is text-like
+raw1 AS (  -- |g - wm| < 30, background-protected; no text protection,
+           -- exact while wm is text-like (100..150), as every ASCII wm is
   SELECT p.doc_id, p.p, p.n FROM pos p JOIN wm ON wm.doc_id = p.doc_id
   WHERE ABS(p.g - wm.wm_token) < 30 AND p.g <= 250),
 p1m1_sp AS (
@@ -1209,8 +1220,8 @@ rad1 AS (  -- dynamic radius: max(2, floor(2 + cov*10*strength))
   FROM cov1),
 fills1 AS (
   SELECT k.doc_id, u.p,
-    (SELECT g FROM pos WHERE pos.doc_id = k.doc_id AND pos.p = k.s - 1) AS L,
-    (SELECT g FROM pos WHERE pos.doc_id = k.doc_id AND pos.p = k.e) AS R,
+    (SELECT v FROM pos WHERE pos.doc_id = k.doc_id AND pos.p = k.s - 1) AS L,
+    (SELECT v FROM pos WHERE pos.doc_id = k.doc_id AND pos.p = k.e) AS R,
     k.s, k.e, r.radius
   FROM kept1 k
   JOIN rad1 r ON r.doc_id = k.doc_id
@@ -1228,16 +1239,16 @@ vals1 AS (  -- distance-weighted interp within radius, plateau outside
       ELSE (L + R) // 2
     END AS fill
   FROM fills1),
-rep1 AS (  -- token stream state after pass 1
-  SELECT pos.doc_id, pos.p, pos.n, COALESCE(v.fill, pos.g) AS val
-  FROM pos LEFT JOIN vals1 v ON v.doc_id = pos.doc_id AND v.p = pos.p),
+rep1 AS (  -- token stream state after pass 1 (full values)
+  SELECT pos.doc_id, pos.p, pos.n, COALESCE(f.fill, pos.v) AS val
+  FROM pos LEFT JOIN vals1 f ON f.doc_id = pos.doc_id AND f.p = pos.p),
 -- ============================ PASS 2 =====================================
 raw2 AS (  -- re-detect on the repaired stream, same cached wm per doc;
            -- only docs whose pass-1 mask was non-empty stay active
   SELECT r.doc_id, r.p, r.n FROM rep1 r
   JOIN wm ON wm.doc_id = r.doc_id
   JOIN cov1 a ON a.doc_id = r.doc_id
-  WHERE ABS(r.val - wm.wm_token) < 30 AND r.val <= 250),
+  WHERE ABS(r.val % 256 - wm.wm_token) < 30 AND r.val % 256 <= 250),
 p2m1_sp AS (
   SELECT doc_id, MAX(n) AS n, MIN(p) AS s, MAX(p)+1 AS e FROM (
     SELECT doc_id, p, n,
@@ -1331,7 +1342,9 @@ sums AS (
   SELECT doc_id, CAST(SUM(val) AS BIGINT) AS token_sum
   FROM final GROUP BY doc_id),
 act2 AS (SELECT DISTINCT doc_id FROM kept2)
-SELECT d.doc_id, d.source, CAST(length(d.text) AS BIGINT) AS n_out,
+SELECT d.doc_id, d.source,
+       CAST(COALESCE(length(d.text) + CAST(d.text = '' AS INT), 0) AS BIGINT)
+         AS n_out,
        ROUND(COALESCE(CAST(c.masked AS DOUBLE) / c.n, 0.0), 6) AS coverage,
        CAST(wm.wm_token AS INT) AS wm_token,
        CAST((CASE WHEN c.doc_id IS NULL THEN 0 ELSE 1 END)
@@ -1368,12 +1381,8 @@ def q40(spark, sf_dir):
                       "pass_count", "token_sum")
 
 
-@q("q41_detect_char_masks", """
-WITH pos AS (
-  SELECT doc_id, source, CAST(t.i - 1 AS BIGINT) AS p,
-         ascii(substring(text, CAST(t.i AS INT), 1)) AS g,
-         CAST(length(text) AS BIGINT) AS n
-  FROM documents, UNNEST(generate_series(1, length(text))) AS t(i)),
+@q("q41_detect_char_masks", f"""
+WITH {_CHAR_POS_SQL},
 hist AS (SELECT doc_id, g AS tok, MAX(n) AS n, COUNT(*) AS cnt
          FROM pos GROUP BY doc_id, g),
 ranked AS (  -- top-10 modes, ties toward higher token (engine spec)
@@ -1443,7 +1452,8 @@ agg AS (
   FROM runs WHERE ln BETWEEN 5 AND 5000 GROUP BY doc_id)
 SELECT d.doc_id, d.source, CAST(wm.wm_token AS INT) AS wm_token,
        ROUND(COALESCE(CAST(a.masked AS DOUBLE) / a.n, 0.0), 6) AS coverage,
-       CAST(COALESCE(a.masked, 0) AS INT) AS masked_positions
+       CAST(CASE WHEN d.text IS NOT NULL THEN COALESCE(a.masked, 0) END
+            AS INT) AS masked_positions
 FROM documents d
 LEFT JOIN wm ON wm.doc_id = d.doc_id
 LEFT JOIN agg a ON a.doc_id = d.doc_id
@@ -1469,11 +1479,12 @@ def q41(spark, sf_dir):
 @q("q42_doc_profiles", """
 WITH first_doc AS (
   SELECT source, MIN(doc_id) AS doc_id FROM documents GROUP BY source),
-toks AS (
+toks AS (  -- _char_tokens classes: code points mod 256, '' is one token 0
   SELECT d.source, CAST(t.i - 1 AS BIGINT) AS p,
-         ascii(substring(d.text, CAST(t.i AS INT), 1)) AS g
+         ascii(substring(d.text, CAST(t.i AS INT), 1)) % 256 AS g
   FROM documents d JOIN first_doc f ON d.doc_id = f.doc_id,
-       UNNEST(generate_series(1, length(d.text))) AS t(i)),
+       UNNEST(generate_series(1, length(d.text) + CAST(d.text = '' AS INT)))
+         AS t(i)),
 a10 AS (  -- color discreteness: distinct 8-quantized values
   SELECT source, LEAST(100.0, GREATEST(0.0,
          100.0 - COUNT(DISTINCT (g // 8) * 8) / 2.0)) AS disc
@@ -1517,11 +1528,12 @@ a13 AS (
   SELECT source, GREATEST(0.0,
          100.0 - (AVG(ABS(CAST(g - m3 AS DOUBLE))) / 255.0) * 1000.0) AS clean
   FROM med GROUP BY source),
-scored AS (
+scored AS (  -- under 3 tokens: sharp 0 and clean 100, as in the kernel
   SELECT a10.source,
-         a10.disc * 0.3 + a11.conc * 0.3 + a12.sharp * 0.2 + a13.clean * 0.2 AS e
-  FROM a10 JOIN a11 USING (source) JOIN a12 USING (source)
-  JOIN a13 USING (source)),
+         a10.disc * 0.3 + a11.conc * 0.3 + COALESCE(a12.sharp, 0.0) * 0.2
+         + COALESCE(a13.clean, 100.0) * 0.2 AS e
+  FROM a10 JOIN a11 USING (source) LEFT JOIN a12 USING (source)
+  LEFT JOIN a13 USING (source)),
 typed AS (
   SELECT source,
          CASE WHEN e > 70 AND (100.0 - e) < 30 THEN 'electronic'
@@ -1803,12 +1815,8 @@ def q35(spark, sf_dir):
                        .otherwise(0)).alias("above_local")))
 
 
-@q("q36_auto_detect_masks", """
-WITH pos AS (
-  SELECT doc_id, source, CAST(t.i - 1 AS BIGINT) AS p,
-         ascii(substring(text, CAST(t.i AS INT), 1)) AS g,
-         CAST(length(text) AS BIGINT) AS n
-  FROM documents, UNNEST(generate_series(1, length(text))) AS t(i)),
+@q("q36_auto_detect_masks", f"""
+WITH {_CHAR_POS_SQL},
 loc AS (  -- P6 adaptive local mean (block 11, shrinking window) + row mean
   SELECT doc_id, p, g, n,
          AVG(CAST(g AS DOUBLE)) OVER (PARTITION BY doc_id ORDER BY p
@@ -1869,7 +1877,8 @@ agg AS (
   FROM runs WHERE ln BETWEEN 5 AND 5000 GROUP BY doc_id)
 SELECT d.doc_id, d.source,
        ROUND(COALESCE(CAST(a.masked AS DOUBLE) / a.n, 0.0), 6) AS coverage,
-       CAST(COALESCE(a.masked, 0) AS INT) AS masked_positions
+       CAST(CASE WHEN d.text IS NOT NULL THEN COALESCE(a.masked, 0) END
+            AS INT) AS masked_positions
 FROM documents d LEFT JOIN agg a ON a.doc_id = d.doc_id
 """)
 def q36(spark, sf_dir):

@@ -57,12 +57,10 @@ def _type_class(t):
     return str(t)
 
 
-@pytest.mark.parametrize("name", sorted(ORACLES))
-def test_query_matches_oracle(spark, ddb, name):
-    sdf = QUERIES[name](spark, SF_DIR)
+def _assert_matches_oracle(sdf, con, name):
     srows = [tuple(r) for r in sdf.collect()]
     scols = sdf.columns
-    ores = ddb.execute(ORACLES[name])
+    ores = con.execute(ORACLES[name])
     ocols = [d[0] for d in ores.description]
     orows = ores.fetchall()
     assert sorted(scols) == sorted(ocols), f"{name}: column names differ"
@@ -70,7 +68,7 @@ def test_query_matches_oracle(spark, ddb, name):
     # type-sensitive hash: HUGEINT vs BIGINT is a FAIL even if values match)
     stypes = {f.name: _type_class(f.type) for f in sdf.toArrow().schema}
     otypes = {f.name: _type_class(f.type)
-              for f in ddb.execute(ORACLES[name]).fetch_arrow_table().schema}
+              for f in con.execute(ORACLES[name]).fetch_arrow_table().schema}
     bad = {c: (stypes[c], otypes[c]) for c in stypes
            if stypes[c] != otypes.get(c)}
     assert not bad, f"{name}: arrow type-class mismatch {bad}"
@@ -80,6 +78,47 @@ def test_query_matches_oracle(spark, ddb, name):
     mism = [i for i, (a, b) in enumerate(zip(sn, on)) if a != b]
     assert not mism, (f"{name}: {len(mism)} mismatched rows; first: "
                       f"{sn[mism[0]]} vs {on[mism[0]]}")
+
+
+@pytest.mark.parametrize("name", sorted(ORACLES))
+def test_query_matches_oracle(spark, ddb, name):
+    _assert_matches_oracle(QUERIES[name](spark, SF_DIR), ddb, name)
+
+
+CHAR_TOKEN_DOCS = [
+    (1, "ABC 123 " * 40 + "\u0170" * 25, "a"),     # 'Ű' 368: wm 112
+    (2, "", "a"),
+    (3, "", "b"),                                 # a source's first doc
+    (4, "LOREM IPSUM 42 " * 20 + "\u2084" * 30 + " DOLOR SIT 7" * 20, "b"),
+    (5, "\U0001F680" * 20 + "PLAIN ASCII TEXT " * 10, "c"),
+    (6, None, "c"),
+]
+
+
+@pytest.mark.parametrize("name", ["q36_auto_detect_masks",
+                                  "q40_repair_char_tokens",
+                                  "q41_detect_char_masks",
+                                  "q42_doc_profiles"])
+def test_char_token_oracle_on_non_ascii_and_empty_text(spark, tmp_path,
+                                                       name):
+    """The char-token oracles tokenize as the engine does: ascii() code
+    points, value classes mod 256 (the inpaint keeps the full values), an
+    empty text as one token 0 and a NULL text as no tokens. The test data
+    is ASCII with no empty text, so the 50/50 gate cannot see this."""
+    path = str(tmp_path / "documents.parquet")
+    (spark.createDataFrame(
+        [(i, text, "en", src, len(text or "")) for i, text, src
+         in CHAR_TOKEN_DOCS],
+        "doc_id long, text string, lang string, source string, "
+        "n_chars long")
+     .coalesce(1).write.parquet(path))
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{path}/*.parquet'")
+    try:
+        _assert_matches_oracle(QUERIES[name](spark, str(tmp_path)), con,
+                               name)
+    finally:
+        con.close()
 
 
 def test_every_registered_query_has_an_oracle():

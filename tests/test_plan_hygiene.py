@@ -154,7 +154,8 @@ REACHABILITY_ALLOWED = {
 
 def _imported_files(path, root):
     """Package module files that `path` imports anywhere in its body,
-    relative or absolute (the package's __init__ files are all empty)."""
+    relative or absolute (the package's __init__ files import no package
+    module)."""
     import ast
     out = set()
 
