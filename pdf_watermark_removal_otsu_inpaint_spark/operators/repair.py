@@ -87,7 +87,7 @@ def detect_masks_auto(df: DataFrame,
 # row (no per-element assembly), Arrow ships one buffer, and the Python
 # worker reads it zero-copy via np.frombuffer. Measured on this box, the
 # packed path roughly doubles pipeline throughput and fixes 8->32-core
-# scaling (see BENCH.md); pack_tokens converts the list view to it.
+# scaling (32 cores, BENCH_r06.json); pack_tokens converts the list view to it.
 # ---------------------------------------------------------------------------
 def pack_tokens(df: DataFrame) -> DataFrame:
     """array<int32> -> little-endian int32 blob: every column but `tokens`

@@ -86,7 +86,7 @@ def _write_spans(lo: np.ndarray, hi: np.ndarray, n: int) -> np.ndarray:
     """Span table -> flat bool mask: merge overlaps in span space (cheap
     cummax over #spans), then one bool XOR-accumulate over the flat length —
     ~5x cheaper than the int32 delta+cumsum it replaced (the cumsum was 51%
-    of whole-kernel time; BENCH.md bandwidth note)."""
+    of whole-kernel time at 32 workers, BENCH_r06.json)."""
     if lo.size == 0:
         return np.zeros(n, dtype=bool)
     keep = lo < hi
@@ -107,7 +107,8 @@ def _write_spans(lo: np.ndarray, hi: np.ndarray, n: int) -> np.ndarray:
 # Span-space morphology: the whole open/close/run-filter chain runs on the
 # (start, end, row) table — O(#spans) per op, no flat-array passes. Masks are
 # materialized only at the chain's boundaries (raw-mask compares in, optional
-# final mask out), which is where the kernel's memory traffic went (BENCH.md).
+# final mask out), which is where the kernel's memory traffic went at 32
+# workers (BENCH_r06.json).
 # ---------------------------------------------------------------------------
 def _span_merge_rowwise(lo, hi, rows):
     """Union of per-row spans, never fusing across row boundaries: merge in
@@ -272,12 +273,12 @@ def repair_batch(flat: np.ndarray, offsets: np.ndarray,
     pass_count int32[B]).
 
     Memory-traffic-minimized (the VM's DRAM bandwidth is the scaling
-    ceiling, BENCH.md): value classes live in uint8 (int32 low byte == mod
-    256), the raw mask is two uint8 range compares against per-row repeated
-    byte bounds (no int32 |g-wm| temp, no int64 row-index gathers), per-row
-    counts go through add.reduceat, and for full-strength blends the inpaint
-    scatters straight into the output buffer (no `filled` copy, no
-    np.where pass)."""
+    ceiling at 32 workers, BENCH_r06.json): value classes live in uint8
+    (int32 low byte == mod 256), the raw mask is two uint8 range compares
+    against per-row repeated byte bounds (no int32 |g-wm| temp, no int64
+    row-index gathers), per-row counts go through add.reduceat, and for
+    full-strength blends the inpaint scatters straight into the output
+    buffer (no `filled` copy, no np.where pass)."""
     p = params
     offsets = np.asarray(offsets, dtype=_I64)
     B = offsets.size - 1

@@ -1581,34 +1581,44 @@ WITH chars AS (
          CAST(length(text) AS BIGINT) AS n
   FROM documents, UNNEST(generate_series(1, length(text))) AS t(i)),
 feats AS (
-  SELECT doc_id, MAX(n) AS n, (i * 8) // n AS bucket,
-         AVG(b) AS f
-  FROM chars GROUP BY doc_id, (i * 8) // n)
-SELECT doc_id,
-       CASE WHEN doc_id % 3 = 0 THEN 'image'
-            WHEN doc_id % 3 = 1 THEN 'audio'
+  SELECT doc_id, (i * 8) // n AS bucket, AVG(b) AS f
+  FROM chars GROUP BY doc_id, (i * 8) // n),
+buckets AS (  -- every doc with a text; an empty bucket's mean is 0
+  SELECT d.doc_id, CAST(length(d.text) AS BIGINT) AS n, k.bucket,
+         COALESCE(f.f, 0.0) AS f
+  FROM documents d CROSS JOIN range(8) AS k(bucket)
+  LEFT JOIN feats f ON f.doc_id = d.doc_id AND f.bucket = k.bucket
+  WHERE d.text IS NOT NULL)
+SELECT d.doc_id,
+       CASE WHEN d.doc_id % 3 = 0 THEN 'image'
+            WHEN d.doc_id % 3 = 1 THEN 'audio'
             ELSE 'video' END AS kind,
-       MAX(n) AS byte_len,
-       CAST(CEIL(MAX(n) / 100.0) AS INT) AS frames,
-       ROUND(MAX(CASE WHEN bucket = 0 THEN f END), 6) AS f0,
-       ROUND(MAX(CASE WHEN bucket = 1 THEN f END), 6) AS f1,
-       ROUND(MAX(CASE WHEN bucket = 2 THEN f END), 6) AS f2,
-       ROUND(MAX(CASE WHEN bucket = 3 THEN f END), 6) AS f3,
-       ROUND(MAX(CASE WHEN bucket = 4 THEN f END), 6) AS f4,
-       ROUND(MAX(CASE WHEN bucket = 5 THEN f END), 6) AS f5,
-       ROUND(MAX(CASE WHEN bucket = 6 THEN f END), 6) AS f6,
-       ROUND(MAX(CASE WHEN bucket = 7 THEN f END), 6) AS f7
-FROM feats GROUP BY doc_id
+       MAX(b.n) AS byte_len,
+       CAST(CEIL(MAX(b.n) / 100.0) AS INT) AS frames,
+       ROUND(MAX(CASE WHEN b.bucket = 0 THEN b.f END), 6) AS f0,
+       ROUND(MAX(CASE WHEN b.bucket = 1 THEN b.f END), 6) AS f1,
+       ROUND(MAX(CASE WHEN b.bucket = 2 THEN b.f END), 6) AS f2,
+       ROUND(MAX(CASE WHEN b.bucket = 3 THEN b.f END), 6) AS f3,
+       ROUND(MAX(CASE WHEN b.bucket = 4 THEN b.f END), 6) AS f4,
+       ROUND(MAX(CASE WHEN b.bucket = 5 THEN b.f END), 6) AS f5,
+       ROUND(MAX(CASE WHEN b.bucket = 6 THEN b.f END), 6) AS f6,
+       ROUND(MAX(CASE WHEN b.bucket = 7 THEN b.f END), 6) AS f7
+FROM documents d LEFT JOIN buckets b ON b.doc_id = d.doc_id
+GROUP BY d.doc_id
 """)
 def q43(spark, sf_dir):
     """Multimodal plumbing: binary payload + metadata struct -> mapInPandas
     feature extraction (decode stubbed deterministically as byte-bucket
     means). The registered query projects the feature vector to scalar
     per-bucket columns so the result is canonicalizer-hashable; the DuckDB
-    oracle re-derives the same bucket means relationally (text is ASCII, so
-    char positions == utf-8 byte positions). Bucket sums are integer-valued
-    doubles (< 2^53), so means are bit-identical across engines and ROUND
-    (HALF_UP on both) agrees."""
+    oracle re-derives the same bucket means relationally. Bucket sums are
+    integer-valued doubles (< 2^53), so means are bit-identical across
+    engines and ROUND (HALF_UP on both) agrees. An empty bucket (a text
+    shorter than 8 bytes, or empty) has mean 0, and a NULL text keeps its
+    row with NULL byte_len, frames and features. Non-ASCII text is outside
+    the oracle's scope: the payload is the text's UTF-8 bytes, while the
+    oracle reads code points, so the two agree only where every character
+    is one byte."""
     from ..sources.multimodal import extract_features, to_media_df
     docs = t(spark, sf_dir, "documents")
     feat = extract_features(to_media_df(docs))
@@ -1901,14 +1911,12 @@ def q36(spark, sf_dir):
                       mxx.mask_count(F.col("mask")).alias("masked_positions"))
 
 
-@q("q37_profiled_repair", """
-WITH first_doc AS (
+@q("q37_profiled_repair", f"""
+WITH {_CHAR_POS_SQL},
+first_doc AS (
   SELECT source, MIN(doc_id) AS doc_id FROM documents GROUP BY source),
-ctoks AS (
-  SELECT d.source, CAST(t.i - 1 AS BIGINT) AS p,
-         ascii(substring(d.text, CAST(t.i AS INT), 1)) AS g
-  FROM documents d JOIN first_doc f ON d.doc_id = f.doc_id,
-       UNNEST(generate_series(1, length(d.text))) AS t(i)),
+ctoks AS (SELECT pos.source, pos.p, pos.g
+          FROM pos JOIN first_doc f ON pos.doc_id = f.doc_id),
 a10 AS (
   SELECT source, LEAST(100.0, GREATEST(0.0,
          100.0 - COUNT(DISTINCT (g // 8) * 8) / 2.0)) AS disc
@@ -1932,10 +1940,11 @@ cpeak AS (
   FROM cdark d JOIN cpk ON cpk.source = d.source AND d.g // 5 = cpk.bin
   GROUP BY d.source),
 a11 AS (  -- anchored on the documents' sources (not ctoks) so a source
-          -- whose first doc is EMPTY text still classifies: the COALESCE
-          -- defaults below mirror the kernel's empty/short-input paths
-          -- (nq=0 -> disc 100; no dark -> conc 50; n<3 -> sharp 0,
-          -- clean 100 -> e=65 -> mixed)
+          -- whose first doc has no tokens (NULL text) still classifies: the
+          -- COALESCE defaults below mirror the kernel's empty/short-input
+          -- paths (nq=0 -> disc 100; no dark -> conc 50; n<3 -> sharp 0,
+          -- clean 100 -> e=65 -> mixed). An empty text is one token 0, so
+          -- its source gets disc 99.5 from ctoks and e=64.85 -> mixed
   SELECT s.source,
          CASE WHEN COALESCE(dc.nd, 0) < 100 THEN 50.0
               ELSE GREATEST(0.0, 100.0 - COALESCE(pe.sd, 255.0) * 2.5)
@@ -1984,11 +1993,6 @@ prm AS (  -- per-source tuned params; kl/kr = erode/dilate half-kernels
     ('scanned',    32, 5, CAST(1.3 AS DOUBLE), 2),
     ('mixed',      25, 3, CAST(1.1 AS DOUBLE), 2))
     AS pd(doc_type, tol, kk, st, ps) USING (doc_type)),
-pos AS (
-  SELECT doc_id, source, CAST(t.i - 1 AS BIGINT) AS p,
-         ascii(substring(text, CAST(t.i AS INT), 1)) AS g,
-         CAST(length(text) AS BIGINT) AS n
-  FROM documents, UNNEST(generate_series(1, length(text))) AS t(i)),
 dprm AS (
   SELECT d.doc_id, d.source, p.doc_type, p.tol, p.kl, p.kr, p.st, p.ps
   FROM (SELECT DISTINCT doc_id, source FROM documents) d
@@ -2073,8 +2077,8 @@ rad1 AS (
   FROM cov1 c JOIN dprm d USING (doc_id) WHERE d.ps = 2),
 fills1 AS (
   SELECT k.doc_id, u.p,
-    (SELECT g FROM pos WHERE pos.doc_id = k.doc_id AND pos.p = k.s - 1) AS L,
-    (SELECT g FROM pos WHERE pos.doc_id = k.doc_id AND pos.p = k.e) AS R,
+    (SELECT v FROM pos WHERE pos.doc_id = k.doc_id AND pos.p = k.s - 1) AS L,
+    (SELECT v FROM pos WHERE pos.doc_id = k.doc_id AND pos.p = k.e) AS R,
     k.s, k.e, r.radius
   FROM kept1 k
   JOIN rad1 r ON r.doc_id = k.doc_id
@@ -2092,29 +2096,29 @@ vals1 AS (
       ELSE (L + R) // 2
     END AS fill
   FROM fills1),
-rep1 AS (  -- blended pass-1 state (float32 step-rounded, TRUNC toward 0 —
-           -- DuckDB FLOAT arithmetic is per-step float32, matching the
-           -- kernel's np.float32 blend exactly)
+rep1 AS (  -- blended pass-1 state over the full values (float32
+           -- step-rounded, TRUNC toward 0 — DuckDB FLOAT arithmetic is
+           -- per-step float32, matching the kernel's np.float32 blend)
   SELECT pos.doc_id, pos.p, pos.n,
     CASE
-      WHEN v.doc_id IS NULL THEN pos.g
-      WHEN d.st = 1.0 THEN COALESCE(v.fill, pos.g)
+      WHEN f.doc_id IS NULL THEN pos.v
+      WHEN d.st = 1.0 THEN COALESCE(f.fill, pos.v)
       ELSE CAST(TRUNC(
-             CAST(pos.g AS FLOAT)
+             CAST(pos.v AS FLOAT)
                * (CAST(1.0 AS FLOAT) - CAST(d.st AS FLOAT))
-             + CAST(COALESCE(v.fill, pos.g) AS FLOAT)
+             + CAST(COALESCE(f.fill, pos.v) AS FLOAT)
                * CAST(d.st AS FLOAT)) AS BIGINT)
     END AS val
   FROM pos
   JOIN dprm d ON d.doc_id = pos.doc_id AND d.ps = 2
   JOIN cov1 a ON a.doc_id = pos.doc_id
-  LEFT JOIN vals1 v ON v.doc_id = pos.doc_id AND v.p = pos.p),
+  LEFT JOIN vals1 f ON f.doc_id = pos.doc_id AND f.p = pos.p),
 -- ============================ PASS 2 (passes=2 docs) =====================
 raw2 AS (
   SELECT r.doc_id, r.p, r.n FROM rep1 r
   JOIN wm ON wm.doc_id = r.doc_id
   JOIN dprm dp ON dp.doc_id = r.doc_id
-  WHERE ABS(r.val - wm.wm_token) < dp.tol AND r.val <= 250),
+  WHERE ABS(r.val % 256 - wm.wm_token) < dp.tol AND r.val % 256 <= 250),
 p2m1_sp AS (
   SELECT doc_id, MAX(n) AS n, MIN(p) AS s, MAX(p)+1 AS e FROM (
     SELECT doc_id, p, n,
@@ -2198,16 +2202,15 @@ def q37(spark, sf_dir):
                       F.round("coverage", 6).alias("coverage"), "pass_count")
 
 
-@q("q38_otsu_repair", """
-WITH pos AS (  -- char tokens with a deterministic contamination span:
-               -- positions 10..29 carry watermark token 200 (min doc length
-               -- is 48, so every row is contaminated)
-  SELECT doc_id, source, CAST(t.i - 1 AS BIGINT) AS p,
-         CASE WHEN t.i - 1 BETWEEN 10 AND 29 THEN 200
-              ELSE ascii(substring(text, CAST(t.i AS INT), 1)) END AS g,
-         CAST(length(text) AS BIGINT) AS n
-  FROM documents, UNNEST(generate_series(1, length(text))) AS t(i)),
-hist AS (SELECT source, g AS tok, COUNT(*) AS cnt FROM pos GROUP BY 1, 2),
+@q("q38_otsu_repair", f"""
+WITH {_CHAR_POS_SQL},
+cpos AS (  -- char tokens with a deterministic contamination span:
+           -- positions 10..29 carry watermark token 200 (min doc length
+           -- is 48, so every row is contaminated)
+  SELECT doc_id, source, p, n,
+         CASE WHEN p BETWEEN 10 AND 29 THEN 200 ELSE g END AS g
+  FROM pos),
+hist AS (SELECT source, g AS tok, COUNT(*) AS cnt FROM cpos GROUP BY 1, 2),
 cum AS (
   SELECT source, tok, cnt,
          SUM(cnt) OVER (PARTITION BY source ORDER BY tok
@@ -2226,7 +2229,7 @@ thr AS (
     FROM cum WHERE w0 > 0 AND total - w0 > 0) s
   WHERE rn = 1),
 raw AS (  -- g > otsu threshold, background-protected; protect_text=False
-  SELECT p.doc_id, p.p, p.n FROM pos p JOIN thr ON thr.source = p.source
+  SELECT p.doc_id, p.p, p.n FROM cpos p JOIN thr ON thr.source = p.source
   WHERE p.g > thr.thr AND p.g <= 250),
 m1_sp AS (
   SELECT doc_id, MAX(n) AS n, MIN(p) AS s, MAX(p)+1 AS e FROM (
@@ -2277,7 +2280,7 @@ agg AS (
   FROM runs WHERE ln BETWEEN 5 AND 5000 GROUP BY doc_id)
 SELECT d.doc_id, d.source, CAST(t.thr AS INT) AS otsu_threshold,
        ROUND(COALESCE(CAST(a.masked AS DOUBLE) / a.n, 0.0), 6) AS coverage,
-       CAST(length(d.text) AS INT) AS n_out
+       CAST(length(d.text) + CAST(d.text = '' AS INT) AS INT) AS n_out
 FROM documents d
 JOIN thr t ON t.source = d.source
 LEFT JOIN agg a ON a.doc_id = d.doc_id
@@ -2428,12 +2431,8 @@ def q47(spark, sf_dir):
                 F.round(F.avg("coverage"), 6).alias("avg_coverage")))
 
 
-@q("q50_marker_merged_repair", """
-WITH pos AS (
-  SELECT doc_id, source, CAST(t.i - 1 AS BIGINT) AS p,
-         ascii(substring(text, CAST(t.i AS INT), 1)) AS g,
-         CAST(length(text) AS BIGINT) AS n
-  FROM documents, UNNEST(generate_series(1, length(text))) AS t(i)),
+@q("q50_marker_merged_repair", f"""
+WITH {_CHAR_POS_SQL},
 hist AS (SELECT doc_id, g AS tok, MAX(n) AS n, COUNT(*) AS cnt
          FROM pos GROUP BY doc_id, g),
 ranked AS (
@@ -2513,10 +2512,10 @@ counts AS (
          (SELECT COUNT(*) FROM span_pos sp WHERE sp.doc_id = d.doc_id) AS sc,
          (SELECT COUNT(*) FROM merged m WHERE m.doc_id = d.doc_id) AS mc
   FROM documents d)
-SELECT c.doc_id, d.source,
-       CAST(c.dc AS INT) AS detect_cnt,
-       CAST(c.sc AS INT) AS span_cnt,
-       CAST(c.mc AS INT) AS merged_cnt
+SELECT c.doc_id, d.source,  -- a NULL text has NULL counts (NULL mask)
+       CAST(CASE WHEN d.text IS NOT NULL THEN c.dc END AS INT) AS detect_cnt,
+       CAST(CASE WHEN d.text IS NOT NULL THEN c.sc END AS INT) AS span_cnt,
+       CAST(CASE WHEN d.text IS NOT NULL THEN c.mc END AS INT) AS merged_cnt
 FROM counts c JOIN documents d ON d.doc_id = c.doc_id
 """)
 def q50(spark, sf_dir):

@@ -92,7 +92,7 @@ def get_spark(app_name: str = "pdf-wm-token-engine", cpus: int | None = None,
         # Arrow for pandas UDFs; batches sized so per-batch buffers stay
         # cache-resident — measured on this box, 2048-row batches of wide
         # token rows anti-scale at 32 workers (large-alloc churn against the
-        # VM's memory-bandwidth ceiling), 1024 is the knee (BENCH.md)
+        # VM's memory-bandwidth ceiling), 1024 is the knee (BENCH_r06.json)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "1024")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "12g"))
@@ -103,7 +103,7 @@ def get_spark(app_name: str = "pdf-wm-token-engine", cpus: int | None = None,
                                "/tmp/spark_graft_warehouse"))
         .config("spark.sql.parquet.filterPushdown", "true")
         # CPU-dense token rows need fine input splits: 128m splits cap
-        # concurrent kernel tasks well below the core count (BENCH.md)
+        # concurrent kernel tasks well below the core count (BENCH_r06.json)
         .config("spark.sql.files.maxPartitionBytes", "32m")
     )
     for k, v in (extra_conf or {}).items():

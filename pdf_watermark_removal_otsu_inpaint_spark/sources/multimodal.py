@@ -50,11 +50,14 @@ def extract_features(media: DataFrame, n_feat: int = 8,
                      frame_stride: int = 100) -> DataFrame:
     """mapInPandas feature extraction: per-batch vectorized decode ->
     fixed-width feature vector + frame-sample count. Batch shape and schema
-    are the real contract; the decode is the deterministic fake."""
+    are the real contract; the decode is the deterministic fake. A NULL
+    payload keeps its row with a NULL feature vector and frame count."""
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            payloads = [bytes(p) for p in pdf["payload"]]
+            null = pdf["payload"].isna().to_numpy()
+            payloads = [b"" if n else bytes(p)
+                        for p, n in zip(pdf["payload"], null)]
             B = len(payloads)
             lengths = np.fromiter((len(p) for p in payloads), dtype=np.int64,
                                   count=B)
@@ -85,12 +88,13 @@ def extract_features(media: DataFrame, n_feat: int = 8,
                     su = np.bincount(idx, weights=s, minlength=n_feat)
                     ct = np.maximum(np.bincount(idx, minlength=n_feat), 1)
                     feats[i] = su / ct
-            frames = np.ceil(lengths / frame_stride).astype(np.int32)
+            frames = pd.array(np.ceil(lengths / frame_stride), dtype="Int32")
+            frames[null] = pd.NA
             yield pd.DataFrame({
                 "doc_id": pdf["doc_id"],
                 "kind": [m["kind"] for m in pdf["meta"]],
                 "byte_len": [m["byte_len"] for m in pdf["meta"]],
-                "feature": [feats[i] for i in range(B)],
+                "feature": [None if null[i] else feats[i] for i in range(B)],
                 "frames": frames,
             })
 

@@ -95,20 +95,12 @@ CHAR_TOKEN_DOCS = [
 ]
 
 
-@pytest.mark.parametrize("name", ["q36_auto_detect_masks",
-                                  "q40_repair_char_tokens",
-                                  "q41_detect_char_masks",
-                                  "q42_doc_profiles"])
-def test_char_token_oracle_on_non_ascii_and_empty_text(spark, tmp_path,
-                                                       name):
-    """The char-token oracles tokenize as the engine does: ascii() code
-    points, value classes mod 256 (the inpaint keeps the full values), an
-    empty text as one token 0 and a NULL text as no tokens. The test data
-    is ASCII with no empty text, so the 50/50 gate cannot see this."""
+def _assert_matches_oracle_on_docs(spark, tmp_path, name, docs):
+    """`name` over a documents table holding only `docs`, (doc_id, text,
+    source) triples, against its oracle over the same file."""
     path = str(tmp_path / "documents.parquet")
     (spark.createDataFrame(
-        [(i, text, "en", src, len(text or "")) for i, text, src
-         in CHAR_TOKEN_DOCS],
+        [(i, text, "en", src, len(text or "")) for i, text, src in docs],
         "doc_id long, text string, lang string, source string, "
         "n_chars long")
      .coalesce(1).write.parquet(path))
@@ -119,6 +111,32 @@ def test_char_token_oracle_on_non_ascii_and_empty_text(spark, tmp_path,
                                name)
     finally:
         con.close()
+
+
+@pytest.mark.parametrize("name", ["q36_auto_detect_masks",
+                                  "q37_profiled_repair",
+                                  "q38_otsu_repair",
+                                  "q40_repair_char_tokens",
+                                  "q41_detect_char_masks",
+                                  "q42_doc_profiles",
+                                  "q50_marker_merged_repair"])
+def test_char_token_oracle_on_non_ascii_and_empty_text(spark, tmp_path,
+                                                       name):
+    """The char-token oracles tokenize as the engine does: ascii() code
+    points, value classes mod 256 (the inpaint keeps the full values), an
+    empty text as one token 0 and a NULL text as no tokens. The test data
+    is ASCII with no empty text, so the 50/50 gate cannot see this."""
+    _assert_matches_oracle_on_docs(spark, tmp_path, name, CHAR_TOKEN_DOCS)
+
+
+def test_multimodal_features_on_null_and_empty_text(spark, tmp_path):
+    """q43 keeps a NULL text's row with NULL features (NULL in, NULL out)
+    and gives an empty or short text's empty buckets mean 0, in the engine
+    and in the oracle alike. ASCII only: the payload is UTF-8 bytes."""
+    docs = [(1, "PLAIN ASCII TEXT " * 12, "a"), (2, "", "a"),
+            (3, None, "b"), (4, "abc", "b"), (5, "watermark hash 42", "c")]
+    _assert_matches_oracle_on_docs(spark, tmp_path,
+                                   "q43_multimodal_features", docs)
 
 
 def test_every_registered_query_has_an_oracle():
