@@ -18,6 +18,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -36,18 +37,29 @@ def token_histogram(df: DataFrame, group_cols: list[str] | None = None,
     return ex.groupBy(*group_cols, "tok").agg(F.count("*").alias("cnt"))
 
 
+def _group_codes(cols) -> np.ndarray:
+    """Dense codes, 0..k-1 in first-appearance order, of the rows' group
+    key tuples: each column dictionary-encodes with NULL as its own value,
+    and the running code and the column's index re-factorize as one int64
+    (kept below rows x dictionary size)."""
+    codes = np.zeros(len(cols[0]), dtype=np.int64)
+    for col in cols:
+        enc = pc.dictionary_encode(col, null_encoding="encode")
+        idx = enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
+        codes, _ = pd.factorize(codes * len(enc.dictionary) + idx)
+    return codes
+
+
 def _bincount_partial_batch(b, group_cols, g, lengths):
     """Bincount the uint8 token classes `g` (flat, `lengths` per row) per
     group key and return the partial-histogram RecordBatch, or None when
-    the batch holds no token. Group keys factorize over a \\x1f-joined
-    string (pandas' hashtable treats \\x00 as a C string terminator, so
-    'a\\x00b' == 'a\\x00c')."""
-    gp = pa.RecordBatch.from_arrays(
-        [_passthrough(b, c) for c in group_cols], list(group_cols)).to_pandas()
-    keys = gp.astype(str).agg("\x1f".join, axis=1)
-    codes, uniq = pd.factorize(keys)
-    code_per_pos = np.repeat(codes, lengths)
-    hist = np.bincount(code_per_pos * 256 + g, minlength=len(uniq) * 256)
+    the batch holds no token."""
+    keys = [_passthrough(b, c) for c in group_cols]
+    codes = _group_codes(keys)
+    k = int(codes.max()) + 1
+    key = np.repeat(codes << 8, lengths)
+    key += g
+    hist = np.bincount(key, minlength=k * 256)
     nz = np.flatnonzero(hist)
     if nz.size == 0:
         return None
@@ -56,7 +68,7 @@ def _bincount_partial_batch(b, group_cols, g, lengths):
     _, first_pos = np.unique(codes, return_index=True)
     rep_idx = pa.array(first_pos[nz // 256])
     return pa.RecordBatch.from_arrays(
-        [_passthrough(b, c).take(rep_idx) for c in group_cols]
+        [col.take(rep_idx) for col in keys]
         + [pa.array((nz % 256).astype("int32")),
            pa.array(hist[nz].astype("int64"))],
         list(group_cols) + ["tok", "cnt"])

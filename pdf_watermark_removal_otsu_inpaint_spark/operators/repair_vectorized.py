@@ -11,7 +11,8 @@ vectorizes ACROSS rows: a micro-batch's token lists (or text) arrive as one
 flat values buffer + offsets (zero-copy from Arrow's ListArray, BinaryArray
 or StringArray buffers), and every stage runs as whole-batch NumPy:
 
-- per-row histograms: one bincount over (row_idx*256 + g)
+- per-row histograms: one bincount over the key (row << 8) + g,
+  built in place
 - dominant-token selection: one argsort over the (B,256) histogram matrix
 - masks: flat elementwise ops
 - morphology / run filtering: span-table arithmetic (start/end vectors with
@@ -19,8 +20,10 @@ or StringArray buffers), and every stage runs as whole-batch NumPy:
   space; masks are written back (span-merge + bool XOR-accumulate) only at
   chain boundaries. Runs are split at row boundaries so nothing leaks
   across rows
-- inpaint: one gather of span boundaries + one scatter over all masked
-  positions, indexed straight off the span table
+- inpaint: per span, its nearest-boundary plateau as at most three
+  np.repeat segments, then only the <= 2*radius edge positions of
+  two-sided spans interpolated; radius and blend in one helper
+  (_inpaint_blend) for every repair path
 
 Semantics are EXACTLY reference_kernels.remove_watermark_multi_pass per row
 (tests/test_repair_vectorized.py asserts token-array equality row-by-row on
@@ -184,10 +187,13 @@ def _span_coverage(s, e, rows, lengths):
             / np.maximum(lengths, 1))
 
 
-def _detect_wm_batch(g, offsets, lengths, row_idx):
-    """Vectorized detect_wm_token per row: returns int32 wm (-1 = none)."""
+def _detect_wm_batch(g, lengths):
+    """Vectorized detect_wm_token per row: returns int32 wm (-1 = none).
+    The bincount key (row << 8) + g is built in place, one pass."""
     B = lengths.size
-    hist = np.bincount(row_idx * 256 + g, minlength=B * 256).reshape(B, 256)
+    key = np.repeat(np.arange(B, dtype=_I64) << 8, lengths)
+    key += g
+    hist = np.bincount(key, minlength=B * 256).reshape(B, 256)
     order = np.argsort(hist, axis=1, kind="stable")[:, ::-1][:, :rk.TOPK_MODES]
     counts = np.take_along_axis(hist, order, axis=1)
     cov = counts * 100.0 / np.maximum(lengths, 1)[:, None]
@@ -211,43 +217,69 @@ def _text_protect_flat(g, offsets, expand):
 
 
 def _inpaint_spans(out, s, e, rows, offsets, radius_per_row):
-    """Vectorized inpaint_1d over a span table; scatters into `out`.
-    Masked positions come straight from the spans (repeat + offset arange) —
-    no flatnonzero over the flat mask, no per-position searchsorted."""
+    """inpaint_1d over a span table of non-touching spans, in place.
+
+    Every position of a span takes its nearest-boundary plateau, written
+    by one np.repeat over at most three segments per span: L x ln//2, then
+    (L+R)//2 when ln is odd, then R x ln//2; a one-sided span is one
+    segment and a span with no boundary is left alone. Only the <= 2*rad
+    edge positions of two-sided spans are then overwritten with the
+    distance-weighted (L*dr + R*dl) // (ln+1)."""
+    row_lo, row_hi = offsets[rows], offsets[rows + 1]
+    has_l, has_r = s > row_lo, e < row_hi
+    bound = has_l | has_r
+    if not bound.all():
+        s, e, rows = s[bound], e[bound], rows[bound]
+        has_l, has_r = has_l[bound], has_r[bound]
     if s.size == 0:
         return
-    row_lo, row_hi = offsets[rows], offsets[rows + 1]
-    has_l = s > row_lo
-    has_r = e < row_hi
-    L = np.where(has_l, out[np.maximum(s - 1, 0)], 0).astype(_I64)
-    R = np.where(has_r, out[np.minimum(e, out.size - 1)], 0).astype(_I64)
-
     ln = e - s
-    total = int(ln.sum())
-    if total == 0:
-        return
-    sp = np.repeat(np.arange(s.size, dtype=_I64), ln)
-    base = np.zeros(s.size, dtype=_I64)
-    np.cumsum(ln[:-1], out=base[1:])
-    P = np.arange(total, dtype=_I64) - base[sp] + s[sp]
-    dl = P - (s[sp] - 1)
-    dr = e[sp] - P
-    Lp, Rp = L[sp], R[sp]
-    hl, hr = has_l[sp], has_r[sp]
-    rad = radius_per_row[rows[sp]]
+    # boundaries gathered before any write; a missing side takes the other
+    L = out[np.where(has_l, s - 1, e)].astype(_I64)
+    R = out[np.where(has_r, e, s - 1)].astype(_I64)
+    two = has_l & has_r
+    half = np.where(two, ln // 2, ln)
+    odd = np.where(two, ln & 1, 0)
+    seg_val = np.stack([L, (L + R) // 2, R], axis=1).ravel()
+    seg_len = np.stack([half, odd, np.where(two, half, 0)], axis=1).ravel()
+    vals = np.repeat(seg_val, seg_len).astype(out.dtype)
+    # masked position = the span's start + its index within the span
+    pos = np.repeat(s - (np.cumsum(ln) - ln), ln)
+    pos += np.arange(pos.size, dtype=_I64)
+    out[pos] = vals
+    # interpolated edges: the first k_l and last k_r positions of each
+    # two-sided span, k_l + k_r = min(2*rad, ln)
+    rad = radius_per_row[rows[two]]
+    s2, ln2, L2, R2 = s[two], ln[two], L[two], R[two]
+    k_l = np.minimum(rad, ln2)
+    k_r = np.minimum(rad, ln2 - k_l)
+    ne = k_l + k_r
+    sp = np.repeat(np.arange(s2.size, dtype=_I64), ne)
+    j = np.arange(sp.size, dtype=_I64) - (np.cumsum(ne) - ne)[sp]
+    # distance from the left boundary; the right edge skips the middle
+    dl = j + 1 + np.where(j >= k_l[sp], (ln2 - ne)[sp], 0)
+    n1 = ln2[sp] + 1
+    out[s2[sp] + dl - 1] = ((L2[sp] * (n1 - dl) + R2[sp] * dl) // n1) \
+        .astype(out.dtype)
 
-    interp = (Lp * dr + Rp * dl) // (dl + dr)
-    nearest = np.where(dl < dr, Lp, np.where(dr < dl, Rp, (Lp + Rp) // 2))
-    two = np.where(np.minimum(dl, dr) <= rad, interp, nearest)
-    v = np.where(hl & hr, two,
-                 np.where(hl, Lp, np.where(hr, Rp, out[P].astype(_I64))))
-    out[P] = v.astype(out.dtype)
 
-
-def _inpaint_flat(out, m, offsets, radius_per_row):
-    """Mask-input wrapper around _inpaint_spans (apply_mask_batch path)."""
-    s, e, rows = _spans_rowwise(m, offsets)
-    _inpaint_spans(out, s, e, rows, offsets, radius_per_row)
+def _inpaint_blend(out, s, e, rows, offsets, cov, p):
+    """K2 over a span table: inpaint_1d at each row's dynamic_radius, then
+    the strength blend. Returns the repaired buffer; at full strength that
+    is `out` itself, filled in place (boundaries are unmasked positions)."""
+    radius = np.maximum(
+        2, (p.inpaint_radius + cov * 10.0 * p.inpaint_strength).astype(_I64))
+    if p.inpaint_strength >= rk.BLEND_FULL_STRENGTH or \
+       p.inpaint_strength == 1.0:
+        _inpaint_spans(out, s, e, rows, offsets, radius)
+        return out
+    filled = out.copy()
+    _inpaint_spans(filled, s, e, rows, offsets, radius)
+    bf = _write_spans(s, e, out.size).astype(np.float32) \
+        * np.float32(p.inpaint_strength)
+    res = (out.astype(np.float32) * (np.float32(1.0) - bf)
+           + filled.astype(np.float32) * bf)
+    return res.astype(np.int32)
 
 
 def _row_sums(m: np.ndarray, offsets: np.ndarray,
@@ -276,9 +308,9 @@ def repair_batch(flat: np.ndarray, offsets: np.ndarray,
     ceiling at 32 workers, BENCH_r06.json): value classes live in uint8
     (int32 low byte == mod 256), the raw mask is two uint8 range compares
     against per-row repeated byte bounds (no int32 |g-wm| temp, no int64
-    row-index gathers), per-row counts go through add.reduceat, and for
-    full-strength blends the inpaint scatters straight into the output
-    buffer (no `filled` copy, no np.where pass)."""
+    row-index gathers), per-row masked counts are one bincount over the
+    span table, and for full-strength blends the inpaint scatters straight
+    into the output buffer (no `filled` copy, no np.where pass)."""
     p = params
     offsets = np.asarray(offsets, dtype=_I64)
     B = offsets.size - 1
@@ -289,8 +321,6 @@ def repair_batch(flat: np.ndarray, offsets: np.ndarray,
     first_cov = np.zeros(B)
     n_passes = np.zeros(B, dtype=np.int32)
     active = np.ones(B, dtype=bool)
-    full_strength = (p.inpaint_strength >= rk.BLEND_FULL_STRENGTH
-                     or p.inpaint_strength == 1.0)
 
     for pass_num in range(p.passes):
         if not active.any():
@@ -298,9 +328,7 @@ def repair_batch(flat: np.ndarray, offsets: np.ndarray,
         g = out.astype(np.uint8)  # low byte == np.mod(out, 256)
         need = wm < 0
         if need.any():
-            row_idx = np.repeat(np.arange(B, dtype=_I64), lengths)
-            det = _detect_wm_batch(g, offsets, lengths, row_idx)
-            wm = np.where(need, det, wm)
+            wm = np.where(need, _detect_wm_batch(g, lengths), wm)
         # raw mask: |g - wm| < tol as a uint8 interval test; rows with no wm
         # (or already converged) get an empty interval (lo=1 > hi=0)
         valid = active & (wm >= 0)
@@ -323,9 +351,7 @@ def repair_batch(flat: np.ndarray, offsets: np.ndarray,
         s, e, rows = _span_close(s, e, rows, offsets, p.kernel_size, 2)
         s, e, rows = _span_filter_runs(s, e, rows, p.min_run, p.max_run)
 
-        masked_per_row = np.zeros(B, dtype=_I64)
-        np.add.at(masked_per_row, rows, e - s)
-        active &= masked_per_row > 0
+        active &= _span_coverage(s, e, rows, lengths) > 0
         if not active.any():
             break
         keep = active[rows]
@@ -334,30 +360,11 @@ def repair_batch(flat: np.ndarray, offsets: np.ndarray,
         if pass_num > 0:
             s, e, rows = _span_dilate(s, e, rows, offsets,
                                       rk.MULTIPASS_DILATE_KERNEL, 1)
-            masked_per_row = np.zeros(B, dtype=_I64)
-            np.add.at(masked_per_row, rows, e - s)
-        else:
-            masked_per_row = np.where(active, masked_per_row, 0)
-        cov = masked_per_row / np.maximum(lengths, 1)
+        cov = _span_coverage(s, e, rows, lengths)
         if pass_num == 0:
-            first_cov = np.where(active, cov, 0.0)
+            first_cov = cov
         n_passes += active.astype(np.int32)
-        radius = np.maximum(
-            2, (p.inpaint_radius + cov * 10.0 * p.inpaint_strength)
-            .astype(_I64))
-        if full_strength:
-            # result == filled on mask, orig elsewhere: scatter in place
-            # (inpaint reads boundaries from UNMASKED positions and the
-            # whole-row-masked fallback gathers before the scatter)
-            _inpaint_spans(out, s, e, rows, offsets, radius)
-        else:
-            mfin = _write_spans(s, e, out.size)
-            filled = out.copy()
-            _inpaint_spans(filled, s, e, rows, offsets, radius)
-            bf = mfin.astype(np.float32) * np.float32(p.inpaint_strength)
-            res = (out.astype(np.float32) * (np.float32(1.0) - bf)
-                   + filled.astype(np.float32) * bf)
-            out = res.astype(np.int32)
+        out = _inpaint_blend(out, s, e, rows, offsets, cov, p)
     return out, first_cov, wm, n_passes
 
 
@@ -381,9 +388,7 @@ def detect_batch(flat: np.ndarray, offsets: np.ndarray,
           else np.asarray(wm_in, dtype=np.int32).copy())
     need = wm < 0
     if need.any():
-        row_idx = np.repeat(np.arange(B, dtype=_I64), lengths)
-        det = _detect_wm_batch(g, offsets, lengths, row_idx)
-        wm = np.where(need, det, wm)
+        wm = np.where(need, _detect_wm_batch(g, lengths), wm)
     # uint8 interval test with per-row repeated byte bounds (as repair_batch)
     valid = wm >= 0
     lo_b = np.where(valid, np.clip(wm - (p.color_tolerance - 1), 0, 255),
@@ -474,20 +479,7 @@ def threshold_repair_batch(flat: np.ndarray, offsets: np.ndarray,
         m &= ~_text_protect_flat(g, offsets, p.text_expand)
     s, e, rows = _refine_spans(m, offsets, p)
     cov = _span_coverage(s, e, rows, lengths)
-    radius = np.maximum(
-        2, (p.inpaint_radius + cov * 10.0 * p.inpaint_strength).astype(_I64))
-    if p.inpaint_strength >= rk.BLEND_FULL_STRENGTH or \
-       p.inpaint_strength == 1.0:
-        _inpaint_spans(out, s, e, rows, offsets, radius)
-    else:
-        mfin = _write_spans(s, e, out.size)
-        filled = out.copy()
-        _inpaint_spans(filled, s, e, rows, offsets, radius)
-        bf = mfin.astype(np.float32) * np.float32(p.inpaint_strength)
-        res = (out.astype(np.float32) * (np.float32(1.0) - bf)
-               + filled.astype(np.float32) * bf)
-        out = res.astype(np.int32)
-    return out, cov
+    return _inpaint_blend(out, s, e, rows, offsets, cov, p), cov
 
 
 def apply_mask_batch(flat: np.ndarray, mask_flat: np.ndarray,
@@ -504,19 +496,9 @@ def apply_mask_batch(flat: np.ndarray, mask_flat: np.ndarray,
     m = np.asarray(mask_flat, dtype=bool)
     if not m.any():
         return out
-    cov = _row_sums(m, offsets, lengths) / np.maximum(lengths, 1)
-    radius = np.maximum(
-        2, (p.inpaint_radius + cov * 10.0 * p.inpaint_strength).astype(_I64))
-    if p.inpaint_strength >= rk.BLEND_FULL_STRENGTH or p.inpaint_strength == 1.0:
-        # in-place scatter (boundaries read from unmasked positions)
-        _inpaint_flat(out, m, offsets, radius)
-        return out
-    filled = out.copy()
-    _inpaint_flat(filled, m, offsets, radius)
-    bf = m.astype(np.float32) * np.float32(p.inpaint_strength)
-    res = (out.astype(np.float32) * (np.float32(1.0) - bf)
-           + filled.astype(np.float32) * bf)
-    return res.astype(np.int32)
+    s, e, rows = _spans_rowwise(m, offsets)
+    return _inpaint_blend(out, s, e, rows, offsets,
+                          _span_coverage(s, e, rows, lengths), p)
 
 
 def flatten_arrays(series) -> tuple[np.ndarray, np.ndarray]:

@@ -191,15 +191,9 @@ def detect_source_batch(pdf: pd.DataFrame, cache: DocCache,
         # per-row detection only over the rows of UNCACHED docs
         row_mask = ~row_cached
         sub_rows = np.flatnonzero(row_mask)
-        sub_lengths = lengths[sub_rows]
-        sub_offsets = np.zeros(sub_rows.size + 1, dtype=np.int64)
-        np.cumsum(sub_lengths, out=sub_offsets[1:])
         sub_flat = flat[np.repeat(row_mask, lengths)]
-        sub_row_idx = np.repeat(np.arange(sub_rows.size, dtype=np.int64),
-                                sub_lengths)
         det[sub_rows] = _detect_wm_batch(sub_flat.astype(np.uint8),
-                                         sub_offsets, sub_lengths,
-                                         sub_row_idx)
+                                         lengths[sub_rows])
 
     wm_used = det.copy()
     froms = np.zeros(B, dtype=bool)

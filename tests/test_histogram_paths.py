@@ -121,3 +121,28 @@ def test_float_kernel_matches_explode_path(spark):
     assert a == b == {("x", 128): 1, ("x", 0): 1, ("x", 255): 1,
                       ("x", 192): 1, ("x", 127): 1, ("y", 255): 2,
                       ("y", 0): 1, ("y", 160): 3}
+
+
+def test_bincount_group_keys_keep_null_and_separator_apart(spark):
+    """Group keys within one Arrow batch stay distinct: a NULL source and
+    the string 'None', the pairs ('a\\x1fb', 'c') and ('a', 'b\\x1fc'), and
+    'a\\x00b' and 'a\\x00c', are separate groups on the bincount paths, as
+    on the explode path."""
+    from pdf_watermark_removal_otsu_inpaint_spark.operators.histogram import (
+        token_histogram_bincount_text)
+    rows = [(None, "c", "aa"), ("None", "c", "b"), ("x", "c", "cc"),
+            ("a\x1fb", "c", "d"), ("a", "b\x1fc", "ee"),
+            ("a\x00b", "c", "f"), ("a\x00c", "c", "g")]
+    df = spark.createDataFrame(rows, "source string, part string, "
+                                     "text string").coalesce(1)
+    toks = F.transform(F.split("text", ""), lambda c: F.ascii(c))
+    ex = df.select("source", "part", toks.alias("tokens"))
+    for keys in (["source"], ["source", "part"]):
+        a = _as_dict(token_histogram(ex, keys).collect(), keys)
+        b = _as_dict(token_histogram_bincount_text(df, keys).collect(), keys)
+        c = _as_dict(token_histogram_bincount(ex, keys).collect(), keys)
+        assert a == b == c
+    assert a[(None, "c", ord("a"))] == 2 and a[("None", "c", ord("b"))] == 1
+    assert a[("a\x1fb", "c", ord("d"))] == 1
+    assert a[("a", "b\x1fc", ord("e"))] == 2
+    assert a[("a\x00b", "c", ord("f"))] == a[("a\x00c", "c", ord("g"))] == 1
