@@ -243,11 +243,18 @@ def histograms(spark, lst: str) -> dict:
     return out
 
 
+def classes_compiled(spark) -> int:
+    """Classes Spark's code generator has compiled in this JVM so far."""
+    return (spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+            .METRIC_COMPILATION_TIME().getCount())
+
+
 def headline(b: Bench, spark) -> dict:
     """perfbench's headline_sql workload over the tables at SF_DIR: two
     warm rounds (the first fetches the rows), ROUNDS timed rounds, then
     every query against its DuckDB oracle and q40 against
-    reference_kernels."""
+    reference_kernels. Records how many classes Spark compiled in each
+    timed round (0 once the codegen cache holds the round)."""
     class SfHeadline(workloads.HeadlineSql):
         def prepare(self, run):
             self.dir = SF_DIR
@@ -256,7 +263,11 @@ def headline(b: Bench, spark) -> dict:
     wl = SfHeadline()
     wl.prepare(run)
     wl.warm(run, spark)
-    reps = [wl.repeat(run, spark, run.tracer) for _ in range(ROUNDS)]
+    reps, compiles = [], []
+    for _ in range(ROUNDS):
+        before = classes_compiled(spark)
+        reps.append(wl.repeat(run, spark, run.tracer))
+        compiles.append(classes_compiled(spark) - before)
     wl.final_check(run)
     metrics = b.settle(run)
     _, _, per_query = wl.e2e(reps)
@@ -268,6 +279,7 @@ def headline(b: Bench, spark) -> dict:
         "query_trials": {n: [round(r.walls[n], 3) for r in reps]
                          for n in workloads.HEADLINE},
         "headline_noise": [r.noise for r in reps],
+        "headline_compiles": compiles,
         "headline_protocol": (
             f"local[{b.cpus}], 2 warm rounds, {ROUNDS} interleaved rounds, "
             "median per query; spread = IQR / median; every query's rows "
@@ -482,7 +494,10 @@ def bench_md(r: dict) -> str:
         "host's CPU steal and load (BENCH_FULL.json). Inputs are perfbench's "
         f"seeded tables (seed {SEED}) cached under `.perfbench_work/`.",
         "",
-        f"## Headline: {g('value')} s (sum of 12 medians at sf {g('sf')})",
+        f"## Headline: {g('value')} s (sum of 12 medians at sf {g('sf')}"
+        + ("" if g("headline_compiles") is None else
+           f"; classes compiled per timed round: {g('headline_compiles')}")
+        + ")",
         "",
         f"{g('headline_protocol')}. Oracle mismatches: "
         f"{g('oracle_mismatches')}.",

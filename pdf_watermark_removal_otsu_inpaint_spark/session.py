@@ -1,9 +1,10 @@
 """SparkSession factory with scale-oriented defaults.
 
 Single place for the knobs that matter at 100 TB (AQE, skew-join split,
-Arrow batching, shuffle parallelism) so tests, bench, and the driver all run
-the same configuration. Local mode here; on a real cluster the same builder
-is driven by spark-submit --py-files (north_rule).
+Arrow batching, shuffle parallelism, the size of the generated-code cache)
+so tests, bench, and the driver all run the same configuration. Local mode
+here; on a real cluster the same builder is driven by spark-submit
+--py-files (north_rule).
 """
 
 from __future__ import annotations
@@ -77,7 +78,8 @@ def get_spark(app_name: str = "pdf-wm-token-engine", cpus: int | None = None,
         os.environ["PYTHONPATH"] = repo_root + (os.pathsep + cur if cur else "")
     _ensure_protobuf_shim()
 
-    cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS",
+                                      len(os.sched_getaffinity(0))))
     shuffle_partitions = shuffle_partitions or max(cpus, 8)
     b = (
         SparkSession.builder.appName(app_name)
@@ -105,6 +107,15 @@ def get_spark(app_name: str = "pdf-wm-token-engine", cpus: int | None = None,
         # CPU-dense token rows need fine input splits: 128m splits cap
         # concurrent kernel tasks well below the core count (BENCH_r06.json)
         .config("spark.sql.files.maxPartitionBytes", "32m")
+        # Compiled whole-stage and projection classes live in an LRU cache
+        # of 100 entries by default. One round of the 12 headline queries
+        # generates 156 distinct classes, and the 50 registered queries
+        # about 440 at sf0.001 and sf0.01, so at 100 every round evicted
+        # what the next one needed and recompiled about 150 classes. 1024
+        # is about twice the 50-query set. A static conf: it is read once,
+        # when the JVM first builds its CodeGenerator cache, so it must be
+        # set here, before the first session of the process exists.
+        .config("spark.sql.codegen.cache.maxEntries", "1024")
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

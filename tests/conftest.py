@@ -10,7 +10,6 @@ from pdf_watermark_removal_otsu_inpaint_spark.session import get_spark  # noqa: 
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("engine-tests", cpus=int(os.environ.get("TEST_CPUS", "8")),
-                  shuffle_partitions=8)
+    s = get_spark("engine-tests", shuffle_partitions=8)
     yield s
     s.stop()

@@ -34,3 +34,8 @@ def test_bench_md_renders_a_partial_result():
     md = bench.bench_md(_fake_result())
     assert md.startswith("# BENCH") and "[1, 2] slots" in md
     assert all(n in md for n in workloads.HEADLINE)
+    assert "(sum of 12 medians at sf 0.1)" in md    # no headline_compiles
+    md = bench.bench_md({**_fake_result(),
+                         "headline_compiles": [0] * bench.ROUNDS})
+    assert ("(sum of 12 medians at sf 0.1; classes compiled per timed "
+            "round: [0, 0, 0, 0, 0])") in md
